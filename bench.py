@@ -163,12 +163,11 @@ def main() -> None:
         spark.catalog.clearCache()
         _timed_pass()
     inf = float("inf")
+    # min() keeps the first of equal keys: a tie on steal goes to the
+    # earlier pass, never to whichever pass happened to total lower
     kept = min(
         range(len(passes)),
-        key=lambda i: (
-            passes[i]["steal_delta"] if passes[i]["steal_delta"] is not None else inf,
-            passes[i]["value"],
-        ),
+        key=lambda i: passes[i]["steal_delta"] if passes[i]["steal_delta"] is not None else inf,
     )
     timings, builds, colds = results[kept]
     load_before, load_after = passes[kept]["before"], passes[kept]["after"]

@@ -16,6 +16,7 @@ less — an unbounded cache registry on a shared cluster is a slow OOM.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 _SCOPED: dict[str, DataFrame] = {}
@@ -30,11 +31,15 @@ def scoped_persist(df: DataFrame, scope: str) -> DataFrame:
     benchmark warm runs); evicting a cache only to rebuild the identical
     one would throw that warm state away. Non-blocking unpersist: in-flight
     jobs that still reference the old cache recompute missing blocks
-    instead of failing."""
+    instead of failing. A handle whose cache was dropped behind its back
+    (``spark.catalog.clearCache()``) still matches semantically but has
+    storage level NONE, so it is persisted again."""
     prev = _SCOPED.get(scope)
     if prev is not None:
         try:
             if prev.sparkSession is df.sparkSession and prev.sameSemantics(df):
+                if prev.storageLevel == StorageLevel.NONE:
+                    prev.persist()
                 return prev
             prev.unpersist(blocking=False)
         except Exception:

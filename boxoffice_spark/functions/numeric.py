@@ -68,22 +68,6 @@ def davg_sql(expr: str, scale: int = 6) -> str:
 #     are only safe on value-preserving inputs (money already at scale).
 
 
-def dec6(col: Column) -> Column:
-    """DEPRECATED (driver-refuted, 0-for-6 in CORRECTNESS_r08 and
-    re-confirmed by the r09 canary c9_int8_decimal_cells, red on the
-    verbatim construct while the converted real query greened): casting a
-    full-mantissa double to DECIMAL(27,6) is double->decimal-grid rounding,
-    which varies across engine builds. Kept (with its local parity test)
-    only as the documented counter-example; never use in new cells — emit
-    the raw double or use :func:`ratio6` / :func:`units_div`."""
-    return col.cast("decimal(27,6)")
-
-
-def dec6_sql(expr: str) -> str:
-    """DuckDB twin of :func:`dec6` (same deprecation applies)."""
-    return f"CAST(({expr}) AS DECIMAL(27,6))"
-
-
 def ratio6(num: str, den: str) -> Column:
     """Final-cell rounding for INTEGER-RATIO cells (rates, p-values), where
     exact 6dp grid midpoints ARE reachable (denominator 2^7*5^m) and a

@@ -138,11 +138,9 @@ def entity_resolution(
     3. candidate pairs via self-join within block, ``levenshtein() <=
        max_dist`` (JVM expression, codegen);
     4. clusters = connected components over the pair graph
-       (operators/graph.py large/small-star variant — handles chains like
-       cold->old->red that pairwise thresholds alone would split, and
-       converges in O(log² n) rounds instead of O(diameter): edit-distance
-       name chains are exactly the deep path graphs that exhausted the
-       min-label round budget at sf1);
+       (operators/graph.py large-star/small-star — handles chains like
+       cold->old->red that pairwise thresholds alone would split, in
+       O(log² n) rounds whatever the chain's depth);
     5. records join back on the name: entity = cluster label, singleton
        names canonicalize to themselves.
 
@@ -157,7 +155,7 @@ def entity_resolution(
     j_entity_resolution passes None). Components run on the pair graph
     only (|pairs| rows, not |records|).
     """
-    from boxoffice_spark.operators.graph import connected_components_star
+    from boxoffice_spark.operators.graph import connected_components
 
     names = records.select(F.col(name_col).alias("name")).distinct()
     block = F.element_at(F.split(F.col("name"), " "), -1)
@@ -175,7 +173,7 @@ def entity_resolution(
         .filter(F.levenshtein("name_a", "name_b") <= max_dist)
         .select("name_a", "name_b")
     )
-    labels = connected_components_star(pairs, "name_a", "name_b").select(
+    labels = connected_components(pairs, "name_a", "name_b").select(
         F.col("node").alias("_ent_name"), F.col("cluster_id").alias("_ent_label")
     )
     return records.join(

@@ -1,196 +1,87 @@
-"""Iterative graph operator: connected components over a pair list.
+"""Iterative graph operators: connected components, PageRank, incremental
+components, triangle census and link prediction.
 
-The missing last step of every near-dup pipeline: pair generators
-(t_simhash_hamming_pairs, t_minhash_lsh_pairs, t_chunk_dup_pairs) emit
-EDGES, but a dedup decision needs CLUSTERS — "keep one doc per connected
-component". Transitive closure is inherently iterative, the one shape in
-this engine Catalyst cannot express in a single plan; the idiomatic
-Spark answer is a driver-side loop of DataFrame steps (the same structure
-GraphX/GraphFrames use internally), NOT a collect()-and-compute fallback:
-each iteration is two distributed shuffles, the driver only sees a single
-convergence count.
+Connected components is the missing last step of every near-dup pipeline:
+pair generators (t_simhash_hamming_pairs, t_minhash_lsh_pairs,
+t_chunk_dup_pairs) emit EDGES, but a dedup decision needs CLUSTERS — "keep
+one doc per connected component". Transitive closure is inherently
+iterative, the one shape in this engine Catalyst cannot express in a single
+plan; the idiomatic Spark answer is a driver-side loop of DataFrame steps
+(the same structure GraphX/GraphFrames use internally), NOT a
+collect()-and-compute fallback: the driver only ever sees one convergence
+bit per round.
 
-Cost model at scale: iterations = O(component diameter) — near-dup
-clusters are shallow (dozens of docs, diameter ~2-4), so 3-5 rounds in
-practice, `max_iters` bounds the worst case. Each round joins the edge
-list (shuffled once on src, reusable from cache) against the current
-labels and min-aggregates — both partial-agg friendly. `localCheckpoint`
-every round truncates the lineage so plan size stays O(1) per iteration
-instead of O(iterations).
+The one kernel is large-star/small-star edge contraction (Kiveris et al.,
+"Connected Components in MapReduce and Beyond", SoCC'14): O(log^2 n)
+rounds whatever the component diameter, total work O(|E|) per round.
+`localCheckpoint` every round truncates the lineage so plan size stays
+O(1) per iteration instead of O(iterations).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from boxoffice_spark.functions.numeric import ratio6w
 
 
 def connected_components(
-    pairs: DataFrame, src: str, dst: str, max_iters: int = 20
-) -> DataFrame:
-    """(node, cluster_id) for every node in ``pairs``, where cluster_id is
-    the smallest node id reachable through the undirected pair graph —
-    a deterministic canonical representative per component.
-
-    Min-label propagation: every node starts labeled with itself; each
-    round a node adopts the minimum label among itself and its neighbors;
-    fixpoint = components done. Converges in <= diameter rounds; raises
-    if ``max_iters`` rounds aren't enough (a pathological chain —
-    at that point use doubling/small-star variants, not a bigger budget).
-    """
-    # checkpoint the DIRECTED pair list first: the symmetric union below
-    # references it twice, and without the cut the (expensive) pair-
-    # generation subtree — a banded similarity join upstream — would be
-    # evaluated twice inside one materialization job
-    base = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint()
-    edges = (
-        base.union(base.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("cluster_id"))
-        .localCheckpoint()
-    )
-
-    for _ in range(max_iters):
-        neighbor_min = (
-            edges.join(labels, edges.b == labels.node)
-            .groupBy("a")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.a, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
-                ).alias("cluster_id"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            return labels
-    raise RuntimeError(f"connected_components did not converge in {max_iters} iterations")
-
-
-def _canonical(e: DataFrame) -> DataFrame:
-    """Orient every edge (big, small), dropping self-loops + duplicates."""
-    return (
-        e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def connected_components_star(
     pairs: DataFrame, src: str, dst: str, max_iters: int = 30
 ) -> DataFrame:
-    """(node, cluster_id) like :func:`connected_components`, via the
-    two-phase LARGE-STAR / SMALL-STAR algorithm (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — the scale
-    path when components may be DEEP.
+    """(node, cluster_id) for every node in ``pairs``, where cluster_id is
+    the smallest node id reachable through the undirected pair graph — a
+    deterministic canonical representative per component. Nodes seen only
+    in self-loops come back self-labelled.
 
-    Min-label propagation converges in O(diameter) rounds: a 10^6-node
-    chain (pathological crawl graphs, long citation threads) needs 10^6
-    shuffling rounds. Large-star/small-star rewrites the EDGE LIST itself
-    each round — large-star hangs every node's larger neighbors onto the
-    minimum of its neighborhood, small-star does the same for smaller
-    neighbors — provably converging in O(log^2 n) rounds regardless of
-    diameter, with total work O(|E|) per round. At fixpoint the edge list
-    IS the answer: a star forest where every node points at its
-    component's minimum.
-
-    Each round: two self-aggregating joins (groupBy u + join back on u —
-    the second join reuses the groupBy's hash partitioning, so one shuffle
-    of E per star step), then an exact symmetric-difference convergence
-    check. ``localCheckpoint`` truncates lineage per round.
-
-    Same contract as connected_components: deterministic, cluster_id =
-    component minimum; equality across both and the DuckDB recursive-CTE
-    oracle is tested (tests/test_graph.py), including a long-chain graph
-    where this converges in ~log rounds while min-label would need
-    O(n)."""
-    # checkpoint the raw pair list first: nodes and _canonical below each
-    # reference it twice — without the cut the upstream pair-generation
-    # join would be evaluated four times across the two materializations
-    raw = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint()
-    # canonicalization drops self-loops; remember every mentioned node so
-    # singletons still come back self-labeled (same contract as
-    # connected_components)
-    nodes = (
-        raw.select(F.col("u").alias("node"))
-        .union(raw.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    e = _canonical(raw).localCheckpoint()
-
-    def _with_singletons(labels: DataFrame) -> DataFrame:
-        lone = nodes.join(labels, "node", "left_anti")
-        return labels.union(lone.select("node", F.col("node").alias("cluster_id")))
-
-    if not e.head(1):
-        return _with_singletons(
-            e.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
-        )
-
+    Large-star/small-star rewrites the EDGE LIST itself each round:
+    large-star hangs every node's larger neighbours onto the minimum of
+    its neighbourhood, small-star does the same for smaller neighbours.
+    The fixpoint is a star forest: every non-minimum node has exactly one
+    edge, to its component's minimum. Each star step takes its minimum
+    with a window (one shuffle on u), and the large-star window also tests
+    for the fixpoint, so a round is one action. Raises if ``max_iters``
+    rounds are not enough.
+    """
+    # canonical (big, small) pairs, self-loops kept for the self-labelling;
+    # checkpointed so the upstream pair generation runs once
+    base = pairs.select(
+        F.greatest(src, dst).alias("u"), F.least(src, dst).alias("v")
+    ).localCheckpoint(eager=False)
+    e = base.filter(F.col("u") != F.col("v"))
+    by_u = Window.partitionBy("u")
+    # c = least(u, v) over each node's neighbours. min(c) is the large-star
+    # minimum; min(c) == max(c) at every node iff every node is a centre
+    # (all neighbours larger) or a leaf with one smaller neighbour, which
+    # is exactly the star forest, so convergence is exact
+    c = F.least("u", "v")
     for _ in range(max_iters):
-        # -- large-star: for each u, m = min(N(u) ∪ {u}); emit (v, m) for
-        # every STRICTLY LARGER neighbor v. Output is canonical already
-        # (v > u >= m).
-        und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        lmins = (
-            und.groupBy("u")
-            .agg(F.min("v").alias("_mv"))
-            .select("u", F.least(F.col("_mv"), F.col("u")).alias("m"))
+        star = (
+            e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            .select("u", "v", F.min(c).over(by_u).alias("m"), F.max(c).over(by_u).alias("mx"))
+            .distinct()  # the only dedup; shares the window's shuffle on u
+            .localCheckpoint(eager=False)
         )
-        large = (
-            und.filter(F.col("v") > F.col("u"))
-            .join(lmins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        if star.filter(F.col("m") != F.col("mx")).isEmpty():
+            # a self-loop node's own id loses to any star label (which is
+            # a component minimum) and labels it when it has no edge
+            return (
+                star.select(F.col("u").alias("node"), F.col("m").alias("cluster_id"))
+                .union(base.filter(F.col("u") == F.col("v")).select("u", "v"))
+                .groupBy("node")
+                .agg(F.min("cluster_id").alias("cluster_id"))
+            )
+        # large-star: hang every strictly larger neighbour v on m (v > u >= m)
+        large = star.filter(F.col("v") > F.col("u")).select(
+            F.col("v").alias("u"), F.col("m").alias("v")
+        )
+        # small-star (all v < u): hang u and its neighbours on the minimum
+        # neighbour, dropping the self-loop that hangs the minimum on itself
+        e = (
+            large.withColumn("m", F.min("v").over(by_u))
+            .select(F.explode(F.array("u", "v")).alias("u"), F.col("m").alias("v"))
             .filter(F.col("u") != F.col("v"))
-            .distinct()
         )
-        # -- small-star on the canonical orientation (all v < u): m =
-        # min(N<(u) ∪ {u}) = min neighbor; emit (v, m) for the smaller
-        # neighbors plus (u, m).
-        smins = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = _canonical(
-            large.join(smins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(smins.select("u", F.col("m").alias("v")))
-        ).localCheckpoint()
-        # exact convergence: edge sets identical (symmetric difference
-        # empty) — a count/hash shortcut could false-converge
-        changed = (
-            small.exceptAll(e).count() + e.exceptAll(small).count()
-        )
-        e = small
-        if changed == 0:
-            roots = e.select(F.col("v").alias("node")).distinct().join(
-                e.select(F.col("u").alias("node")), "node", "left_anti"
-            )
-            return _with_singletons(
-                e.select(
-                    F.col("u").alias("node"), F.col("v").alias("cluster_id")
-                ).union(roots.select("node", F.col("node").alias("cluster_id")))
-            )
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_iters} iterations"
-    )
+    raise RuntimeError(f"connected_components did not converge in {max_iters} iterations")
 
 
 def pagerank(
@@ -205,11 +96,11 @@ def pagerank(
     authority; the harmonic-centrality idea behind Common Crawl's domain
     ranking, as a Spark loop).
 
-    Same driver-loop-of-DataFrames structure as connected_components: per
-    round, contributions rank/out_degree flow along edges and re-aggregate
-    per destination — one join + one shuffle per iteration, partial-agg
-    friendly, lineage truncated per round. FIXED iterations (not
-    convergence-tested) so the result is a deterministic function of the
+    A driver loop of DataFrames like connected_components: per round,
+    contributions rank/out_degree flow along edges and re-aggregate per
+    destination — one join + one shuffle per iteration, partial-agg
+    friendly, lineage truncated per round. FIXED iterations (no
+    convergence check) so the result is a deterministic function of the
     graph: contribution sums go through decimal (functions/numeric.dsum)
     making every rank bit-reproducible across partitionings — the same
     rule that lets an unrolled chained-CTE DuckDB oracle match
@@ -292,7 +183,7 @@ def incremental_components(
     of the SUPER-GRAPH whose nodes are (old cluster labels + unseen new
     nodes) and whose edges are the new edges mapped through the standing
     labels. That graph has one node per AFFECTED label — orders of
-    magnitude smaller than the corpus — and min-label components over it
+    magnitude smaller than the corpus — and connected components over it
     yield exactly the labels a full recompute over (old edges + new
     edges) would (min label of a merged component = min node id across
     its members, since every standing label is already its component's
@@ -311,9 +202,8 @@ def incremental_components(
     e = new_edges.select(F.col(src).alias("_a"), F.col(dst).alias("_b"))
     la = standing.select(F.col("node").alias("_a"), F.col("cluster_id").alias("_la"))
     lb = standing.select(F.col("node").alias("_b"), F.col("cluster_id").alias("_lb"))
-    # checkpoint before the isEmpty probe: the two label-lookup joins
-    # would otherwise run twice (once for the probe, once inside the
-    # components call / remap plans)
+    # the components kernel checkpoints its input once and dedups it, and
+    # an empty super-graph (nothing merges) comes back as no relabel rows
     super_edges = (
         e.join(la, "_a", "left")
         .join(lb, "_b", "left")
@@ -322,8 +212,6 @@ def incremental_components(
             F.coalesce("_lb", F.col("_b")).alias("sb"),
         )
         .filter(F.col("sa") != F.col("sb"))
-        .distinct()
-        .localCheckpoint()
     )
     # nodes first seen in this batch: initial label = own id (remapped
     # below exactly like a standing label)
@@ -334,17 +222,10 @@ def incremental_components(
         .join(standing.select("node"), "node", "left_anti")
         .select("node", F.col("node").alias("cluster_id"))
     )
-    if super_edges.isEmpty():
-        # nothing merges: standing labels survive; batch-only nodes (all
-        # their pairs were intra-component or self-loops) label themselves
-        return standing.unionByName(fresh)
-
-    # star variant: the super-graph is usually shallow, but a batch can
-    # chain many standing clusters (A-B, B-C, ... through shared near-dups)
-    # and min-label's O(diameter) budget then runs out — observed at sf1,
-    # where the bootstrap merge IS the whole pair graph. O(log^2 n) rounds
-    # regardless of depth, same deterministic min-id labels.
-    relabel = connected_components_star(super_edges, "sa", "sb").select(
+    # a batch can chain many standing clusters (A-B, B-C, ... through
+    # shared near-dups); the star kernel's round count does not grow with
+    # that depth
+    relabel = connected_components(super_edges, "sa", "sb").select(
         F.col("node").alias("_old_label"), F.col("cluster_id").alias("_new_label")
     )
     # remap rows whose label merged; labels not in the super-graph pass

@@ -1,7 +1,7 @@
 """Graph-analytics queries (operators/graph.py): importance ranking over
-fixture-derived graphs. Connected-components queries (t_dedup_clusters*)
-live with the dedup pipeline in queries/text_pipeline.py; this module holds
-the ranking side."""
+fixture-derived graphs. The connected-components queries (t_dedup_clusters
+and its incremental twin t_incremental_dedup_clusters) live with the dedup
+pipeline in queries/text_pipeline.py; this module holds the ranking side."""
 
 from __future__ import annotations
 

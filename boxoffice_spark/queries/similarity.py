@@ -485,19 +485,17 @@ def v_semantic_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.001/0.01/0.1 (fixture cosines sit far from the 6-dp rounding
     boundary at the 0.4 gate).
 
-    Components use the large-star/small-star contraction, not min-label
-    propagation: at a loose similarity gate the pair graph is sparse
-    enough to form DEEP chains (the sf1 probe hit min-label's 20-round
-    budget — its convergence is O(diameter)), and star contraction is
+    At a loose similarity gate the pair graph is sparse enough to form
+    DEEP chains; the large-star/small-star components kernel takes
     O(log² n) rounds regardless of diameter."""
-    from boxoffice_spark.operators.graph import connected_components_star
+    from boxoffice_spark.operators.graph import connected_components
 
     emb = table(spark, sf_dir, "embeddings")
     v = emb.select("vec_id", "label", F.col("embedding").cast("array<double>").alias("e"))
     pairs = near_dup_pairs_arrow(
         v, block_col="label", id_col="vec_id", vec_col="e", threshold=0.4
     )
-    clusters = connected_components_star(pairs, "id_a", "id_b")
+    clusters = connected_components(pairs, "id_a", "id_b")
     return (
         clusters.filter(F.col("node") != F.col("cluster_id"))
         .groupBy(F.col("cluster_id").alias("keeper_id"))

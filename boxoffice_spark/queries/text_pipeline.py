@@ -337,32 +337,13 @@ FROM reach GROUP BY node
 def t_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS: connected components over the SimHash Hamming
     pair graph — the 'keep one per cluster' decision step after pair
-    generation. Iterative min-label propagation (driver loop of
-    distributed joins, operators/graph.py); the oracle is the same
-    transitive closure as a DuckDB recursive CTE."""
+    generation. Iterative large-star/small-star contraction (driver loop
+    of distributed window steps, operators/graph.py); the oracle is the
+    same transitive closure as a DuckDB recursive CTE."""
     from boxoffice_spark.operators.graph import connected_components
 
     pairs = D.simhash_hamming_pairs(table(spark, sf_dir, "documents"), "doc_id", "text")
     return connected_components(pairs, "id_a", "id_b").select(
-        F.col("node").alias("doc_id"), "cluster_id"
-    )
-
-
-@register(
-    "t_dedup_clusters_star",
-    oracle=_CLUSTERS_ORACLE,
-    tags=("dedup", "graph", "iterative"),
-)
-def t_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t_dedup_clusters via large-star/small-star (operators/graph.py
-    connected_components_star): edge-rewriting converges in O(log^2 n)
-    rounds instead of O(component diameter) — the 100 TB path when the
-    pair graph can contain deep chains (boilerplate bridges, crawl
-    loops). Same oracle, same deterministic min-id labels."""
-    from boxoffice_spark.operators.graph import connected_components_star
-
-    pairs = D.simhash_hamming_pairs(table(spark, sf_dir, "documents"), "doc_id", "text")
-    return connected_components_star(pairs, "id_a", "id_b").select(
         F.col("node").alias("doc_id"), "cluster_id"
     )
 
@@ -2145,7 +2126,7 @@ def t_incremental_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated (LSH probe of the index); here both sides derive from the
     fixture for the equality check."""
     from boxoffice_spark.operators.graph import (
-        connected_components_star,
+        connected_components,
         incremental_components,
     )
 
@@ -2153,9 +2134,7 @@ def t_incremental_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "documents"), "doc_id", "text"
     ).localCheckpoint()
     is_corpus = (F.col("id_a") % 10 != 0) & (F.col("id_b") % 10 != 0)
-    # star variant for the standing labeling: the corpus pair graph can
-    # chain deeper than min-label's O(diameter) round budget (hit at sf1)
-    standing = connected_components_star(pairs.filter(is_corpus), "id_a", "id_b")
+    standing = connected_components(pairs.filter(is_corpus), "id_a", "id_b")
     merged = incremental_components(standing, pairs.filter(~is_corpus), "id_a", "id_b")
     return merged.select(F.col("node").alias("doc_id"), "cluster_id")
 
@@ -2311,11 +2290,11 @@ def t_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-id label changes), which re-buckets those docs. One scan + the
     pair-graph components; the hash bucketing is a zero-shuffle
     projection."""
-    from boxoffice_spark.operators.graph import connected_components_star
+    from boxoffice_spark.operators.graph import connected_components
 
     docs = table(spark, sf_dir, "documents")
     pairs = D.simhash_hamming_pairs(docs, "doc_id", "text")
-    labels = connected_components_star(pairs, "id_a", "id_b")
+    labels = connected_components(pairs, "id_a", "id_b")
     keyed = (
         docs.select("doc_id")
         .join(labels, docs["doc_id"] == labels["node"], "left")

@@ -76,4 +76,11 @@ def get_spark(app_name: str = "boxoffice_spark", shuffle_partitions: int | None 
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # lower()/upper() on non-ASCII text follow the JVM default locale (under
+    # tr_TR 'I' lowers to a dotless 'ı'), which would split Catalyst from the
+    # Python-side normalisers and the oracles. Pinned through py4j, not
+    # spark.driver.extraJavaOptions: a --driver-java-options in
+    # PYSPARK_SUBMIT_ARGS overrides that conf.
+    locale = spark._jvm.java.util.Locale
+    locale.setDefault(locale.ROOT)
     return spark

@@ -1,8 +1,11 @@
-"""connected_components semantics on hand-built graphs: component
-identification, canonical min-id labels, chain diameters, singletons-with-
-self-loops, and the convergence guard."""
+"""connected_components semantics: labels equal a union-find reference on
+hand-built and generated graphs (canonical min-id labels, singletons,
+self-loops, deep chains), partitioning independence, and the convergence
+guard."""
 
 from __future__ import annotations
+
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,40 +16,6 @@ from boxoffice_spark.operators.graph import connected_components
 def _cc(spark, edges, **kw):
     df = spark.createDataFrame(edges, "a long, b long")
     return {r.node: r.cluster_id for r in connected_components(df, "a", "b", **kw).collect()}
-
-
-def test_two_components_min_label(spark):
-    got = _cc(spark, [(1, 2), (2, 3), (10, 11), (3, 1)])
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-
-
-def test_long_chain_converges(spark):
-    # path graph 0-1-2-...-9: worst-case diameter for label propagation
-    got = _cc(spark, [(i, i + 1) for i in range(9)])
-    assert got == {i: 0 for i in range(10)}
-
-
-def test_self_loop_is_singleton(spark):
-    got = _cc(spark, [(5, 5), (1, 2)])
-    assert got == {5: 5, 1: 1, 2: 1}
-
-
-def test_max_iters_guard_raises(spark):
-    with pytest.raises(RuntimeError, match="did not converge"):
-        _cc(spark, [(i, i + 1) for i in range(9)], max_iters=2)
-
-
-# ---- large-star / small-star scale variant ----------------------------------
-
-from boxoffice_spark.operators.graph import connected_components_star
-
-
-def _ccs(spark, edges, **kw):
-    df = spark.createDataFrame(edges, "a long, b long")
-    return {
-        r.node: r.cluster_id
-        for r in connected_components_star(df, "a", "b", **kw).collect()
-    }
 
 
 def _union_find(edges):
@@ -66,6 +35,33 @@ def _union_find(edges):
     return {n: find(n) for n in parent}
 
 
+_rnd = random.Random(7)
+_RANDOM_300 = [(_rnd.randrange(300), _rnd.randrange(300)) for _ in range(250)]
+_CHAIN_200 = [(i, i + 1) for i in range(199)]
+
+
+def test_two_components_min_label(spark):
+    got = _cc(spark, [(1, 2), (2, 3), (10, 11), (3, 1)])
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+
+
+def test_long_chain_converges(spark):
+    # path graph 0-1-2-...-9: long diameter, short log n
+    got = _cc(spark, [(i, i + 1) for i in range(9)])
+    assert got == {i: 0 for i in range(10)}
+
+
+def test_self_loop_is_singleton(spark):
+    got = _cc(spark, [(5, 5), (1, 2)])
+    assert got == {5: 5, 1: 1, 2: 1}
+
+
+def test_max_iters_guard_raises(spark):
+    # a path of 200 nodes needs more than two star rounds
+    with pytest.raises(RuntimeError, match="did not converge"):
+        _cc(spark, _CHAIN_200, max_iters=2)
+
+
 @pytest.mark.parametrize(
     "edges",
     [
@@ -74,20 +70,31 @@ def _union_find(edges):
         [(5, 5), (1, 2)],
         [(7, 3), (3, 7), (2, 2)],
         [(100, 1), (50, 100), (2, 50), (9, 9), (20, 30)],
+        [],
+        [(i, i) for i in range(5)],
+        [(1, 2), (2, 1), (1, 2), (4, 3), (3, 4), (3, 4)],
+        _RANDOM_300,
     ],
 )
 def test_star_matches_union_find_and_min_label(spark, edges):
-    want = _union_find(edges)
-    assert _ccs(spark, edges) == want
-    assert _cc(spark, edges) == want
+    """The star kernel's labels equal union-find with the component
+    minimum as the canonical label."""
+    assert _cc(spark, edges) == _union_find(edges)
 
 
 def test_star_deep_chain_logarithmic_rounds(spark):
-    """A 200-node path has diameter 199 — min-label needs ~199 rounds, the
-    star algorithm must finish within its default O(log^2 n) budget."""
-    edges = [(i, i + 1) for i in range(199)]
-    got = _ccs(spark, edges)  # default max_iters=30 << diameter
+    """A 200-node path has diameter 199, far past the default 30-round
+    budget: it passes only because the star kernel's rounds grow with
+    log n, not with the diameter."""
+    got = _cc(spark, _CHAIN_200)
     assert got == {i: 0 for i in range(200)}
+
+
+def test_partitioning_independent(spark):
+    df = spark.createDataFrame(_RANDOM_300, "a long, b long")
+    a = sorted(map(tuple, connected_components(df.repartition(1), "a", "b").collect()))
+    b = sorted(map(tuple, connected_components(df.repartition(7), "a", "b").collect()))
+    assert a == b
 
 
 def test_pagerank_invariants_and_determinism(spark):
@@ -128,10 +135,7 @@ class TestIncrementalComponents:
         return spark.createDataFrame(rows, "a long, b long")
 
     def test_new_edge_merges_two_standing_components(self, spark):
-        from boxoffice_spark.operators.graph import (
-            connected_components,
-            incremental_components,
-        )
+        from boxoffice_spark.operators.graph import incremental_components
 
         old = self._edges(spark, [(1, 2), (5, 6)])
         standing = connected_components(old, "a", "b")
@@ -140,10 +144,7 @@ class TestIncrementalComponents:
         assert got == {1: 1, 2: 1, 5: 1, 6: 1}
 
     def test_matches_full_recompute(self, spark):
-        from boxoffice_spark.operators.graph import (
-            connected_components,
-            incremental_components,
-        )
+        from boxoffice_spark.operators.graph import incremental_components
 
         old = self._edges(spark, [(1, 2), (2, 3), (10, 11), (20, 21)])
         new = self._edges(spark, [(3, 10), (30, 31), (0, 21)])  # merge, fresh, new-min
@@ -160,10 +161,7 @@ class TestIncrementalComponents:
         assert inc[21] == 0  # the new batch node 0 becomes the component min
 
     def test_no_merge_batch_appends_new_nodes_only(self, spark):
-        from boxoffice_spark.operators.graph import (
-            connected_components,
-            incremental_components,
-        )
+        from boxoffice_spark.operators.graph import incremental_components
 
         old = self._edges(spark, [(1, 2)])
         standing = connected_components(old, "a", "b")

@@ -1,5 +1,5 @@
 """Cross-engine parity of the rule-based final-cell helpers (parity rules
-5-6, round 8): dec6/ratio6 (functions/numeric.py) and the digit-arithmetic
+5-6, round 8): ratio6 (functions/numeric.py) and the digit-arithmetic
 md5 SQL helpers must produce IDENTICAL cells in Spark and DuckDB — on the
 adversarial inputs the round-7 driver reds were made of: exact dyadic 6dp
 grid midpoints (j/2^7, j/(2^7*5)) where round(double, 6) implementations
@@ -12,8 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from boxoffice_spark.functions.numeric import (
-    dec6,
-    dec6_sql,
     ratio6,
     ratio6_sql,
 )
@@ -143,24 +141,6 @@ def test_fround_matches_duckdb_and_numpy_kernel(spark):
         ).fetchone()
         assert got[v] == want, (v, got[v], want)
         assert got[v] == float(_round_half_up(np.float64(v), 6)), v
-
-
-def test_dec6_matches_duckdb(spark):
-    vals = [0.0078125, -0.0078125, 0.015625, 1.0 / 3, -2.0 / 3, 123.4567891]
-    rows = spark.createDataFrame(
-        [(v,) for v in vals], "x double"
-    ).select("x", dec6(F.col("x")).alias("d"))
-    got = {round(r["x"], 10): r["d"] for r in rows.collect()}
-    con = duckdb.connect()
-    for v in vals:
-        # CAST AS DOUBLE mirrors real usage: dec6 inputs are computed
-        # double chains, not decimal literals (whose rescale path DuckDB
-        # rounds half-even — a raw 0.0078125 literal would cast to
-        # 0.007812, the double 0.0078125 casts to 0.007813)
-        (want,) = con.sql(
-            f"SELECT {dec6_sql(f'CAST({v!r} AS DOUBLE)')}"
-        ).fetchone()
-        assert got[round(v, 10)] == want, (v, got[round(v, 10)], want)
 
 
 @pytest.mark.parametrize(

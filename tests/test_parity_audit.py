@@ -24,7 +24,7 @@ def test_no_untracked_fragile_constructs():
     assert out["ok"], (
         "oracles with engine-build-sensitive constructs outside the "
         f"legacy-green ledger: {sorted(out['untracked'])} — convert them "
-        "to dec6/ratio6/digit-arithmetic (functions/numeric.py) before "
+        "to ratio6/units_div/fround (functions/numeric.py) before "
         "registering"
     )
 

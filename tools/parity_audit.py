@@ -102,7 +102,6 @@ LEGACY_GREEN: set[str] = {
     't_decontamination_bloom',
     't_dedup_apply',
     't_dedup_clusters',
-    't_dedup_clusters_star',
     't_dedup_keep_best',
     't_domain_loss_weights',
     't_dsir_weights',
