@@ -43,7 +43,9 @@ If the first warm pass accrues > 500 steal jiffies, or load average was
 > 2 before the run started, the ENTIRE warm pass re-runs once (cache
 cleared first) and the pass with the lower steal_delta is kept; both
 passes' contention markers and totals are recorded under
-``contention.passes`` so nothing is hidden. Per-pass methodology is
+``contention.passes`` so nothing is hidden. ``contention.trusted`` (also
+on the compact line) says whether the kept pass stayed under that
+threshold; it is false when steal could not be read. Per-pass methodology is
 byte-identical to previous rounds; on a quiet box exactly one pass runs
 and the artifact is shape-compatible with r11's (additions only).
 
@@ -228,12 +230,16 @@ def main() -> None:
     import duckdb as _duckdb
     import pyspark as _pyspark
 
+    kept_steal = _steal_delta(load_before, load_after)
     contention = {
         "before": load_before,
         "after": load_after,
         # steal jiffies accrued DURING the kept warm pass (all CPUs): > a
         # few hundred means the hypervisor took real time from this run
-        "steal_delta": _steal_delta(load_before, load_after),
+        "steal_delta": kept_steal,
+        # the headline may back a speed claim only when the kept pass ran
+        # with steal under the 500-jiffy threshold; unknown steal is untrusted
+        "trusted": kept_steal is not None and kept_steal < 500,
         # all passes run this invocation (>1 means the first pass was
         # contended and the full warm loop re-ran; `kept` indexes into it)
         "passes": passes,
@@ -276,6 +282,7 @@ def main() -> None:
         "load_before": load_before.get("loadavg_1m"),
         "load_after": load_after.get("loadavg_1m"),
         "steal_delta": contention["steal_delta"],
+        "trusted": contention["trusted"],
         "n_passes": len(passes),
     }
     compact["full_artifact"] = "BENCH_FULL.json"

@@ -67,7 +67,14 @@ def agent_prompt(spark: SparkSession, sf_dir: str, question: str) -> str:
 def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
     """S6/D4 execution surface: register the fixture tables as temp views
     and run arbitrary SQL text through Catalyst. Same logical plans as the
-    DataFrame API — the entire §2 inventory is reachable from here."""
+    DataFrame API — the entire §2 inventory is reachable from here.
+
+    ``register_views`` re-reads the tables only when this JVM session has
+    not registered ``sf_dir`` yet, a table file's length or modification
+    time changed, or one of its views was dropped or replaced in the
+    catalog; otherwise the call launches no Spark job before ``spark.sql``.
+    It is looked up as this module's attribute on every call, so a wrapper
+    installed on ``agent.register_views`` sees each registration."""
     register_views(spark, sf_dir)
     return spark.sql(sql)
 

@@ -157,10 +157,14 @@ def pagerank(
                 )
             ).alias("rank")
         )
-        # eager=False: lineage still truncates, but the iteration work
-        # executes inside the CALLER's action (bench-honest), not at
-        # construction time; the chain is sequential so each round still
-        # materializes exactly once.
+        # eager=False truncates the lineage but does not defer the work:
+        # under AQE, building the checkpoint's RDD runs every shuffle stage
+        # of the round, so nearly all of PageRank executes here, at
+        # construction: on a 200-edge graph each round adds 8 jobs to the
+        # build and none to the caller's collect, and g_pagerank_authority
+        # on the benchmark's seed-2 inputs runs 26 jobs in its build
+        # against 1 in the collect. The chain is sequential, so each round
+        # still materializes exactly once.
         ranks = (
             nodes.join(inflow, "node", "left")
             .select("node", F.coalesce("rank", F.lit(base)).alias("rank"))
@@ -304,7 +308,7 @@ def triangle_stats(
     """
     from boxoffice_spark.functions.caching import scoped_persist
 
-    # ``e`` feeds deg, n_edges and the orientation join; without the persist
+    # ``e`` feeds deg and the orientation join; without the persist
     # the caller's edge-builder (join + distinct at g_triangle_census) is
     # re-evaluated once per consumer (the round-3 self-join lesson: exchange
     # reuse needs byte-identical canonical subplans and AQE routinely breaks
@@ -313,17 +317,24 @@ def triangle_stats(
         edges.select(F.col(src).alias("_u"), F.col(dst).alias("_v")),
         f"{_scope}.e",
     )
-    deg = (
+    # ``deg`` feeds the census counts and both orientation keys: persisted,
+    # the degree aggregate runs once instead of once per consumer
+    deg = scoped_persist(
         e.select(F.col("_u").alias("_n"))
         .unionAll(e.select(F.col("_v").alias("_n")))
         .groupBy("_n")
-        .agg(F.count("*").alias("_d"))
+        .agg(F.count("*").alias("_d")),
+        f"{_scope}.deg",
     )
-    n_nodes = deg.select(F.count("*").alias("n_nodes"))
-    n_edges = e.select(F.count("*").alias("n_edges"))
-    # wedges (paths of length 2, open or closed) = sum_n C(deg, 2)
-    n_wedges = deg.select(
-        F.sum(F.expr("_d * (_d - 1) / 2")).cast("long").alias("n_wedges")
+    # one aggregate over deg: every edge row adds exactly 2 to the endpoint
+    # union, so sum(_d) div 2 is the edge-row count for any row set
+    # (duplicates, self-loops and NULL endpoints included); coalesce keeps
+    # an empty edge list at 0 edges. Wedges (paths of length 2, open or
+    # closed) = sum_n C(deg, 2).
+    counts = deg.agg(
+        F.count("*").alias("n_nodes"),
+        F.expr("coalesce(sum(_d), 0) div 2").alias("n_edges"),
+        F.sum(F.expr("_d * (_d - 1) / 2")).cast("long").alias("n_wedges"),
     )
     # orient by (degree, id), packed into one guarded BIGINT (docstring)
     _key = F.when(
@@ -371,9 +382,7 @@ def triangle_stats(
         .agg(F.coalesce(F.sum("_ct"), F.lit(0)).cast("long").alias("n_triangles"))
     )
     return (
-        n_nodes.crossJoin(n_edges)
-        .crossJoin(n_wedges)
-        .crossJoin(n_tri)
+        counts.crossJoin(n_tri)
         .select(
             "n_nodes",
             "n_edges",
@@ -410,7 +419,7 @@ def triangle_count_doulion(
     The "coin" here is a hash, not a RNG: an edge is kept iff
     xxhash64(u, v, seed) lands in the keep range. Same input -> same
     sample -> same estimate, so the estimator is reproducible across
-    runs, resumable, and testable (tests/test_graph_ops.py asserts
+    runs, resumable, and testable (tests/test_graph.py asserts
     relative error vs the exact census). Rows-only by construction (SQL
     has no xxhash64); the EXACT tier (triangle_stats) carries the
     DuckDB oracle.

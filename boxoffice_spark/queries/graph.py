@@ -216,7 +216,7 @@ def g_triangle_census_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree-ordered census on the ~p·|E| surviving edges (wedge volume,
     the quadratic term, drops ~p²), scale the count by 1/p³. Rows-only
     by construction (hash coin is engine-specific); the relative-error
-    contract vs the exact tier is asserted in tests/test_graph_ops.py,
+    contract vs the exact tier is asserted in tests/test_graph.py,
     and the exact tier keeps the DuckDB oracle."""
     from boxoffice_spark.operators.graph import triangle_count_doulion
 

@@ -261,6 +261,25 @@ class TestTriangleStatsPackedKey:
         assert row.n_wedges == 2
         assert row.global_clustering == 0.0
 
+    @pytest.mark.parametrize(
+        "edges, want",
+        [
+            # no edges: 0 nodes and 0 edges; wedges and clustering are NULL
+            ([], (0, 0, None, 0, None)),
+            # duplicate rows count once per row in edges, degrees and wedges
+            (
+                [(0, 1), (0, 1), (1, 2), (0, 2), (0, 2), (0, 2), (2, 3)],
+                (4, 7, 23, 2, 0.26087),
+            ),
+        ],
+        ids=["empty", "duplicate_rows"],
+    )
+    def test_census_edge_inputs_pinned(self, spark, edges, want):
+        from boxoffice_spark.operators.graph import triangle_stats
+
+        e = spark.createDataFrame(edges, "u long, v long")
+        assert tuple(triangle_stats(e, _scope="test.pinned").first()) == want
+
 
 # ---- co-purchase edge builder (r11: basket-array explode) --------------------
 
