@@ -10,14 +10,13 @@ Times every bench-flagged headline query from the registry at
 (summary scalars LAST — the driver captures only the tail of stdout, so the
 headline number must survive truncation of the per-query maps)
 
-Each query is forced end-to-end with the noop sink (full execution, no
-driver-side collect materialization cost in the timing). A tiny warmup query
-runs first so JVM/codegen startup isn't billed to the first headline query.
-Each headline query is executed twice and the faster (warm) run is reported:
-run 1 pays one-time whole-stage-codegen compilation (~1-2 s for wide
-aggregates, a fixed driver-side JIT cost independent of data volume), run 2
-measures the actual data-path throughput that scales with SF. Steady-state
-throughput is the number that extrapolates to cluster scale.
+Every run is timed by ``tools/measure.time_query`` (noop sink, warm-up
+query first, one job group per query). Each headline query is executed
+twice and the faster (warm) run is reported: run 1 pays one-time
+whole-stage-codegen compilation (~1-2 s for wide aggregates, a fixed
+driver-side JIT cost independent of data volume), run 2 measures the
+actual data-path throughput that scales with SF. Steady-state throughput
+is the number that extrapolates to cluster scale.
 
 Two timed regions per run, both reported (bench honesty — nothing a query
 does is unbilled):
@@ -36,27 +35,23 @@ The headline ``value`` remains the exec total (comparable across rounds);
 ``build_total`` is printed alongside so the sum of everything any query did
 is value + build_total.
 
-Contention self-defense (r12): this box shows minute-scale hypervisor CPU
-steal storms (r10 and r11 driver artifacts both ran inside one — the r11
-artifact carries steal_delta 35,857 jiffies vs the <500 trust threshold).
-If the first warm pass accrues > 500 steal jiffies, or load average was
-> 2 before the run started, the ENTIRE warm pass re-runs once (cache
-cleared first) and the pass with the lower steal_delta is kept; both
-passes' contention markers and totals are recorded under
+Contention self-defense: this box shows minute-scale hypervisor CPU
+steal storms. If the first warm pass accrues > 500 steal jiffies, or load
+average was > 2 before the run started, the ENTIRE warm pass re-runs once
+(cache cleared first) and the pass with the lower steal_delta is kept;
+both passes' contention markers and totals are recorded under
 ``contention.passes`` so nothing is hidden. ``contention.trusted`` (also
 on the compact line) says whether the kept pass stayed under that
-threshold; it is false when steal could not be read. Per-pass methodology is
-byte-identical to previous rounds; on a quiet box exactly one pass runs
-and the artifact is shape-compatible with r11's (additions only).
+threshold; it is false when steal could not be read. On a quiet box
+exactly one pass runs.
 
 Cache semantics, stated plainly: queries that persist a shared intermediate
 (the LSH candidate set, the BM25/TF-IDF tf table, the unigram vocab) report
 WARM steady-state in ``queries`` — run 2 reuses the cache run 1 materialized
-(scoped_persist returns the same handle for a semantically identical plan;
-Spark's own CacheManager did the same for the plain persists of earlier
-rounds, so round-over-round numbers stay comparable). Run 1's cold
-execution — cache population included — is reported per query under
-``cold`` so nothing is hidden: cold - exec ≈ the persisted subtree's cost.
+(scoped_persist returns the same handle for a semantically identical plan).
+Run 1's cold execution — cache population included — is reported per query
+under ``cold`` so nothing is hidden: cold - exec ≈ the persisted subtree's
+cost.
 """
 
 from __future__ import annotations
@@ -64,11 +59,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+
+from tools import measure
 
 
 def main() -> None:
-    os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf_name = os.path.basename(sf_dir.rstrip("/"))
     try:
@@ -77,91 +72,42 @@ def main() -> None:
         sf = sf_name
 
     from boxoffice_spark.registry import load_all
-    from boxoffice_spark.session import get_spark
+    from boxoffice_spark.testing import engine_fingerprint
 
-    # Contention telemetry (VERDICT r10 item 4): the r10 driver artifact
-    # regressed 26% vs the committed idle rerun purely from box load, and
-    # diagnosing that cost a verdict cycle because nothing in the artifact
-    # recorded the machine state. Sample load/steal/pressure around the
-    # run so a contended artifact is identifiable from the JSON alone.
-    def _contention() -> dict:
-        out: dict = {}
-        try:
-            with open("/proc/loadavg") as fh:
-                out["loadavg_1m"] = float(fh.read().split()[0])
-        except OSError:
-            pass
-        try:  # cumulative steal jiffies — hypervisor noisy-neighbor time
-            with open("/proc/stat") as fh:
-                out["steal_jiffies"] = int(fh.readline().split()[8])
-        except (OSError, IndexError, ValueError):
-            pass
-        try:  # PSI: fraction of the last minute runnable tasks waited for CPU
-            with open("/proc/pressure/cpu") as fh:
-                out["cpu_pressure_some_avg60"] = float(
-                    fh.readline().split("avg60=")[1].split()[0]
-                )
-        except (OSError, IndexError, ValueError):
-            pass
-        return out
-
-    def _steal_delta(before: dict, after: dict) -> int | None:
-        if "steal_jiffies" in before and "steal_jiffies" in after:
-            return after["steal_jiffies"] - before["steal_jiffies"]
-        return None
-
-    spark = get_spark("boxoffice_spark_bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
+    spark = measure.start_session("boxoffice_spark_bench")
     specs = load_all()
     headline = {n: s for n, s in specs.items() if s.bench}
-
-    # warmup: trigger JVM, codegen, parquet footer reads
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     def _run_pass() -> tuple[dict, dict, dict]:
         timings: dict[str, float] = {}
         builds: dict[str, float] = {}
         colds: dict[str, float] = {}
         for name, spec in headline.items():
-            runs, build_runs = [], []
-            for _ in range(2):  # run 1 compiles codegen; run 2 is steady-state
-                t0 = time.perf_counter()
-                df = spec.fn(spark, sf_dir)  # plan assembly + any eager index build
-                t1 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                t2 = time.perf_counter()
-                build_runs.append(t1 - t0)
-                runs.append(t2 - t1)
-            timings[name] = round(min(runs), 3)
-            builds[name] = round(min(build_runs), 3)
-            colds[name] = round(runs[0], 3)  # codegen + cache population included
+            t = measure.time_query(spark, name, lambda: spec.fn(spark, sf_dir))
+            timings[name] = round(t.warm, 3)
+            builds[name] = round(min(t.build), 3)
+            colds[name] = round(t.cold, 3)  # codegen + cache population included
         return timings, builds, colds
 
-    # Contention self-defense (VERDICT r11 item 1): the r10 AND r11 driver
-    # artifacts were both produced during hypervisor steal storms
-    # (steal_delta 35,857 jiffies in r11 vs the <500 trust threshold), which
-    # turned two verdict cycles into weather forensics. If the first warm
-    # pass ran contended, re-run the whole pass ONCE and keep the pass with
-    # the lower steal_delta; BOTH passes' markers are recorded so nothing is
-    # hidden. Per-pass timing methodology is unchanged (same two-run
-    # warm/cold loop, same noop sink); the Spark cache is cleared between
+    # If the first warm pass ran contended, re-run the whole pass ONCE and
+    # keep the pass with the lower steal_delta; BOTH passes' markers are
+    # recorded so nothing is hidden. The Spark cache is cleared between
     # passes so a retry's `cold` numbers still pay cache population (codegen
     # stays JIT-warm — cold is informational, warm is the headline).
     passes = []
     results = []  # (timings, builds, colds) per pass
 
     def _timed_pass() -> None:
-        before = _contention()
+        before = measure.contention()
         results.append(_run_pass())
-        after = _contention()
+        after = measure.contention()
         passes.append({"before": before, "after": after,
-                       "steal_delta": _steal_delta(before, after),
+                       "steal_delta": measure.steal_delta(before, after),
                        "value": round(sum(results[-1][0].values()), 3)})
 
     _timed_pass()
     sd0 = passes[0]["steal_delta"]
-    if (sd0 is not None and sd0 > 500) or passes[0]["before"].get("loadavg_1m", 0.0) > 2.0:
+    if (sd0 is not None and sd0 > measure.STEAL_TRUST_JIFFIES) or passes[0]["before"].get("loadavg_1m", 0.0) > 2.0:
         spark.catalog.clearCache()
         _timed_pass()
     inf = float("inf")
@@ -178,8 +124,8 @@ def main() -> None:
     build_total = round(sum(builds.values()), 3)
 
     # ANN recall scorecard (deterministic — every tier is seeded): surfaced
-    # in the round artifact so a tuning regression shows up here, not just
-    # in pytest. Not billed to the headline total (it is a QA report, not a
+    # in the artifact so a tuning regression shows up here, not just in
+    # pytest. Not billed to the headline total (it is a QA report, not a
     # headline query).
     ann_recall: dict[str, float] = {}
     try:
@@ -189,21 +135,18 @@ def main() -> None:
         ann_recall = {"err": str(exc)[:200]}
 
     # Artifact strategy (the driver keeps only the LAST 2,000 chars of
-    # stdout — BENCH_r05's single fat line lost the whole warm map to
-    # truncation and could not be parsed as JSON):
+    # stdout; one fat line loses the whole warm map to truncation and
+    # cannot be parsed as JSON):
     #   1. BENCH_FULL.json sidecar at the repo root — the COMPLETE record
-    #      (warm + cold + build + recall per query). The driver commits
-    #      uncommitted work each round, so this travels with the repo.
+    #      (warm + cold + build + recall per query), committed with the repo.
     #   2. One full verbose line (for anyone capturing full stdout).
     #   3. The FINAL line is compact — warm per-query map + summary
     #      scalars only (~1.7 KB < 2 KB), so after driver truncation the
     #      tail still contains one complete, parseable JSON line with the
     #      headline number AND every per-query warm timing.
-    # Round-over-round self-comparison (VERDICT r06 item 7): read the
-    # previous BENCH_FULL.json before overwriting it and report per-query
-    # warm deltas, so regressions are self-reported in the round artifact
-    # instead of judge-reconstructed from two files. Sign convention:
-    # positive = slower than last round.
+    # The previous BENCH_FULL.json is read before it is overwritten and
+    # per-query warm deltas are reported, so a regression shows in the
+    # artifact itself. Sign convention: positive = slower than last time.
     here = os.path.dirname(os.path.abspath(__file__))
     deltas: dict[str, float] = {}
     prev_total = None
@@ -224,22 +167,14 @@ def main() -> None:
         # every query already ran by this point
         deltas, prev_total = {}, None
 
-    # Engine fingerprints (VERDICT r07 task 3): the round-7 local-vs-driver
-    # hash divergence was only diagnosable forensically because no artifact
-    # recorded which engine builds produced it.
-    import duckdb as _duckdb
-    import pyspark as _pyspark
-
-    kept_steal = _steal_delta(load_before, load_after)
+    kept_steal = measure.steal_delta(load_before, load_after)
     contention = {
         "before": load_before,
         "after": load_after,
         # steal jiffies accrued DURING the kept warm pass (all CPUs): > a
         # few hundred means the hypervisor took real time from this run
         "steal_delta": kept_steal,
-        # the headline may back a speed claim only when the kept pass ran
-        # with steal under the 500-jiffy threshold; unknown steal is untrusted
-        "trusted": kept_steal is not None and kept_steal < 500,
+        "trusted": measure.trusted(kept_steal),
         # all passes run this invocation (>1 means the first pass was
         # contended and the full warm loop re-ran; `kept` indexes into it)
         "passes": passes,
@@ -247,10 +182,9 @@ def main() -> None:
     }
 
     full = {
-        "engines": {
-            "pyspark": _pyspark.__version__,
-            "duckdb": _duckdb.__version__,
-        },
+        # engine builds, so a result that differs between hosts can be
+        # traced to the builds that produced it
+        "engines": engine_fingerprint(),
         "contention": contention,
         "queries": timings,
         "build": builds,

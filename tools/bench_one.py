@@ -1,14 +1,13 @@
-"""Per-query micro-bench + plan dump (optimization-round tooling).
+"""Per-query micro-bench + plan dump.
 
 Usage:
     python tools/bench_one.py QUERY [QUERY ...] [--plan OUTDIR] [--runs N]
 
-Replicates bench.py's per-query methodology exactly (noop sink, run-1
-cold / best-of-N warm, build timed separately) for a subset of queries so
-an optimization loop doesn't pay for the whole 52-query suite. With
+Times a subset of queries with bench.py's methodology (``measure.time_query``:
+noop sink, run-1 cold / best-of-N warm, build timed separately) so an
+optimization loop doesn't pay for the whole headline suite. With
 ``--plan OUTDIR`` the ``explain('formatted')`` text of each query is also
-written to ``OUTDIR/<query>.txt`` (the judge-facing plan artifacts under
-plans/r11/).
+written to ``OUTDIR/<query>.txt`` (the plan artifacts under plans/).
 """
 
 from __future__ import annotations
@@ -17,8 +16,11 @@ import argparse
 import io
 import os
 import sys
-import time
 from contextlib import redirect_stdout
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools import measure  # noqa: E402
 
 
 def main() -> None:
@@ -28,35 +30,20 @@ def main() -> None:
     ap.add_argument("--runs", type=int, default=2)
     args = ap.parse_args()
 
-    os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from boxoffice_spark.registry import load_all
-    from boxoffice_spark.session import get_spark
 
-    spark = get_spark("boxoffice_spark_bench_one")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = measure.start_session("boxoffice_spark_bench_one")
     specs = load_all()
-
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # warmup
 
     for name in args.queries:
         spec = specs[name]
-        runs, build_runs = [], []
-        for i in range(args.runs):
-            spark.sparkContext.setJobDescription(f"{name} run{i}")
-            t0 = time.perf_counter()
-            df = spec.fn(spark, sf_dir)
-            t1 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            t2 = time.perf_counter()
-            build_runs.append(t1 - t0)
-            runs.append(t2 - t1)
-        spark.sparkContext.setJobDescription(None)
+        t = measure.time_query(spark, name, lambda: spec.fn(spark, sf_dir), runs=args.runs)
         print(
-            f"{name}: warm={min(runs):.3f} cold={runs[0]:.3f} "
-            f"build={min(build_runs):.3f} runs={[round(r, 3) for r in runs]}",
+            f"{name}: warm={t.warm:.3f} cold={t.cold:.3f} "
+            f"build={min(t.build):.3f} runs={[round(r, 3) for r in t.exec]} "
+            f"steal+{t.steal_delta}",
             flush=True,
         )
         if args.plan:

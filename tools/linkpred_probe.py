@@ -1,4 +1,4 @@
-"""Stage-attributed link-prediction scale probe (r11 ledger closure).
+"""Stage-attributed link-prediction scale probe.
 
 Separates g_link_prediction's cap-independent EDGE BUILD (distinct
 co-purchase pair shuffle over lineitem) from the capped wedge/score TAIL
@@ -12,8 +12,8 @@ that `max_center_degree` bounds — the decomposition behind
   tail cannot grow across decades on this fixture.
 - ``tail`` mode times the full query once cold (edge build + tail), then
   the tail alone over the operator's own warmed scoped cache, min-of-N,
-  for cap=64 (the query's contract) and cap=8 (the VERDICT r10 item-6
-  variant — vacuous here: zero nodes have degree <= 8).
+  for cap=64 (the query's contract) and cap=8 (vacuous on these
+  fixtures: zero nodes have degree <= 8).
 
 Probe-harness note, learned the hard way: do NOT persist the probe's own
 edge frame. The operator's internal ``scoped_persist`` of its alias-only
@@ -26,36 +26,20 @@ external, so this is a harness artifact, not an operator bug.
 
 Usage:
     python tools/linkpred_probe.py stats SF_DIR [SF_DIR ...]
-    python tools/linkpred_probe.py tail SF_DIR [--reps N]
+    python tools/linkpred_probe.py tail SF_DIR [--reps=N]
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _steal() -> int:
-    try:
-        with open("/proc/stat") as fh:
-            return int(fh.readline().split()[8])
-    except (OSError, IndexError, ValueError):
-        return 0
-
-
-def _edges(spark, sf_dir: str):
-    # Delegate to the shipped edge builder (r11: basket-array explode, 2
-    # Exchange / 0 Join) so the probe always measures the production kernel.
-    from boxoffice_spark.queries.graph import _copurchase_edges
-
-    return _copurchase_edges(spark, sf_dir)
+from tools import measure  # noqa: E402
 
 
 def main() -> None:
-    os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
     mode = sys.argv[1]
     dirs = [a for a in sys.argv[2:] if not a.startswith("--")]
     reps = 3
@@ -65,15 +49,14 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from boxoffice_spark.session import get_spark
+    # the shipped edge builder, so the probe always measures the production kernel
+    from boxoffice_spark.queries.graph import _copurchase_edges
 
-    spark = get_spark("linkpred_probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    spark = measure.start_session("linkpred_probe")
 
     if mode == "stats":
         for sf_dir in dirs:
-            e = _edges(spark, sf_dir)
+            e = _copurchase_edges(spark, sf_dir)
             deg = (
                 e.select(F.col("u").alias("n"))
                 .unionAll(e.select(F.col("v").alias("n")))
@@ -92,27 +75,21 @@ def main() -> None:
         from boxoffice_spark.operators.graph import link_prediction_scores
 
         (sf_dir,) = dirs
-        edges = _edges(spark, sf_dir)
-        s0, t0 = _steal(), time.perf_counter()
-        link_prediction_scores(edges, "u", "v", max_center_degree=64, k=30).write.format(
-            "noop"
-        ).mode("overwrite").save()
+        edges = _copurchase_edges(spark, sf_dir)
+
+        def scores(cap: int):
+            return link_prediction_scores(edges, "u", "v", max_center_degree=cap, k=30)
+
+        t = measure.time_query(spark, "linkpred_probe.cold", lambda: scores(64), runs=1)
         print(
-            f"COLD_FULL (edge build + tail, cap=64): {time.perf_counter() - t0:.3f}s"
-            f" steal+{_steal() - s0}",
+            f"COLD_FULL (edge build + tail, cap=64): {t.total:.3f}s steal+{t.steal_delta}",
             flush=True,
         )
         for cap in (64, 8):
-            runs = []
-            for i in range(reps):
-                s0, t0 = _steal(), time.perf_counter()
-                link_prediction_scores(
-                    edges, "u", "v", max_center_degree=cap, k=30
-                ).write.format("noop").mode("overwrite").save()
-                dt = time.perf_counter() - t0
-                runs.append(dt)
-                print(f"# cap={cap} run{i}: {dt:.3f}s steal+{_steal() - s0}", flush=True)
-            print(f"TAIL dir={sf_dir} cap={cap} warm={min(runs):.3f}", flush=True)
+            t = measure.time_query(spark, f"linkpred_probe.cap{cap}", lambda: scores(cap), runs=reps)
+            runs = [round(b + e, 3) for b, e in zip(t.build, t.exec)]
+            print(f"# cap={cap} runs={runs} steal+{t.steal_delta}", flush=True)
+            print(f"TAIL dir={sf_dir} cap={cap} warm={t.total:.3f}", flush=True)
     else:
         raise SystemExit(f"unknown mode {mode!r} (use: stats | tail)")
     spark.stop()
