@@ -101,10 +101,11 @@ def pagerank(
     destination — one join + one shuffle per iteration, partial-agg
     friendly, lineage truncated per round. FIXED iterations (no
     convergence check) so the result is a deterministic function of the
-    graph: contribution sums go through decimal (functions/numeric.dsum)
-    making every rank bit-reproducible across partitionings — the same
-    rule that lets an unrolled chained-CTE DuckDB oracle match
-    cell-for-cell. Nodes without in-edges hold the teleport floor
+    graph: each contribution is quantized to 1e-18 integer units
+    (functions/numeric.funits) and the units are summed exactly as
+    DECIMAL(38,0), making every rank bit-reproducible across
+    partitionings — the same rule that lets an unrolled chained-CTE DuckDB
+    oracle match cell-for-cell. Nodes without in-edges hold the teleport floor
     (1-d)/N; dangling nodes (no out-edges) leak mass — acceptable for
     ranking use; add a dangling-redistribution term if mass conservation
     matters.
@@ -130,15 +131,14 @@ def pagerank(
     base = (1.0 - damping) / n
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     for _ in range(n_iters):
-        # r10 legacy conversion: each contribution quantizes to 1e-18
-        # integer units via funits (pinned floor-implemented rounding —
-        # the old decimal(27,18) cast of the rank/deg double was the
-        # refuted build-surface class) and sums exactly in DECIMAL(38,0);
-        # one IEEE division recovers the double. Note (ADVICE r10):
-        # rank/deg can approach 1.0, where abs(x)*1e18 exceeds funits'
-        # 2^53 exactness bound — the quantization there is DETERMINISTIC
-        # (identical IEEE ops on both engines, sweep-verified green), not
-        # exact HALF_UP; only the SUM of the quantized units is exact.
+        # each contribution quantizes to 1e-18 integer units via funits
+        # (pinned floor-implemented rounding; a decimal(27,18) cast of the
+        # rank/deg double would be build surface) and sums exactly in
+        # DECIMAL(38,0); one IEEE division recovers the double. rank/deg
+        # can approach 1.0, where abs(x)*1e18 exceeds funits' 2^53
+        # exactness bound: the quantization there is deterministic
+        # (identical IEEE ops on both engines, checked by the oracle), not
+        # exact HALF_UP; only the sum of the quantized units is exact.
         contrib = (
             e.join(out_deg, "_src")
             .join(ranks.withColumnRenamed("node", "_src"), "_src")

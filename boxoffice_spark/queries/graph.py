@@ -80,10 +80,11 @@ def g_pagerank_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph from lineitem (both directions, so mass circulates), top-20
     nodes — the domain/source importance-weighting shape used to
     prioritize crawl sources. Iterative driver loop (operators/graph.
-    pagerank): one edge join + one decimal-summed aggregate per round,
-    lineage truncated per round; the unrolled chained-CTE oracle checks
-    every rank cell-for-cell, which only works because contribution sums
-    are order-independent (decimal) on both engines."""
+    pagerank): one edge join + one exactly summed aggregate per round
+    (funits integer units summed as DECIMAL(38,0)), lineage truncated per
+    round; the unrolled chained-CTE oracle checks every rank
+    cell-for-cell, which only works because contribution sums are
+    order-independent on both engines."""
     from boxoffice_spark.operators.graph import pagerank
 
     li = table(spark, sf_dir, "lineitem")
@@ -97,8 +98,8 @@ def g_pagerank_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pulling the FULL node set through one partition for a global
     # row_number window. The rank column is then assigned over just the 20
     # survivors — a 20-row window is free at any corpus scale.
-    # r10 legacy conversion: fround pins the 12dp display grid (round is
-    # build surface; the rank chain itself is decimal-summed/IEEE-exact).
+    # fround pins the 12dp display grid (round is build surface; the rank
+    # chain itself sums integer units exactly).
     top = (
         ranks.withColumn("rank", fround(F.col("rank"), 12))
         .orderBy(F.desc("rank"), F.asc("node"))

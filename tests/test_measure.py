@@ -73,6 +73,36 @@ def test_every_timed_job_is_in_the_query_group(spark):
     assert set(sc.statusTracker().getJobIdsForGroup(name)) == timed
 
 
+def test_time_query_counts_jobs_stages_and_tasks(spark):
+    """4 map tasks shuffled into 3 partitions: under AQE the map stage runs
+    as its own job, then the result job runs the 3 reduce tasks and skips
+    the already-computed map stage."""
+    name = "test_measure.counts"
+    t = measure.time_query(spark, name, lambda: spark.range(0, 100, 1, 4).repartition(3), runs=2)
+    assert (t.jobs, t.stages, t.tasks) == (4, 4, 14)
+    # a later call under the same name counts only its own jobs
+    t = measure.time_query(spark, name, lambda: spark.range(0, 100, 1, 4), runs=1)
+    assert (t.jobs, t.stages, t.tasks) == (1, 1, 4)
+
+
+@pytest.mark.parametrize(
+    "steals, kept",
+    [
+        ([10], 0),  # one pass
+        ([10, 5], 0),  # both trusted: pass 2 is JIT-warm, keep pass 1
+        ([10, 900], 0),  # only pass 1 trusted
+        ([900, 10], 1),  # only pass 2 trusted
+        ([900, 600], 0),  # neither trusted: lower steal does not win
+        ([None, None], 0),  # steal unknown
+        ([None, 10], 1),  # pass 1 unknown counts as untrusted
+    ],
+)
+def test_bench_kept_pass(steals, kept):
+    import bench
+
+    assert bench.kept_pass([{"steal_delta": s} for s in steals]) == kept
+
+
 def test_contention_snapshot_and_trust():
     snap = measure.contention()
     assert isinstance(snap["steal_jiffies"], int)  # every Linux host has /proc/stat

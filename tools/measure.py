@@ -9,7 +9,9 @@ probes all measure through this module.
   it ran stays under ``STEAL_TRUST_JIFFIES`` (``trusted``).
 - ``time_query`` runs a query ``runs`` times into the noop sink (full
   execution, no driver-side collect in the timing). Run 1 pays one-time
-  whole-stage-codegen compilation; later runs measure the data path.
+  whole-stage-codegen compilation; later runs measure the data path. It
+  also counts the jobs, stages and tasks the runs launched, so fixed
+  per-task overhead shows next to the seconds it costs.
 """
 
 from __future__ import annotations
@@ -70,6 +72,9 @@ class Timing:
     build: list[float]  # per run: build() = plan assembly plus any eager work
     exec: list[float]  # per run: execution into the noop sink
     steal_delta: int | None  # over all runs
+    jobs: int  # over all runs, builds included
+    stages: int  # completed stages (a skipped, reused stage is not counted)
+    tasks: int  # completed tasks
 
     @property
     def cold(self) -> float:
@@ -99,6 +104,7 @@ def time_query(spark, name: str, build: Callable, runs: int = 2, fresh: bool = F
     from boxoffice_spark.functions.caching import release_all
 
     sc = spark.sparkContext
+    earlier = set(sc.statusTracker().getJobIdsForGroup(name))
     before = contention()
     builds, execs = [], []
     try:
@@ -116,4 +122,20 @@ def time_query(spark, name: str, build: Callable, runs: int = 2, fresh: bool = F
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return Timing(builds, execs, steal_delta(before, contention()))
+    steal = steal_delta(before, contention())
+    return Timing(builds, execs, steal, *_group_counts(sc, name, earlier))
+
+
+def _group_counts(sc, group: str, earlier: set[int]) -> tuple[int, int, int]:
+    """Jobs, completed stages and completed tasks under ``group``, leaving
+    out the ``earlier`` jobs of a previous call with the same name."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
+    store = jsc.statusStore()
+    jobs = [j for j in sc.statusTracker().getJobIdsForGroup(group) if j not in earlier]
+    stages = tasks = 0
+    for jid in jobs:
+        jd = store.job(jid)
+        stages += jd.numCompletedStages()
+        tasks += jd.numCompletedTasks()
+    return len(jobs), stages, tasks
