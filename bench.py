@@ -37,11 +37,11 @@ is value + build_total.
 
 Contention self-defense: this box shows minute-scale hypervisor CPU
 steal storms. If the first warm pass accrues 500 or more steal jiffies,
-or load average was > 2 before the Spark session started, the ENTIRE
-warm pass re-runs once (cache cleared first). Pass 2 runs on a JIT-warm
-JVM, so it is kept only when pass 1 is untrusted and pass 2 is trusted
-(``kept_pass``); both passes' contention markers and totals are recorded
-under ``contention.passes`` so nothing is hidden. ``contention.trusted``
+the ENTIRE warm pass re-runs once (cache cleared first). Pass 2 runs on a
+JIT-warm JVM, so it is kept only when pass 1 is untrusted and pass 2 is
+trusted (``kept_pass``); a retry for any other reason could never be
+kept, so there is none. Both passes' contention markers and totals are
+recorded under ``contention.passes`` so nothing is hidden. ``contention.trusted``
 (also on the compact line) says whether the kept pass stayed under that
 threshold; it is false when steal could not be read. On a quiet box
 exactly one pass runs.
@@ -85,9 +85,6 @@ def main() -> None:
     from boxoffice_spark.registry import load_all
     from boxoffice_spark.testing import engine_fingerprint
 
-    # the retry trigger's load is read before the session starts, so this
-    # run's own JVM start-up and warm-up do not count toward it
-    start_load = measure.contention().get("loadavg_1m", 0.0)
     spark = measure.start_session("boxoffice_spark_bench")
     specs = load_all()
     headline = {n: s for n, s in specs.items() if s.bench}
@@ -121,7 +118,7 @@ def main() -> None:
 
     _timed_pass()
     sd0 = passes[0]["steal_delta"]
-    if (sd0 is not None and not measure.trusted(sd0)) or start_load > 2.0:
+    if sd0 is not None and not measure.trusted(sd0):
         spark.catalog.clearCache()
         _timed_pass()
     kept = kept_pass(passes)

@@ -96,10 +96,11 @@ def pagerank(
     authority; the harmonic-centrality idea behind Common Crawl's domain
     ranking, as a Spark loop).
 
-    A driver loop of DataFrames like connected_components: per round,
-    contributions rank/out_degree flow along edges and re-aggregate per
-    destination — one join + one shuffle per iteration, partial-agg
-    friendly, lineage truncated per round. FIXED iterations (no
+    A Python loop of DataFrames like connected_components. The distinct
+    edges are built once, each carrying its source's out-degree; per round,
+    contributions rank/out_degree flow along them (one join with the ranks)
+    and one aggregate per destination sums them, partial-agg friendly,
+    lineage truncated per round. FIXED iterations (no
     convergence check) so the result is a deterministic function of the
     graph: each contribution is quantized to 1e-18 integer units
     (functions/numeric.funits) and the units are summed exactly as
@@ -112,9 +113,12 @@ def pagerank(
     """
     from boxoffice_spark.functions.numeric import funits
 
+    # distinct edges with the source's out-degree, counted by a window over
+    # the distinct rows so they are scanned once
     e = (
         edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
         .distinct()
+        .withColumn("_deg", F.count("*").over(Window.partitionBy("_src")))
         .localCheckpoint()
     )
     nodes = (
@@ -127,9 +131,11 @@ def pagerank(
     if n == 0:
         # empty edge list → empty ranking (not ZeroDivisionError on 1/n)
         return nodes.select("node", F.lit(0.0).alias("rank"))
-    out_deg = e.groupBy("_src").agg(F.count("*").alias("_deg")).localCheckpoint()
     base = (1.0 - damping) / n
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
+    # one zero row per node: a node with no in-edge sums to 0 and gets
+    # base + d*0.0 == base, with no join back to the node list
+    zeros = nodes.select("node", F.lit(0).cast("decimal(38,0)").alias("_cu"))
     for _ in range(n_iters):
         # each contribution quantizes to 1e-18 integer units via funits
         # (pinned floor-implemented rounding; a decimal(27,18) cast of the
@@ -139,35 +145,26 @@ def pagerank(
         # exactness bound: the quantization there is deterministic
         # (identical IEEE ops on both engines, checked by the oracle), not
         # exact HALF_UP; only the sum of the quantized units is exact.
-        contrib = (
-            e.join(out_deg, "_src")
-            .join(ranks.withColumnRenamed("node", "_src"), "_src")
-            .select(
-                F.col("_dst").alias("node"),
-                funits(F.col("rank") / F.col("_deg"), 18).alias("_cu"),
-            )
-        )
-        inflow = contrib.groupBy("node").agg(
-            (
-                F.lit(base)
-                + F.lit(damping)
-                * (
-                    F.sum(F.col("_cu").cast("decimal(38,0)")).cast("double")
-                    / 1e18
-                )
-            ).alias("rank")
+        contrib = e.join(ranks.withColumnRenamed("node", "_src"), "_src").select(
+            F.col("_dst").alias("node"),
+            funits(F.col("rank") / F.col("_deg"), 18).cast("decimal(38,0)").alias("_cu"),
         )
         # eager=False truncates the lineage but does not defer the work:
         # under AQE, building the checkpoint's RDD runs every shuffle stage
         # of the round, so nearly all of PageRank executes here, at
-        # construction: on a 200-edge graph each round adds 8 jobs to the
-        # build and none to the caller's collect, and g_pagerank_authority
-        # on the benchmark's seed-2 inputs runs 26 jobs in its build
-        # against 1 in the collect. The chain is sequential, so each round
-        # still materializes exactly once.
+        # construction: each round adds 4 jobs to the build and none to the
+        # caller's collect, and g_pagerank_authority on the benchmark's
+        # seed-2 inputs runs 14 jobs in its build against 1 in the collect.
+        # The chain is sequential, so each round still materializes once.
         ranks = (
-            nodes.join(inflow, "node", "left")
-            .select("node", F.coalesce("rank", F.lit(base)).alias("rank"))
+            contrib.union(zeros)
+            .groupBy("node")
+            .agg(
+                (
+                    F.lit(base)
+                    + F.lit(damping) * (F.sum("_cu").cast("double") / 1e18)
+                ).alias("rank")
+            )
             .localCheckpoint(eager=False)
         )
     return ranks

@@ -71,6 +71,17 @@ def get_spark(app_name: str = "boxoffice_spark", shuffle_partitions: int | None 
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        # Tungsten page size; read once, when the SparkContext starts.
+        # Spark's default is nextPow2(execution pool / cores / 16), capped
+        # at 64 MiB, and every hash aggregate, sort or hashed-relation build
+        # allocates a full page on its first record, which the JVM zeroes:
+        # a 1,000-row groupBy held a 64 MiB page. TaskMemoryManager
+        # addresses 8,192 pages per task (past that it throws "Have already
+        # allocated a maximum of 8192 pages"); at 4 MiB a task still reaches
+        # 32 GiB, more than one core's execution share of any executor with
+        # under about 53 GiB of heap per core. A record larger than a page
+        # gets a page of its own size.
+        .config("spark.buffer.pageSize", "4m")
     )
     for k, v in _BASE_CONF.items():
         builder = builder.config(k, v)

@@ -4,6 +4,7 @@ measures on (tools/sf1_probe.generate)."""
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 from pathlib import Path
@@ -80,9 +81,33 @@ def test_time_query_counts_jobs_stages_and_tasks(spark):
     name = "test_measure.counts"
     t = measure.time_query(spark, name, lambda: spark.range(0, 100, 1, 4).repartition(3), runs=2)
     assert (t.jobs, t.stages, t.tasks) == (4, 4, 14)
+    assert t.peak_exec_mb == 0  # a plain repartition holds no execution memory
     # a later call under the same name counts only its own jobs
     t = measure.time_query(spark, name, lambda: spark.range(0, 100, 1, 4), runs=1)
     assert (t.jobs, t.stages, t.tasks) == (1, 1, 4)
+    # an aggregate holds its hash map's page
+    t = measure.time_query(spark, name, lambda: spark.range(0, 100, 1, 1).groupBy("id").count(), runs=1)
+    assert t.peak_exec_mb > 0
+
+
+def test_peak_memory_skips_evicted_stages():
+    """Past spark.ui.retainedStages the status store evicts skipped stages
+    first, so a job's stage ids can name a stage the store no longer has.
+    Needs its own SparkContext with a small retention, so it runs in a
+    subprocess."""
+    code = (
+        "from pyspark.sql import SparkSession\n"
+        "from tools import measure\n"
+        "spark = (SparkSession.builder.master('local[2]').config('spark.ui.enabled', 'false')\n"
+        "         .config('spark.ui.retainedStages', '20').getOrCreate())\n"
+        "for i in range(15):\n"
+        "    t = measure.time_query(spark, f'q{i}', lambda: spark.range(0, 100, 1, 4).repartition(3))\n"
+        "assert (t.jobs, t.stages, t.tasks, t.peak_exec_mb) == (4, 4, 14, 0), t\n"
+        "spark.stop()\n"
+    )
+    env = {**os.environ, "SPARK_LOCAL_IP": "127.0.0.1"}
+    proc = subprocess.run([sys.executable, "-c", code], cwd=REPO, env=env, capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-3000:]
 
 
 @pytest.mark.parametrize(

@@ -5,7 +5,8 @@ them (the first plan that *passes* is not necessarily the plan you *want*).
 - dimension joins must stay broadcast (no fact-side shuffle),
 - filters must reach the parquet scan (PushedFilters),
 - projections must prune the scan schema (ReadSchema),
-- single-shuffle aggregates must stay single-shuffle.
+- single-shuffle aggregates must stay single-shuffle,
+- PageRank's loop keeps its job count per round.
 """
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ import re
 import pytest
 
 from boxoffice_spark.registry import load_all
+from tools import measure
 
 SPECS = load_all()
 
@@ -153,6 +155,22 @@ def test_pagerank_topk_takeordered_not_global_window(spark, sf_dir):
     FULL node set would pull every node through one partition."""
     plan = physical(SPECS["g_pagerank_authority"].fn(spark, sf_dir))
     assert "TakeOrderedAndProject" in plan, plan
+
+
+def test_pagerank_build_jobs(spark):
+    """The weighted edge list (distinct edges with their source's
+    out-degree) is built once, and each round is one join with the ranks
+    and one aggregate: 4 jobs a round under AQE."""
+    from boxoffice_spark.operators.graph import pagerank
+
+    edges = [(0, i) for i in range(1, 6)] + [(i, 0) for i in range(1, 6)] + [(1, 2)]
+    star = spark.createDataFrame(edges, "src long, dst long")
+    three, five = (
+        measure.time_query(spark, f"test_plans.pagerank{n}", lambda: pagerank(star, n_iters=n), runs=1).jobs
+        for n in (3, 5)
+    )
+    assert five - three <= 2 * 4, (three, five)
+    assert three <= 21, three  # measured: 19 build jobs and the noop write
 
 
 def test_boilerplate_units_takeordered(spark, sf_dir):

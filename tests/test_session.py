@@ -1,10 +1,16 @@
 """Session-level invariants: scoped caches survive a cleared cache, string
-case mapping does not follow the JVM's default locale, and partition
-discovery lists with one task per core."""
+case mapping does not follow the JVM's default locale, partition
+discovery lists with one task per core, and Tungsten consumers take 4 MiB
+pages without losing rows larger than a page."""
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark import StorageLevel
+from pyspark.sql import functions as F
+
+from tools import measure
 
 LISTING_PARALLELISM = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
 
@@ -84,3 +90,45 @@ def test_partition_discovery_lists_with_one_task_per_core(spark, tmp_path):
         assert dict(df.dtypes) == {"id": "bigint", "part": "int"}, how
         rows = df.collect()
         assert sorted((r.id, r.part) for r in rows) == [(i, i % 40) for i in range(400)], how
+
+
+def test_tungsten_page_is_4_mib(spark):
+    assert spark._jsc.sc().env().memoryManager().pageSizeBytes() == 4 * 2**20
+
+
+def test_small_aggregate_holds_one_small_page(spark):
+    """A hash aggregate allocates a whole page on its first row; with
+    Spark's default page size a 1,000-row groupBy held 64 MiB."""
+    t = measure.time_query(
+        spark,
+        "test_session.small_agg",
+        lambda: spark.range(0, 1000, 1, 1).groupBy((F.col("id") % 10).alias("k")).count(),
+        runs=1,
+    )
+    assert 0 < t.peak_exec_mb <= 8
+
+
+def test_row_larger_than_a_page_survives_group_by_and_sort(spark):
+    """A 6 MiB row does not fit a 4 MiB page; the hash map and the sorter
+    then allocate a page of the row's own size."""
+    n = 6 * 2**20 // 4
+    big = spark.range(0, 3, 1, 1).select(
+        "id", F.expr(f"repeat(concat('ab', CAST(id AS STRING)), {n})").alias("s")
+    )
+    want = {i: hashlib.md5((f"ab{i}" * n).encode()).hexdigest() for i in range(3)}
+    grouped = big.groupBy("s").agg(F.max("id").alias("id")).select("id", F.md5("s").alias("h"))
+    assert {r.id: r.h for r in grouped.collect()} == want
+    ordered = big.orderBy(F.desc("s")).select("id", F.md5("s").alias("h"), F.length("s").alias("n"))
+    assert [(r.id, r.h, r.n) for r in ordered.collect()] == [(i, want[i], 3 * n) for i in (2, 1, 0)]
+
+
+def test_multi_page_aggregate_is_exact(spark):
+    """500k groups fill several 4 MiB pages in one task."""
+    n = 500_000
+
+    def agg():
+        return spark.range(0, n, 1, 1).groupBy("id").agg(F.sum(F.col("id") * 3).alias("s"))
+
+    assert measure.time_query(spark, "test_session.multi_page_agg", agg, runs=1).peak_exec_mb > 4
+    row = agg().agg(F.count("*").alias("c"), F.sum("s").alias("t")).first()
+    assert (row.c, row.t) == (n, 3 * n * (n - 1) // 2)

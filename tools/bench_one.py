@@ -6,7 +6,8 @@ Usage:
 Times a subset of queries with bench.py's methodology (``measure.time_query``:
 noop sink, run-1 cold / best-of-N warm, build timed separately) so an
 optimization loop doesn't pay for the whole headline suite. Each line also
-gives the jobs, stages and tasks the runs launched (builds included). With
+gives the jobs, stages and tasks the runs launched (builds included) and
+the largest stage's peak execution memory. With
 ``--plan OUTDIR`` the ``explain('formatted')`` text of each query is also
 written to ``OUTDIR/<query>.txt`` (the plan artifacts under plans/).
 """
@@ -44,7 +45,8 @@ def main() -> None:
         print(
             f"{name}: warm={t.warm:.3f} cold={t.cold:.3f} "
             f"build={min(t.build):.3f} runs={[round(r, 3) for r in t.exec]} "
-            f"jobs={t.jobs} stages={t.stages} tasks={t.tasks} steal+{t.steal_delta}",
+            f"jobs={t.jobs} stages={t.stages} tasks={t.tasks} "
+            f"peak_exec_mb={t.peak_exec_mb:.1f} steal+{t.steal_delta}",
             flush=True,
         )
         if args.plan:

@@ -11,7 +11,8 @@ probes all measure through this module.
   execution, no driver-side collect in the timing). Run 1 pays one-time
   whole-stage-codegen compilation; later runs measure the data path. It
   also counts the jobs, stages and tasks the runs launched, so fixed
-  per-task overhead shows next to the seconds it costs.
+  per-task overhead shows next to the seconds it costs, and reads the
+  largest stage's peak execution memory (hash tables, sort buffers).
 """
 
 from __future__ import annotations
@@ -75,6 +76,7 @@ class Timing:
     jobs: int  # over all runs, builds included
     stages: int  # completed stages (a skipped, reused stage is not counted)
     tasks: int  # completed tasks
+    peak_exec_mb: float  # largest stage peakExecutionMemory, summed over its tasks
 
     @property
     def cold(self) -> float:
@@ -126,16 +128,22 @@ def time_query(spark, name: str, build: Callable, runs: int = 2, fresh: bool = F
     return Timing(builds, execs, steal, *_group_counts(sc, name, earlier))
 
 
-def _group_counts(sc, group: str, earlier: set[int]) -> tuple[int, int, int]:
-    """Jobs, completed stages and completed tasks under ``group``, leaving
-    out the ``earlier`` jobs of a previous call with the same name."""
+def _group_counts(sc, group: str, earlier: set[int]) -> tuple[int, int, int, float]:
+    """Jobs, completed stages, completed tasks and the largest stage peak
+    execution memory (MiB) under ``group``, leaving out the ``earlier`` jobs
+    of a previous call with the same name."""
     jsc = sc._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
-    store = jsc.statusStore()
-    jobs = [j for j in sc.statusTracker().getJobIdsForGroup(group) if j not in earlier]
-    stages = tasks = 0
+    store, tracker = jsc.statusStore(), sc.statusTracker()
+    jobs = [j for j in tracker.getJobIdsForGroup(group) if j not in earlier]
+    stages = tasks = peak = 0
     for jid in jobs:
         jd = store.job(jid)
         stages += jd.numCompletedStages()
         tasks += jd.numCompletedTasks()
-    return len(jobs), stages, tasks
+        for sid in tracker.getJobInfo(jid).stageIds:
+            # past spark.ui.retainedStages the store evicts skipped stages
+            # (no completion time, no tasks, no memory) first
+            if tracker.getStageInfo(sid) is not None:
+                peak = max(peak, store.lastStageAttempt(sid).peakExecutionMemory())
+    return len(jobs), stages, tasks, peak / 2**20
