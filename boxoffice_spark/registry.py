@@ -150,13 +150,9 @@ _PINNED = [
     "t_hybrid_rrf_search",
 ]
 
-# The round-7 deferrals (j_asof_nearest, w_activity_heatmap,
-# t_bpe_pair_stats, v_int8_quantization_report, e_surrogate_keys) are all
-# pinned in the round-8 window above — the deferral queue is empty.
 # A test (tests/test_registry.py) asserts every name in _PINNED exists in
 # the registry, so the list cannot drift. The per-batch history lives in
 # COVERAGE.md (single table).
-_DEFERRED: list[str] = []
 
 
 def register(

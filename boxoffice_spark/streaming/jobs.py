@@ -16,7 +16,7 @@ and nothing else changes.
 
 from __future__ import annotations
 
-import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -74,20 +74,79 @@ def _events_stream(
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def _run_to_completion(result: DataFrame, mode: str) -> DataFrame:
-    """Drive a bounded stream to completion into a memory sink and return
-    the materialized table. availableNow = process everything then stop
-    (the reference's catch-up semantics, T1)."""
-    name = "s_" + uuid.uuid4().hex[:12]
+def _each(fn: Callable, state):
+    """Apply ``fn`` to a state frame, or to each frame of a state tuple."""
+    return tuple(fn(f) for f in state) if isinstance(state, tuple) else fn(state)
+
+
+def _drain(stream: DataFrame, step: Callable, mode: str = "append"):
+    """Drain a bounded stream with ``availableNow`` (process everything,
+    then stop: the reference's catch-up semantics, T1), folding each
+    micro-batch into state: ``state = step(batch, state)``, with ``state``
+    None before the first batch and a DataFrame or a tuple of them after.
+    Returns the final state, or None if no batch ran.
+
+    The foreachBatch function runs in this driver process, so the closure
+    holds the state between batches: no catalog object carries it, and
+    nothing is left registered when the drain ends or a batch fails. The
+    batch frame is only valid inside its callback, so every state frame
+    is localCheckpointed there, which also keeps lineage from growing by
+    one batch per micro-batch. Batch frames belong to the query's own
+    session, a clone of the caller's with AQE switched off, so the final
+    state is handed back in the caller's session: a union with an empty
+    frame of that session, which the optimizer removes (PruneFilters,
+    PropagateEmptyRelation)."""
+    home = stream.sparkSession
+    state = None
+
+    def fold(batch: DataFrame, batch_id: int) -> None:
+        nonlocal state
+        state = _each(lambda f: f.localCheckpoint(), step(batch, state))
+
     q = (
-        result.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
+        stream.writeStream.outputMode(mode)
+        .foreachBatch(fold)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
-    return result.sparkSession.table(name)
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+    if state is None:
+        return None
+    return _each(
+        lambda f: home.createDataFrame([], f.schema).where("false").unionByName(f), state
+    )
+
+
+def _run_to_completion(result: DataFrame, mode: str) -> DataFrame:
+    """Drain a bounded stream and return its output table. A complete-mode
+    batch holds the whole result, so the last one is kept; append-mode
+    batches are unioned."""
+    if mode == "complete":
+        out = _drain(result, lambda batch, prev: batch, mode)
+    else:
+        out = _drain(
+            result,
+            lambda batch, prev: batch if prev is None else prev.unionByName(batch),
+            mode,
+        )
+    return result.sparkSession.createDataFrame([], result.schema) if out is None else out
+
+
+def _upsert(*keys: str) -> Callable:
+    """The drain step for an update-mode aggregate: each update row carries
+    its key's FULL new total, so replace the changed keys and keep the
+    rest. The standing table is then correct after any number of
+    micro-batches."""
+
+    def step(update: DataFrame, prev: DataFrame | None) -> DataFrame:
+        if prev is None:
+            return update
+        return prev.join(update.select(*keys), list(keys), "left_anti").unionByName(update)
+
+    return step
 
 
 def tumbling_window_stream(
@@ -279,24 +338,22 @@ def stream_corpus_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ingest-drift monitor: the incoming document stream's
-    per-language mix is compared against the STATIC standing-corpus mix,
-    emitting PSI terms per micro-batch via ``foreachBatch`` — the
-    monitoring twin of the batch gate dq_distribution_drift
-    (queries/quality.py), and the foreachBatch pattern for metrics whose
-    formula needs a static-side join AFTER a streaming aggregation
-    (stream-static joins are not allowed downstream of a streaming agg,
-    but inside foreachBatch each update is a plain batch DataFrame).
+    per-language mix is compared against the STATIC standing-corpus mix
+    as PSI terms — the monitoring twin of the batch gate
+    dq_distribution_drift (queries/quality.py), and the pattern for
+    metrics whose formula needs a static-side join AFTER a streaming
+    aggregation (stream-static joins are not allowed downstream of a
+    streaming agg, but the drained counts are a plain batch DataFrame).
 
     The stream aggregates per-language counts in update mode; each batch
-    MERGES the changed languages' counts into a standing count view first
+    MERGES the changed languages' counts into the standing counts
     (update-mode batches carry only changed languages, each with its full
-    updated total), then recomputes EVERY language's PSI term from the
-    merged count table — so denominators are always global, never the
-    current update's partial sum, and the table is correct after any
-    number of micro-batches (maxFilesPerTrigger=1 forces one batch per
-    input file). After the availableNow drain the final table equals the
-    batch query's output exactly — asserted in tests/test_streaming.py
-    for both the single-file and the split-file (multi-batch) layouts.
+    updated total), so the counts are correct after any number of
+    micro-batches (maxFilesPerTrigger=1 forces one batch per input file).
+    EVERY language's PSI term is then computed once from the drained
+    counts, so denominators are global and the table equals the batch
+    query's output exactly — asserted in tests/test_streaming.py for both
+    the single-file and the split-file (multi-batch) layouts.
     """
     from pyspark.sql import Window
 
@@ -312,88 +369,44 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("long").alias("n_batch")
         )
     )
-    # localCheckpoint once: the static side is identical for every
-    # micro-batch — without it the closure would re-run the corpus
-    # aggregation per batch (lazy plan captured in foreachBatch).
     corpus = (
         spark.read.option("pathGlobFilter", "documents*.parquet")
         .parquet(sf_dir)
         .filter(F.col("doc_id") % 10 != 0)
         .groupBy("lang")
         .agg(F.count("*").cast("long").alias("n_corpus"))
-        .localCheckpoint()
     )
-    name = "s_drift_" + uuid.uuid4().hex[:12]
-    counts_name = name + "_counts"
-
-    def emit_psi(update: DataFrame, batch_id: int) -> None:
-        # 1) merge this update's per-language counts into the standing count
-        # view (replace changed languages, keep the rest). foreachBatch runs
-        # in a CLONED session, so the handoff must be a GLOBAL temp view
-        # (plain temp views die with the micro-batch session). Existence is
-        # checked explicitly — a bare try/except here would silently reset
-        # the standing counts on any OTHER failure (lost checkpoint blocks,
-        # concurrent replace), recreating the partial-denominator bug class.
-        s = update.sparkSession
-        if s.catalog.tableExists(f"global_temp.{counts_name}"):
-            prev = s.table(f"global_temp.{counts_name}")
-            merged = prev.join(update.select("lang"), "lang", "left_anti").unionByName(
-                update
-            )
-        else:
-            merged = update
-        merged = merged.localCheckpoint()
-        merged.createOrReplaceGlobalTempView(counts_name)
-        # 2) recompute ALL psi terms from the merged counts — global
-        # denominators every batch, so intermediate tables are internally
-        # consistent and the final one matches the batch query exactly.
-        w = Window.partitionBy()
-        joined = merged.join(corpus, "lang", "full_outer").select(
-            "lang",
-            F.coalesce("n_corpus", F.lit(0)).alias("n_corpus"),
-            F.coalesce("n_batch", F.lit(0)).alias("n_batch"),
-        )
-        p = F.col("n_corpus").cast("double") / F.sum("n_corpus").over(w)
-        q = F.col("n_batch").cast("double") / F.sum("n_batch").over(w)
-        # zero-count guard mirrors quality.psi_drift_terms: NULL psi_term
-        # = one-sided language = alert, never log(0)
-        term = F.when(
-            (F.col("n_corpus") > 0) & (F.col("n_batch") > 0),
-            F.round((q - p) * F.log(q / p), 6),
-        )
-        out = joined.select("lang", "n_corpus", "n_batch", term.alias("psi_term"))
-        out.localCheckpoint().createOrReplaceGlobalTempView(name)
-
-    q = (
-        batch_counts.writeStream.outputMode("update")
-        .foreachBatch(emit_psi)
-        .trigger(availableNow=True)
-        .start()
+    merged = _drain(batch_counts, _upsert("lang"), "update")
+    # ALL psi terms from the merged counts: global denominators, never the
+    # last update's partial sum, so the table matches the batch query
+    w = Window.partitionBy()
+    joined = merged.join(corpus, "lang", "full_outer").select(
+        "lang",
+        F.coalesce("n_corpus", F.lit(0)).alias("n_corpus"),
+        F.coalesce("n_batch", F.lit(0)).alias("n_batch"),
     )
-    q.awaitTermination()
-    # hand back the (tiny, already-checkpointed) final table and DROP the
-    # handoff views — repeated monitor calls must not accumulate
-    # uuid-named global temp views in a long-lived session
-    out = spark.table(f"global_temp.{name}").localCheckpoint()
-    spark.catalog.dropGlobalTempView(name)
-    spark.catalog.dropGlobalTempView(counts_name)
-    return out
+    p = F.col("n_corpus").cast("double") / F.sum("n_corpus").over(w)
+    q = F.col("n_batch").cast("double") / F.sum("n_batch").over(w)
+    # zero-count guard mirrors quality.psi_drift_terms: NULL psi_term
+    # = one-sided language = alert, never log(0)
+    term = F.when(
+        (F.col("n_corpus") > 0) & (F.col("n_batch") > 0),
+        F.round((q - p) * F.log(q / p), 6),
+    )
+    return joined.select("lang", "n_corpus", "n_batch", term.alias("psi_term"))
 
 
 def stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of v_embedding_drift: the incoming embedding stream's
     per-label centroid is tracked incrementally and compared against the
-    STATIC standing-corpus centroid per micro-batch. Same multi-batch-safe
-    foreachBatch pattern as stream_drift_monitor: the update-mode stream
-    aggregates per-(label, dim) decimal sums + counts (each update row
-    carries the full new total for its key), each batch MERGES changed
-    keys into a standing sum view, then recomputes EVERY label's shift
-    from the merged sums — so intermediate tables always use complete
-    totals, and after the drain the final table equals the batch query
-    exactly (asserted in tests/test_streaming.py, single- and split-file
-    layouts). State is O(labels x dims) — independent of stream length."""
-    from boxoffice_spark.functions.numeric import dsum
-
+    STATIC standing-corpus centroid. Same multi-batch-safe pattern as
+    stream_drift_monitor: the update-mode stream aggregates per-(label,
+    dim) decimal sums + counts (each update row carries the full new total
+    for its key), each batch MERGES changed keys into the standing sums,
+    and EVERY label's shift is computed once from the drained sums — so
+    the table equals the batch query exactly (asserted in
+    tests/test_streaming.py, single- and split-file layouts). State is
+    O(labels x dims) — independent of stream length."""
     schema = "vec_id long, embedding array<float>, label int"
     raw = (
         spark.readStream.schema(schema)
@@ -411,10 +424,6 @@ def stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(dsum("val", 9).alias("s_batch"), F.count("*").alias("n_batch"))
     )
     static = spark.read.option("pathGlobFilter", "embeddings*.parquet").parquet(sf_dir)
-    # localCheckpoint once: the static-side posexplode + aggregate over the
-    # WHOLE corpus would otherwise re-execute inside every micro-batch (the
-    # lazy plan is captured by the foreachBatch closure) — the expensive
-    # side here, unlike the PSI monitor's tiny per-lang counts.
     corpus_dims = (
         static.filter(F.col("vec_id") % 10 != 0)
         .select(
@@ -426,70 +435,41 @@ def stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             (dsum("val", 9) / F.count("val")).alias("cm"),
             F.count("*").alias("n_corpus"),
         )
-        .localCheckpoint()
     )
-    name = "s_edrift_" + uuid.uuid4().hex[:12]
-    sums_name = name + "_sums"
-
-    def emit_shift(update: DataFrame, batch_id: int) -> None:
-        # explicit existence check (not try/except): any OTHER read failure
-        # must propagate, not silently reset the standing sums
-        s = update.sparkSession
-        if s.catalog.tableExists(f"global_temp.{sums_name}"):
-            prev = s.table(f"global_temp.{sums_name}")
-            merged = prev.join(
-                update.select("label", "dim"), ["label", "dim"], "left_anti"
-            ).unionByName(update)
-        else:
-            merged = update
-        merged = merged.localCheckpoint()
-        merged.createOrReplaceGlobalTempView(sums_name)
-        # FULL OUTER on (label, dim): a label with no batch vectors (or no
-        # corpus vectors) must still emit its row — with count 0 and a NULL
-        # shift — exactly as the batch twin's conditional aggregates do; an
-        # inner join would silently drop one-sided labels.
-        per_dim = merged.join(corpus_dims, ["label", "dim"], "full_outer").select(
-            "label",
-            "dim",
-            "cm",
-            (F.col("s_batch") / F.col("n_batch")).alias("bm"),
-            "n_corpus",
-            "n_batch",
-        )
-        shift = (F.col("cm") - F.col("bm")) * (F.col("cm") - F.col("bm"))
-        out = (
-            per_dim.groupBy("label")
-            .agg(
-                # per-dim counts are all equal; coalesce covers one-sided labels
-                F.coalesce(F.max("n_corpus"), F.lit(0)).alias("n_corpus"),
-                F.coalesce(F.max("n_batch"), F.lit(0)).cast("long").alias("n_batch"),
-                F.round(dsum(shift, 12), 9).alias("centroid_shift_sq"),
-            )
-            .select("label", "n_corpus", "n_batch", "centroid_shift_sq")
-        )
-        out.localCheckpoint().createOrReplaceGlobalTempView(name)
-
-    q = (
-        batch_sums.writeStream.outputMode("update")
-        .foreachBatch(emit_shift)
-        .trigger(availableNow=True)
-        .start()
+    merged = _drain(batch_sums, _upsert("label", "dim"), "update")
+    # FULL OUTER on (label, dim): a label with no batch vectors (or no
+    # corpus vectors) must still emit its row — with count 0 and a NULL
+    # shift — exactly as the batch twin's conditional aggregates do; an
+    # inner join would silently drop one-sided labels.
+    per_dim = merged.join(corpus_dims, ["label", "dim"], "full_outer").select(
+        "label",
+        "dim",
+        "cm",
+        (F.col("s_batch") / F.col("n_batch")).alias("bm"),
+        "n_corpus",
+        "n_batch",
     )
-    q.awaitTermination()
-    out = spark.table(f"global_temp.{name}").localCheckpoint()
-    spark.catalog.dropGlobalTempView(name)
-    spark.catalog.dropGlobalTempView(sums_name)
-    return out
+    shift = (F.col("cm") - F.col("bm")) * (F.col("cm") - F.col("bm"))
+    return (
+        per_dim.groupBy("label")
+        .agg(
+            # per-dim counts are all equal; coalesce covers one-sided labels
+            F.coalesce(F.max("n_corpus"), F.lit(0)).alias("n_corpus"),
+            F.coalesce(F.max("n_batch"), F.lit(0)).cast("long").alias("n_batch"),
+            F.round(dsum(shift, 12), 9).alias("centroid_shift_sq"),
+        )
+        .select("label", "n_corpus", "n_batch", "centroid_shift_sq")
+    )
 
 
 def stream_completeness_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of dq_completeness_by_day: the incoming event
     stream's per-day quality counters, maintained across micro-batches
-    with the same merge-by-key foreachBatch pattern as
-    stream_drift_monitor. The update-mode aggregation emits the FULL new
-    totals for each changed day, so the merge is replace-changed-days —
-    the standing table is correct after any number of micro-batches and
-    after the availableNow drain equals the batch query exactly on the
+    with the same merge-by-key pattern as stream_drift_monitor. The
+    update-mode aggregation emits the FULL new totals for each changed
+    day, so the merge is replace-changed-days (``_upsert``) — the standing
+    table is correct after any number of micro-batches and after the
+    availableNow drain equals the batch query exactly on the
     exact-counter columns (asserted in tests/test_streaming.py, single-
     and split-file layouts).
 
@@ -519,42 +499,21 @@ def stream_completeness_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("value").alias("_n_value_present"),
         F.hll_sketch_agg("user_id").alias("_users_sketch"),
     )
-    name = "s_complete_" + uuid.uuid4().hex[:12]
-
-    def emit(update: DataFrame, batch_id: int) -> None:
-        s = update.sparkSession
-        if s.catalog.tableExists(f"global_temp.{name}"):
-            prev = s.table(f"global_temp.{name}")
-            merged = prev.join(update.select("day"), "day", "left_anti").unionByName(update)
-        else:
-            merged = update
-        merged.localCheckpoint().createOrReplaceGlobalTempView(name)
-
-    q = (
-        daily.writeStream.outputMode("update")
-        .foreachBatch(emit)
-        .trigger(availableNow=True)
-        .start()
+    merged = _drain(daily, _upsert("day"), "update")
+    if merged is None:
+        merged = spark.createDataFrame([], daily.schema)
+    return merged.select(
+        "day",
+        "n_events",
+        "n_null_value",
+        "n_nonpos_value",
+        "n_empty_props",
+        "n_error_events",
+        F.round(
+            F.col("_n_value_present").cast("double") / F.col("n_events"), 6
+        ).alias("value_completeness"),
+        F.hll_sketch_estimate("_users_sketch").alias("n_users_approx"),
     )
-    q.awaitTermination()
-    out = (
-        spark.table(f"global_temp.{name}")
-        .select(
-            "day",
-            "n_events",
-            "n_null_value",
-            "n_nonpos_value",
-            "n_empty_props",
-            "n_error_events",
-            F.round(
-                F.col("_n_value_present").cast("double") / F.col("n_events"), 6
-            ).alias("value_completeness"),
-            F.hll_sketch_estimate("_users_sketch").alias("n_users_approx"),
-        )
-        .localCheckpoint()
-    )
-    spark.catalog.dropGlobalTempView(name)
-    return out
 
 
 def stream_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -575,8 +534,8 @@ def stream_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     qualifying pair is generated exactly when its later endpoint arrives,
     an intra-cluster duplicate pair is a no-op in the merge, and the
     quotient merge preserves min-labels — so the fixpoint is order-
-    independent. The same foreachBatch global-temp-view handoff (and
-    explicit existence check) as stream_drift_monitor.
+    independent. A source with no matching files gives an empty
+    labeling.
     """
     from boxoffice_spark.operators.dedup import (
         SIMHASH_MAX_HAMMING,
@@ -593,29 +552,20 @@ def stream_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(sf_dir)
         .select("doc_id", "text")
     )
-    name = "s_clusters_" + uuid.uuid4().hex[:12]
-    fp_name = name + "_fp"
+    no_labels = spark.createDataFrame([], "node long, cluster_id long")
 
     def postings_of(sh: DataFrame) -> DataFrame:
         # shared chunking expression (operators/dedup.simhash_chunk_postings)
         # so the streaming probe and the batch pair generator cannot drift
         return simhash_chunk_postings(sh, ["doc_id"])
 
-    def merge_batch(update: DataFrame, batch_id: int) -> None:
-        s = update.sparkSession
+    def merge_batch(update: DataFrame, prev: tuple | None) -> tuple:
         bsh = simhash(update, "doc_id", "text").select("doc_id", "simhash").localCheckpoint()
-        if s.catalog.tableExists(f"global_temp.{fp_name}"):
-            standing_fp = s.table(f"global_temp.{fp_name}")
-        else:
-            standing_fp = bsh.limit(0)
-        if s.catalog.tableExists(f"global_temp.{name}"):
-            labels = s.table(f"global_temp.{name}")
-        else:
-            labels = s.createDataFrame([], "node long, cluster_id long")
+        labels, standing_fp = prev or (no_labels, None)
         # batch postings probe seen-so-far INCLUDING the batch itself, so
         # intra-batch pairs are caught; unordered dedup collapses the
         # doubled intra-batch candidates
-        union_fp = standing_fp.unionByName(bsh)
+        union_fp = bsh if standing_fp is None else standing_fp.unionByName(bsh)
         cand = (
             postings_of(bsh)
             .alias("a")
@@ -632,20 +582,11 @@ def stream_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = cand.filter(
             F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))) <= SIMHASH_MAX_HAMMING
         ).select("id_a", "id_b")
-        new_labels = incremental_components(labels, pairs, "id_a", "id_b").localCheckpoint()
-        new_labels.createOrReplaceGlobalTempView(name)
-        union_fp.localCheckpoint().createOrReplaceGlobalTempView(fp_name)
+        return incremental_components(labels, pairs, "id_a", "id_b"), union_fp
 
-    q = (
-        raw.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table(f"global_temp.{name}").localCheckpoint()
-    spark.catalog.dropGlobalTempView(name)
-    spark.catalog.dropGlobalTempView(fp_name)
-    return out.select(F.col("node").alias("doc_id"), "cluster_id")
+    state = _drain(raw, merge_batch)
+    labels = no_labels if state is None else state[0]
+    return labels.select(F.col("node").alias("doc_id"), "cluster_id")
 
 
 def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -654,8 +595,8 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (goods_event upsert cadence -> dimension history -> as-of read,
     movie_events_scraper.py feeding the dashboard's historical view):
     each micro-batch of signup change events is MERGED into a standing
-    validity-interval table via ``foreachBatch``, the algebraic MERGE
-    INTO a warehouse runs per CDC increment.
+    validity-interval table, the algebraic MERGE INTO a warehouse runs
+    per CDC increment.
 
     Per batch (a plain batch DataFrame inside foreachBatch):
 
@@ -678,7 +619,7 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_streaming.py.
 
     State size: the standing table is the dimension history itself
-    (O(changes)), held as a checkpointed global-temp view locally; on a
+    (O(changes)), held as a checkpointed frame on the driver; on a
     cluster the same merge writes a keyed table (foreachBatch + MERGE
     INTO on Delta/Iceberg) and nothing else changes.
     """
@@ -688,12 +629,8 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes = raw.filter(F.col("event_type") == "signup").select(
         "user_id", "ts", "event_id", F.col("value").alias("attr_value")
     )
-    name = "s_scd2_" + uuid.uuid4().hex[:12]
 
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        if not batch.head(1):
-            return
+    def merge_batch(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         w = Window.partitionBy("user_id").orderBy("ts", "event_id")
         nxt = F.lead("ts").over(w)
         frag = batch.select(
@@ -703,47 +640,31 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             nxt.isNull().alias("is_current"),
             "attr_value",
         )
+        if prev is None:
+            return frag
         firsts = batch.groupBy("user_id").agg(F.min("ts").alias("_first_ts"))
-        if s.catalog.tableExists(f"global_temp.{name}"):
-            prev = s.table(f"global_temp.{name}")
-            open_rows = prev.filter(F.col("is_current"))
-            closed_now = (
-                open_rows.join(firsts, "user_id")
-                .select(
-                    "user_id",
-                    "valid_from",
-                    F.col("_first_ts").alias("valid_to"),
-                    F.lit(False).alias("is_current"),
-                    "attr_value",
-                )
+        open_rows = prev.filter(F.col("is_current"))
+        closed_now = (
+            open_rows.join(firsts, "user_id")
+            .select(
+                "user_id",
+                "valid_from",
+                F.col("_first_ts").alias("valid_to"),
+                F.lit(False).alias("is_current"),
+                "attr_value",
             )
-            untouched_open = open_rows.join(firsts, "user_id", "left_anti")
-            merged = (
-                prev.filter(~F.col("is_current"))
-                .unionByName(closed_now)
-                .unionByName(untouched_open)
-                .unionByName(frag)
-            )
-        else:
-            merged = frag
-        merged.localCheckpoint().createOrReplaceGlobalTempView(name)
-
-    q = (
-        changes.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not spark.catalog.tableExists(f"global_temp.{name}"):
-        # feed had no change rows at all: an empty dimension, not an error
-        return spark.createDataFrame(
-            [],
-            "user_id long, valid_from timestamp, valid_to timestamp, "
-            "is_current boolean, attr_value double",
         )
-    out = spark.table(f"global_temp.{name}").localCheckpoint()
-    spark.catalog.dropGlobalTempView(name)
-    return out
+        untouched_open = open_rows.join(firsts, "user_id", "left_anti")
+        return (
+            prev.filter(~F.col("is_current"))
+            .unionByName(closed_now)
+            .unionByName(untouched_open)
+            .unionByName(frag)
+        )
+
+    # the events.parquet probe guarantees at least one batch; a feed with
+    # no change rows drains to an empty dimension, not an error
+    return _drain(changes, merge_batch)
 
 
 def stream_kmv_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -751,7 +672,7 @@ def stream_kmv_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the incremental twin of the a_kmv_overlap estimator
     (operators/sketch): each micro-batch's distinct (type, element)
     hashes are unioned into a standing k-min sketch table and re-selected
-    down to k rows per group inside ``foreachBatch``.
+    down to k rows per group.
 
     The merge needs NO ordering contract at all — k-min selection is
     associative, commutative and idempotent (the k smallest of a union
@@ -774,31 +695,21 @@ def stream_kmv_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k = 64
     raw = _events_stream(spark, sf_dir, glob="events*.parquet", max_files=1)
-    name = "s_kmv_" + uuid.uuid4().hex[:12]
 
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
+    def merge(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         upd = batch.select(
             F.col("event_type"),
             kmv_hash(
                 F.concat_ws(":", F.col("user_id"), F.to_date("ts"))
             ).alias("h"),
         ).distinct()
-        if s.catalog.tableExists(f"global_temp.{name}"):
-            upd = s.table(f"global_temp.{name}").unionByName(upd).distinct()
-        kmv_kmin(upd, ["event_type"], "h", k).localCheckpoint(
-        ).createOrReplaceGlobalTempView(name)
+        if prev is not None:
+            upd = prev.unionByName(upd).distinct()
+        return kmv_kmin(upd, ["event_type"], "h", k)
 
-    q = (
-        raw.writeStream.outputMode("append")
-        .foreachBatch(merge)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sk = spark.table(f"global_temp.{name}")
-    out = (
-        sk.groupBy("event_type")
+    return (
+        _drain(raw, merge)
+        .groupBy("event_type")
         .agg(F.count("*").alias("n_sketch"), F.max("h").alias("kth_hash"))
         .select(
             "event_type",
@@ -809,16 +720,13 @@ def stream_kmv_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("est_distinct"),
         )
         .orderBy("event_type")
-        .localCheckpoint()
     )
-    spark.catalog.dropGlobalTempView(name)
-    return out
 
 
 def stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming maintenance of the first-order Markov transition matrix —
     the incremental twin of w_event_transitions. Two pieces of standing
-    state in ``foreachBatch``:
+    state:
 
     1. the transition COUNTS table (from_type, to_type, n) — counts are
        additive, so per-batch increments merge by summation;
@@ -842,16 +750,11 @@ def stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw = _events_stream(spark, sf_dir, glob="events*.parquet", max_files=1)
     ev = raw.select("user_id", "ts", "event_id", "event_type")
-    cname = "s_trans_counts_" + uuid.uuid4().hex[:12]
-    lname = "s_trans_last_" + uuid.uuid4().hex[:12]
 
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        if not batch.head(1):
-            return
+    def merge_batch(batch: DataFrame, prev: tuple | None) -> tuple:
         w = Window.partitionBy("user_id").orderBy("ts", "event_id")
         wd = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-        within = (
+        increments = (
             batch.select(
                 "user_id",
                 F.col("event_type").alias("from_type"),
@@ -861,18 +764,20 @@ def stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("from_type", "to_type")
             .agg(F.count("*").alias("n"))
         )
-        firsts = (
-            batch.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("user_id", F.col("event_type").alias("_first_type"))
-        )
         lasts = (
             batch.withColumn("_rn", F.row_number().over(wd))
             .filter(F.col("_rn") == 1)
             .select("user_id", "ts", "event_id", "event_type")
         )
-        if s.catalog.tableExists(f"global_temp.{lname}"):
-            standing_last = s.table(f"global_temp.{lname}")
+        if prev is None:
+            new_last = lasts
+        else:
+            counts, standing_last = prev
+            firsts = (
+                batch.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1)
+                .select("user_id", F.col("event_type").alias("_first_type"))
+            )
             boundary = (
                 standing_last.select(
                     "user_id", F.col("event_type").alias("from_type")
@@ -881,45 +786,27 @@ def stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("from_type", F.col("_first_type").alias("to_type"))
                 .agg(F.count("*").alias("n"))
             )
-            increments = within.unionByName(boundary)
+            increments = counts.unionByName(increments).unionByName(boundary)
             new_last = (
                 standing_last.join(lasts.select("user_id"), "user_id", "left_anti")
                 .unionByName(lasts)
             )
-        else:
-            increments = within
-            new_last = lasts
-        if s.catalog.tableExists(f"global_temp.{cname}"):
-            increments = s.table(f"global_temp.{cname}").unionByName(increments)
         counts = increments.groupBy("from_type", "to_type").agg(
             F.sum("n").alias("n")
         )
-        counts.localCheckpoint().createOrReplaceGlobalTempView(cname)
-        new_last.localCheckpoint().createOrReplaceGlobalTempView(lname)
+        return counts, new_last
 
-    q = ev.writeStream.foreachBatch(merge_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
-    if not spark.catalog.tableExists(f"global_temp.{cname}"):
-        return spark.createDataFrame(
-            [], "from_type string, to_type string, n_transitions long, p_transition double"
-        )
-    counts = spark.table(f"global_temp.{cname}")
+    # the events.parquet probe guarantees at least one batch
+    counts, _ = _drain(ev, merge_batch)
     norm = Window.partitionBy("from_type")
-    out = (
-        counts.select(
-            "from_type",
-            "to_type",
-            F.col("n").alias("n_transitions"),
-            F.round(
-                F.col("n").cast("double") / F.sum("n").over(norm), 6
-            ).alias("p_transition"),
-        )
-        .orderBy("from_type", "to_type")
-        .localCheckpoint()
-    )
-    spark.catalog.dropGlobalTempView(cname)
-    spark.catalog.dropGlobalTempView(lname)
-    return out
+    return counts.select(
+        "from_type",
+        "to_type",
+        F.col("n").alias("n_transitions"),
+        F.round(
+            F.col("n").cast("double") / F.sum("n").over(norm), 6
+        ).alias("p_transition"),
+    ).orderBy("from_type", "to_type")
 
 
 def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -954,38 +841,24 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(sf_dir)
     )
-    name = "s_hh_" + uuid.uuid4().hex[:12]
 
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
+    def merge(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         toks = batch.select(F.explode(TS.words_of("text")).alias("term"))
         upd = _mg_candidates(toks, "term", capacity).distinct()
-        if s.catalog.tableExists(f"global_temp.{name}"):
-            upd = s.table(f"global_temp.{name}").unionByName(upd).distinct()
-        upd.localCheckpoint().createOrReplaceGlobalTempView(name)
+        return upd if prev is None else prev.unionByName(upd).distinct()
 
-    q = (
-        raw.writeStream.outputMode("append")
-        .foreachBatch(merge)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not spark.catalog.tableExists(f"global_temp.{name}"):
-        # no matching files -> foreachBatch never fired; empty readout
-        # (same guard as the quantile/reconcile twins)
+    cands = _drain(raw, merge)
+    if cands is None:
+        # no matching files -> no batch ran; empty readout
         return spark.createDataFrame(
             [], "term string, term_count bigint, frac double"
         )
-    cands = spark.table(f"global_temp.{name}")
     corpus_toks = (
         spark.read.option("pathGlobFilter", "documents*.parquet")
         .parquet(sf_dir)
         .select(F.explode(TS.words_of("text")).alias("term"))
     )
-    out = exact_recount(corpus_toks, cands, "term", phi).localCheckpoint()
-    spark.catalog.dropGlobalTempView(name)
-    return out
+    return exact_recount(corpus_toks, cands, "term", phi)
 
 
 # Equi-width histogram contract for the streaming quantile sketch: bin
@@ -1064,7 +937,7 @@ def stream_quantile_histogram_merge(spark: SparkSession, sf_dir: str) -> DataFra
     quantile sketches — the mergeable-quantile member of the sketch
     family (KMV distinct, HLL rollup, Misra-Gries heavy hitters, and now
     quantiles): each micro-batch's (type, bin) counts ADD into a standing
-    histogram inside ``foreachBatch``; p50/p95 read off the drained
+    histogram; p50/p95 read off the drained
     histogram by cumulative interpolation with a hard two-bin-width error
     bound (QH_ERR_BOUND).
 
@@ -1081,10 +954,8 @@ def stream_quantile_histogram_merge(spark: SparkSession, sf_dir: str) -> DataFra
     is what makes a quantile readout possible without ever re-sorting
     history — the streaming substitute for percentile() at 100 TB."""
     raw = _events_stream(spark, sf_dir, glob="events*.parquet", max_files=1)
-    name = "s_qh_" + uuid.uuid4().hex[:12]
 
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
+    def merge(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         upd = (
             batch.select(
                 "event_type",
@@ -1093,32 +964,16 @@ def stream_quantile_histogram_merge(spark: SparkSession, sf_dir: str) -> DataFra
             .groupBy("event_type", "bin")
             .agg(F.count("*").alias("cnt"))
         )
-        if s.catalog.tableExists(f"global_temp.{name}"):
-            upd = (
-                s.table(f"global_temp.{name}")
-                .unionByName(upd)
-                .groupBy("event_type", "bin")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        upd.localCheckpoint().createOrReplaceGlobalTempView(name)
-
-    q = (
-        raw.writeStream.outputMode("append")
-        .foreachBatch(merge)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not spark.catalog.tableExists(f"global_temp.{name}"):
-        return spark.createDataFrame(
-            [],
-            "event_type string, n_rows long, n_bins long, est_p50 double, "
-            "est_p95 double, err_bound double",
+        if prev is None:
+            return upd
+        return (
+            prev.unionByName(upd)
+            .groupBy("event_type", "bin")
+            .agg(F.sum("cnt").alias("cnt"))
         )
-    hist = spark.table(f"global_temp.{name}")
-    out = quantile_hist_readout(hist).localCheckpoint()
-    spark.catalog.dropGlobalTempView(name)
-    return out
+
+    # the events.parquet probe guarantees at least one batch
+    return quantile_hist_readout(_drain(raw, merge))
 
 
 # only the columns the job touches: parquet readStream prunes to the
@@ -1134,8 +989,8 @@ def stream_reconcile_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming maintenance of the header-vs-detail reconciliation
     (queries/quality.dq_order_lineitem_reconcile's twin): line items
     arrive as a file stream and each micro-batch's per-order detail
-    sums ADD into a standing (order, detail_decimal, n_lines) table
-    inside ``foreachBatch``; at drain the standing table joins the
+    sums ADD into a standing (order, detail_decimal, n_lines) table;
+    at drain the standing table joins the
     header scan once and emits the identical bucket report. Decimal
     addition is associative/commutative, so the drained per-order sums
     — and therefore every bucket decision and money total — equal the
@@ -1153,10 +1008,8 @@ def stream_reconcile_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(sf_dir)
     )
-    name = "s_rec_" + uuid.uuid4().hex[:12]
 
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
+    def merge(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         upd = batch.groupBy("l_orderkey").agg(
             F.sum(
                 (
@@ -1167,34 +1020,25 @@ def stream_reconcile_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("li_dec"),
             F.count("*").alias("n_lines"),
         )
-        if s.catalog.tableExists(f"global_temp.{name}"):
-            upd = (
-                s.table(f"global_temp.{name}")
-                .unionByName(upd)
-                .groupBy("l_orderkey")
-                .agg(
-                    F.sum("li_dec").alias("li_dec"),
-                    F.sum("n_lines").alias("n_lines"),
-                )
+        if prev is None:
+            return upd
+        return (
+            prev.unionByName(upd)
+            .groupBy("l_orderkey")
+            .agg(
+                F.sum("li_dec").alias("li_dec"),
+                F.sum("n_lines").alias("n_lines"),
             )
-        upd.localCheckpoint().createOrReplaceGlobalTempView(name)
+        )
 
-    q = (
-        raw.writeStream.outputMode("append")
-        .foreachBatch(merge)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    sums = _drain(raw, merge)
     from boxoffice_spark.tables import table as _table
 
     o = _table(spark, sf_dir, "orders")
-    if spark.catalog.tableExists(f"global_temp.{name}"):
-        li = spark.table(f"global_temp.{name}").select(
-            "l_orderkey", F.col("li_dec").cast("double").alias("li_total")
-        )
-    else:
+    if sums is None:
         li = spark.createDataFrame([], "l_orderkey long, li_total double")
+    else:
+        li = sums.select("l_orderkey", F.col("li_dec").cast("double").alias("li_total"))
     j = o.join(li, o.o_orderkey == li.l_orderkey, "left")
     gap = F.abs(F.col("o_totalprice") - F.col("li_total"))
     bucket = (
@@ -1203,7 +1047,7 @@ def stream_reconcile_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(gap <= 0.10 * F.col("o_totalprice"), "within_10pct")
         .otherwise("gap_over_10pct")
     )
-    out = (
+    return (
         j.select(
             F.col("o_orderstatus").alias("status"),
             bucket.alias("bucket"),
@@ -1228,8 +1072,4 @@ def stream_reconcile_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("detail_total"),
         )
         .orderBy("status", "bucket")
-        .localCheckpoint()
     )
-    if spark.catalog.tableExists(f"global_temp.{name}"):
-        spark.catalog.dropGlobalTempView(name)
-    return out

@@ -1,12 +1,11 @@
-"""Registry hygiene: the driver-window pin list and the deferral ledger
-must reference real registered queries (a typo'd or renamed name would
-otherwise silently fall out of the correctness window — ADVICE r06), the
-pin list must exactly fill the driver's 50-slot window, and load_all()
-must honor pin order."""
+"""Registry hygiene: the driver-window pin list must reference real
+registered queries (a typo'd or renamed name would otherwise silently
+fall out of the correctness window), the pin list must exactly fill the
+driver's 50-slot window, and load_all() must honor pin order."""
 
 from __future__ import annotations
 
-from boxoffice_spark.registry import _DEFERRED, _PINNED, load_all
+from boxoffice_spark.registry import _PINNED, load_all
 
 SPECS = load_all()
 
@@ -14,11 +13,6 @@ SPECS = load_all()
 def test_pinned_names_exist():
     missing = [n for n in _PINNED if n not in SPECS]
     assert not missing, f"_PINNED names not in registry: {missing}"
-
-
-def test_deferred_names_exist():
-    missing = [n for n in _DEFERRED if n not in SPECS]
-    assert not missing, f"_DEFERRED names not in registry: {missing}"
 
 
 def test_pinned_fills_driver_window_exactly():
@@ -30,6 +24,3 @@ def test_pins_lead_load_order():
     head = list(SPECS)[: len(_PINNED)]
     assert head == _PINNED
 
-
-def test_no_name_both_pinned_and_deferred():
-    assert not set(_PINNED) & set(_DEFERRED)

@@ -4,6 +4,11 @@ execution); streaming dedup must keep one row per key."""
 
 from __future__ import annotations
 
+import threading
+
+import pytest
+from pyspark.sql.streaming import StreamingQueryListener
+
 from boxoffice_spark.queries.incremental import i_tumbling_window
 from boxoffice_spark.streaming.jobs import (
     streaming_dedup_first_per_key,
@@ -23,7 +28,7 @@ def _pin_file_order(*paths):
     writes can land on the SAME mtime (filesystem granularity), making
     micro-batch order a coin flip. Order-dependent twins (CDC/SCD2,
     transitions, first-arrival dedup) document "batches arrive in event
-    order" — the fixture must actually guarantee it (VERDICT r05 item 2).
+    order" — the fixture must actually guarantee it.
     """
     import os
     import time
@@ -32,6 +37,44 @@ def _pin_file_order(*paths):
     for i, p in enumerate(paths):
         t = base + 30 * i
         os.utime(str(p), (t, t))
+
+
+@pytest.fixture
+def batches(spark):
+    """Records the micro-batches of the streaming queries started during
+    the test. Call the yielded function after the job returns: it waits
+    for a query's termination event (listener events arrive
+    asynchronously, and a query's progress events precede its
+    termination) and returns [(batchId, numInputRows)] of the batches
+    that read rows. A split-file test asserts two or more, so a glob or
+    mtime slip that folds both files into one batch cannot pass
+    unnoticed."""
+    started: set[str] = set()
+    progress: list[tuple[int, int]] = []
+    terminated = threading.Event()
+
+    class Recorder(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            started.add(str(event.id))
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            if str(p.id) in started and p.numInputRows > 0:
+                progress.append((p.batchId, p.numInputRows))
+
+        def onQueryTerminated(self, event):
+            if str(event.id) in started:
+                terminated.set()
+
+    recorder = Recorder()
+    spark.streams.addListener(recorder)
+
+    def read() -> list[tuple[int, int]]:
+        assert terminated.wait(60), "no termination event for the drained query"
+        return list(progress)
+
+    yield read
+    spark.streams.removeListener(recorder)
 
 
 def test_tumbling_stream_equals_batch(spark, sf_dir):
@@ -200,7 +243,7 @@ def test_stream_embedding_drift_equals_batch(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
-def test_stream_embedding_drift_multi_batch(spark, sf_dir, tmp_path):
+def test_stream_embedding_drift_multi_batch(spark, sf_dir, tmp_path, batches):
     """Split the embeddings across two files -> two update-mode
     micro-batches; the merged sums must still reproduce the batch result
     (the stale-denominator bug class for the vector gate)."""
@@ -215,6 +258,8 @@ def test_stream_embedding_drift_multi_batch(spark, sf_dir, tmp_path):
     _pin_file_order(tmp_path / "embeddings.parquet", tmp_path / "embeddings_2.parquet")
 
     got = sorted(map(tuple, stream_embedding_drift(spark, str(tmp_path)).collect()))
+    ran = batches()
+    assert len(ran) >= 2, ran
 
     # batch expected over the SAME two-file layout, same formula
     from pyspark.sql import functions as F
@@ -321,7 +366,7 @@ def test_stock_poll_stateful_equals_latest_state_view_semantics(spark):
     assert got == want and len(got) == n_events * n_theaters
 
 
-def test_stream_drift_monitor_multi_batch(spark, sf_dir, tmp_path):
+def test_stream_drift_monitor_multi_batch(spark, sf_dir, tmp_path, batches):
     """Split the documents table across two files so maxFilesPerTrigger=1
     forces TWO update-mode micro-batches; the merged PSI table must still
     equal the batch formula over the full set — this is exactly the
@@ -341,6 +386,8 @@ def test_stream_drift_monitor_multi_batch(spark, sf_dir, tmp_path):
     _pin_file_order(tmp_path / "documents.parquet", tmp_path / "documents_2.parquet")
 
     got = sorted(map(tuple, stream_drift_monitor(spark, str(tmp_path)).collect()))
+    ran = batches()
+    assert len(ran) >= 2, ran
     full = spark.read.option("pathGlobFilter", "documents*.parquet").parquet(
         str(tmp_path)
     )
@@ -371,7 +418,7 @@ def test_stream_completeness_equals_batch(spark, sf_dir):
         assert abs(approx[day] - n) <= max(0.05 * n, 2), (day, approx[day], n)
 
 
-def test_stream_completeness_multi_batch(spark, sf_dir, tmp_path):
+def test_stream_completeness_multi_batch(spark, sf_dir, tmp_path, batches):
     """Two event files -> two update-mode micro-batches; days straddle the
     split so batch 2 UPDATES days batch 1 already emitted — the merged
     table must still equal the batch formula over the full set."""
@@ -396,6 +443,8 @@ def test_stream_completeness_multi_batch(spark, sf_dir, tmp_path):
         "n_empty_props", "n_error_events", "value_completeness",
     ]
     got = sorted(map(tuple, stream_completeness_monitor(spark, str(tmp_path)).select(*cols).collect()))
+    ran = batches()
+    assert len(ran) >= 2, ran
     full = spark.read.option("pathGlobFilter", "events*.parquet").parquet(str(tmp_path))
     want = sorted(map(tuple, completeness_by_day(full).select(*cols).collect()))
     assert got == want and len(got) > 0
@@ -413,7 +462,7 @@ def test_stream_cluster_maintenance_equals_batch(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
-def test_stream_cluster_maintenance_multi_batch(spark, sf_dir, tmp_path):
+def test_stream_cluster_maintenance_multi_batch(spark, sf_dir, tmp_path, batches):
     """Split the documents across two files -> maxFilesPerTrigger=1 forces
     two micro-batches, so cross-batch pairs exercise the standing-table
     probe and the label remap (a merge that missed cross-batch pairs or
@@ -432,6 +481,8 @@ def test_stream_cluster_maintenance_multi_batch(spark, sf_dir, tmp_path):
     _pin_file_order(tmp_path / "documents.parquet", tmp_path / "documents_2.parquet")
 
     got = sorted(map(tuple, stream_cluster_maintenance(spark, str(tmp_path)).collect()))
+    ran = batches()
+    assert len(ran) >= 2, ran
     # batch twin over BOTH files (t_dedup_clusters' fixture loader reads
     # the single canonical file, the stream reads the glob)
     docs = spark.read.option("pathGlobFilter", "documents*.parquet").parquet(str(tmp_path))
@@ -478,7 +529,7 @@ def test_stream_scd2_equals_batch_history_and_asof(spark, sf_dir):
     assert got_asof == want_asof
 
 
-def test_stream_scd2_multi_batch_time_ordered_split(spark, sf_dir, tmp_path):
+def test_stream_scd2_multi_batch_time_ordered_split(spark, sf_dir, tmp_path, batches):
     """Split the events table into two files AT THE MEDIAN ts (the CDC
     ordering contract: a key's changes never arrive after a later change
     was absorbed); maxFilesPerTrigger=1 forces two micro-batches, so the
@@ -511,6 +562,8 @@ def test_stream_scd2_multi_batch_time_ordered_split(spark, sf_dir, tmp_path):
     got = sorted(
         map(tuple, stream_scd2_maintenance(spark, str(split_dir)).select(*cols).collect())
     )
+    ran = batches()
+    assert len(ran) >= 2, ran
     want = sorted(
         map(tuple, e_scd2_history(spark, str(full_dir)).select(*cols).collect())
     )
@@ -554,7 +607,7 @@ def test_stream_kmv_merge_equals_batch(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
-def test_stream_kmv_merge_multi_batch_any_split(spark, sf_dir, tmp_path):
+def test_stream_kmv_merge_multi_batch_any_split(spark, sf_dir, tmp_path, batches):
     """Interleaved odd/even split -> two micro-batches whose groups and
     elements straddle the split arbitrarily; the merged sketch must STILL
     equal the batch sketch exactly — k-min merge needs no ordering
@@ -574,6 +627,8 @@ def test_stream_kmv_merge_multi_batch_any_split(spark, sf_dir, tmp_path):
     _pin_file_order(tmp_path / "events.parquet", tmp_path / "events_2.parquet")
 
     got = sorted(map(tuple, stream_kmv_sketch_merge(spark, str(tmp_path)).collect()))
+    ran = batches()
+    assert len(ran) >= 2, ran
     full = spark.read.option("pathGlobFilter", "events*.parquet").parquet(str(tmp_path))
     from pyspark.sql import functions as F, types as T
 
@@ -594,7 +649,7 @@ def test_stream_transitions_equals_batch(spark, sf_dir):
     assert got == want
 
 
-def test_stream_transitions_multi_batch_boundary_steps(spark, sf_dir, tmp_path):
+def test_stream_transitions_multi_batch_boundary_steps(spark, sf_dir, tmp_path, batches):
     """Split the event log at the median ts into two files
     (maxFilesPerTrigger=1 -> two micro-batches). Every user active on
     both sides of the cut contributes a boundary transition that
@@ -626,6 +681,8 @@ def test_stream_transitions_multi_batch_boundary_steps(spark, sf_dir, tmp_path):
     got = sorted(
         map(tuple, stream_event_transitions(spark, str(split_dir)).collect())
     )
+    ran = batches()
+    assert len(ran) >= 2, ran
     want = sorted(
         map(tuple, w_event_transitions(spark, str(full_dir)).collect())
     )
@@ -650,7 +707,7 @@ def test_stream_heavy_hitters_equals_batch(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
-def test_stream_heavy_hitters_multi_batch_any_split(spark, sf_dir, tmp_path):
+def test_stream_heavy_hitters_multi_batch_any_split(spark, sf_dir, tmp_path, batches):
     """Interleaved odd/even split -> two micro-batches whose term mass
     straddles the split arbitrarily. The candidate-superset argument is
     order-free (pigeonhole per unit), so the drained result must STILL
@@ -672,6 +729,8 @@ def test_stream_heavy_hitters_multi_batch_any_split(spark, sf_dir, tmp_path):
     got = sorted(
         map(tuple, stream_heavy_hitters(spark, str(tmp_path)).collect())
     )
+    ran = batches()
+    assert len(ran) >= 2, ran
     # the odd/even split PARTITIONS the source table, so the batch twin
     # over the original single file sees the identical token multiset
     # (tables.table does not glob — sf_dir is the equivalent corpus)
@@ -680,16 +739,87 @@ def test_stream_heavy_hitters_multi_batch_any_split(spark, sf_dir, tmp_path):
     assert even.num_rows > 0 and odd.num_rows > 0
 
 
-def test_stream_heavy_hitters_empty_source_returns_empty(spark, tmp_path):
-    """A source dir with no documents*.parquet files means foreachBatch
-    never fires; the drain must return an empty typed frame, not raise on
-    the missing global-temp view (ADVICE r06 — the guard the
-    quantile/reconcile twins already had)."""
-    from boxoffice_spark.streaming.jobs import stream_heavy_hitters
+_EMPTY_SOURCE_COLUMNS = {
+    "stream_heavy_hitters": ["term", "term_count", "frac"],
+    "stream_completeness_monitor": [
+        "day", "n_events", "n_null_value", "n_nonpos_value",
+        "n_empty_props", "n_error_events", "value_completeness", "n_users_approx",
+    ],
+    "stream_cluster_maintenance": ["doc_id", "cluster_id"],
+}
 
-    out = stream_heavy_hitters(spark, str(tmp_path))
+
+@pytest.mark.parametrize("job", sorted(_EMPTY_SOURCE_COLUMNS))
+def test_stream_empty_source_returns_empty(spark, tmp_path, job):
+    """A source dir with no matching files means no micro-batch runs; a
+    job that needs no file besides its stream must return its empty typed
+    frame, not raise."""
+    from boxoffice_spark.streaming import jobs
+
+    out = getattr(jobs, job)(spark, str(tmp_path))
+    assert out.columns == _EMPTY_SOURCE_COLUMNS[job]
     assert out.count() == 0
-    assert out.columns == ["term", "term_count", "frac"]
+
+
+def test_stream_failed_batch_leaves_nothing_behind(spark, sf_dir, tmp_path, monkeypatch):
+    """A merge that raises on the second of two micro-batches must surface
+    as StreamingQueryException with its own message, stop the query, and
+    leave no catalog object behind."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.errors import StreamingQueryException
+
+    from boxoffice_spark.operators import sketch
+    from boxoffice_spark.streaming.jobs import stream_kmv_sketch_merge
+
+    t = pq.read_table(f"{sf_dir}/events.parquet")
+    idx = pa.array(range(t.num_rows))
+    pq.write_table(t.filter(pc.equal(pc.bit_wise_and(idx, 1), 0)), str(tmp_path / "events.parquet"))
+    pq.write_table(t.filter(pc.equal(pc.bit_wise_and(idx, 1), 1)), str(tmp_path / "events_2.parquet"))
+    _pin_file_order(tmp_path / "events.parquet", tmp_path / "events_2.parquet")
+
+    real, calls = sketch.kmv_kmin, []
+
+    def kmin_failing_on_batch_1(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("kmv merge failed on batch 1")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(sketch, "kmv_kmin", kmin_failing_on_batch_1)
+
+    def global_views():
+        return {r.tableName for r in spark.sql("SHOW TABLES IN global_temp").collect()}
+
+    before = global_views()
+    with pytest.raises(StreamingQueryException, match="kmv merge failed on batch 1"):
+        stream_kmv_sketch_merge(spark, str(tmp_path))
+    assert len(calls) == 2
+    assert spark.streams.active == []
+    assert global_views() - before == set()
+
+
+def test_drained_jobs_leave_no_temp_views(spark, sf_dir):
+    """Repeated calls of a job must not register anything in the session:
+    its result is the drained frame itself, not a named sink table."""
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    for _ in range(2):
+        assert tumbling_window_stream(spark, sf_dir).count() > 0
+    assert temp_views() == before
+
+
+def test_drained_frame_belongs_to_callers_session(spark, sf_dir):
+    """Micro-batches run in the query's own session, a clone with AQE
+    off; a job's result must come back in the caller's session."""
+    from boxoffice_spark.streaming.jobs import stream_completeness_monitor
+
+    for out in (tumbling_window_stream(spark, sf_dir), stream_completeness_monitor(spark, sf_dir)):
+        assert out.sparkSession is spark
 
 
 def _batch_quantile_hist(ev):
@@ -723,7 +853,7 @@ def test_stream_quantile_merge_equals_batch(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
-def test_stream_quantile_merge_multi_batch_any_split(spark, sf_dir, tmp_path):
+def test_stream_quantile_merge_multi_batch_any_split(spark, sf_dir, tmp_path, batches):
     """Interleaved odd/even split -> two micro-batches whose types and
     value bins straddle the split arbitrarily; the merged histogram (and
     every quantile read from it) must STILL equal the batch twin exactly
@@ -744,6 +874,8 @@ def test_stream_quantile_merge_multi_batch_any_split(spark, sf_dir, tmp_path):
     got = sorted(
         map(tuple, stream_quantile_histogram_merge(spark, str(tmp_path)).collect())
     )
+    ran = batches()
+    assert len(ran) >= 2, ran
     full = spark.read.option("pathGlobFilter", "events*.parquet").parquet(str(tmp_path))
     from pyspark.sql import functions as F, types as T
 
@@ -797,7 +929,7 @@ def test_stream_reconcile_equals_batch(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
-def test_stream_reconcile_multi_batch_any_split(spark, sf_dir, tmp_path):
+def test_stream_reconcile_multi_batch_any_split(spark, sf_dir, tmp_path, batches):
     """Interleaved odd/even line split -> two micro-batches whose ORDERS
     straddle the split (an order's lines land in both batches); the
     merged per-order decimal state must still reconcile identically."""
@@ -821,6 +953,8 @@ def test_stream_reconcile_multi_batch_any_split(spark, sf_dir, tmp_path):
     got = sorted(
         map(tuple, stream_reconcile_totals(spark, str(tmp_path)).collect())
     )
+    ran = batches()
+    assert len(ran) >= 2, ran
     # the batch twin reads {dir}/lineitem.parquet only (tables.table does
     # not glob) — run it on the ORIGINAL dir, which holds the identical
     # rows in one file
