@@ -113,7 +113,7 @@ def capped_pair_rows(
     GROUP SIZES grow with the corpus (a bucket of k verbatim copies is
     C(k,2) pairs under the cap-less form even when k is far below
     max_postings; measured alpha 1.18 on the sf1->sf10 decade probe).
-    Connectivity scope (ADVICE r09): the id-ordered successor chain keeps
+    Connectivity scope: the id-ordered successor chain keeps
     every key's posting set connected IN THE CANDIDATE GRAPH — for a
     bucket of homogeneous duplicates (the k-verbatim-copies case the cap
     targets) downstream connected-components therefore clusters
@@ -304,10 +304,9 @@ def md5_u60_sql(hex_expr: str) -> str:
     string as a 60-bit BIGINT — the digit-arithmetic twin of
     :func:`_word_hash` (strpos + BIGINT place-value constants, max term
     15*16^14 < 2^63). Unlike ``WORD_HASH_SQL``'s '0x'-prefixed
-    string->BIGINT cast, whose parse semantics vary across DuckDB builds
-    (the t_span_corruption round-7 driver red), this form is pinned on
-    every engine build — it is the construct e_surrogate_keys holds a
-    driver green on (CORRECTNESS_r08). ``hex_expr`` must be a bare column
+    string->BIGINT cast, whose parse semantics vary across DuckDB builds,
+    this form is pinned on every engine build (e_surrogate_keys matches
+    its oracle through it). ``hex_expr`` must be a bare column
     or cheap expression: it is referenced 15 times."""
     terms = " + ".join(
         f"(strpos('0123456789abcdef', substring({hex_expr}, {d}, 1)) - 1)"
@@ -317,19 +316,19 @@ def md5_u60_sql(hex_expr: str) -> str:
     return f"({terms})"
 
 
-def _norm_words_py(text: str) -> list[str]:
-    """Python twin of ``split(normalized_text(col), ' ')`` — shared by every
-    map-side Arrow kernel so JVM/DuckDB parity lives in ONE place.
+def _norm_text_py(text: str) -> str:
+    """Python twin of :func:`normalized_text`, shared by every map-side
+    Arrow kernel so JVM/DuckDB parity lives in ONE place.
 
     The whitespace class is spelled out in ASCII ([ \\t\\n\\x0b\\f\\r])
     because Java regex \\s and DuckDB/RE2 \\s are ASCII-only while
     Python's \\s is Unicode-aware — a bare r"\\s+" here would collapse a
     non-breaking space into a word boundary that the JVM form keeps
-    inside a token, silently desynchronizing the md5 shingle hashes.
+    inside a token, silently desynchronizing the md5 hashes.
     trim() in both engines strips the plain space produced by the
     collapse, so .strip(" ") (not Unicode .strip()) matches.
 
-    Locale contract (ADVICE r07): ``text.lower()`` here is Python's
+    Locale contract: ``text.lower()`` here is Python's
     locale-INDEPENDENT Unicode lowercasing, while Spark's ``lower()``
     lowers non-ASCII strings through the JVM default locale — a JVM
     running a Turkish-style locale maps 'I' -> 'ı' and silently desyncs
@@ -338,9 +337,14 @@ def _norm_words_py(text: str) -> list[str]:
     fixtures cannot catch a violation, so deployments with locale-bearing
     JVMs must pin ``user.language`` explicitly.
     """
-    import re as _re
+    import re
 
-    return _re.sub(r"[ \t\n\x0b\f\r]+", " ", text.lower()).strip(" ").split(" ")
+    return re.sub(r"[ \t\n\x0b\f\r]+", " ", text.lower()).strip(" ")
+
+
+def _norm_words_py(text: str) -> list[str]:
+    """Python twin of ``split(normalized_text(col), ' ')``."""
+    return _norm_text_py(text).split(" ")
 
 
 def _hash60_py(word: str) -> int:
@@ -405,9 +409,8 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = SIMHASH_BITS)
 
     Explode words -> per-bit signed vote -> majority -> reassemble. The
     per-bit votes are ``bits`` aggregate expressions over one exploded
-    shuffle — all codegen, no Python. At true scale a Pandas-UDF map-side
-    simhash (one pass, no explode) wins on shuffle volume; this form is the
-    oracle-exact reference implementation.
+    shuffle — all codegen, no Python (the relational core stays free of
+    Python workers), bit-exact against :func:`simhash_sql`.
 
     The vote and recombination expressions are written as SQL text: built
     one ``Column`` call at a time they took about 1,000 py4j round trips
@@ -471,8 +474,8 @@ def minhash_lsh_pairs(
     probabilistic. Rows-only check; the exact tiers are its small-scale
     oracle (tests/test_llm_ops.py asserts recall).
 
-    PAIR-OUTPUT BOUND (scale contract, r09 — the sf1->sf10 decade probe
-    measured alpha 1.18 before it): ``max_successors=16`` caps each
+    PAIR-OUTPUT BOUND (scale contract — without it the sf1->sf10 decade
+    probe measured alpha 1.18): ``max_successors=16`` caps each
     posting to its next 16 id-ordered bucket neighbors, so a bucket of k
     near-identical docs emits O(16k) candidate pairs instead of C(k,2) —
     the term that grows QUADRATICALLY in duplicate-group size even under
@@ -482,7 +485,7 @@ def minhash_lsh_pairs(
     duplicate groups stay connected through the id-ordered successor
     chain in the CANDIDATE graph, so their connected-components clusters
     are unchanged and only redundant intra-group pair mass is dropped.
-    Caveat (ADVICE r09): connectivity is pre-rerank — when one bucket
+    Caveat: connectivity is pre-rerank — when one bucket
     interleaves distinct duplicate groups (or hash collisions), the
     exact-Jaccard rerank can cut chain links through dissimilar
     bucket-mates and split a cluster the uncapped form kept, so recall
@@ -505,7 +508,7 @@ def minhash_lsh_pairs(
     # the permutation index (constant cost): xxhash64(xxhash64(g), j) is an
     # independent-enough family for banding and cuts the string-hash work
     # num_hashes-fold — at sf1 the signature scan dominated the tier's
-    # wall (alpha 0.93, the suite's worst; VERDICT r05 item 7). The
+    # wall (alpha 0.93, the suite's worst). The
     # single-string-hash signature cut the measured exponent to
     # alpha=0.61 at sf1 (SCALE_sf1.json). The concrete candidate set
     # differs (different permutation family -> different bucket
@@ -579,42 +582,6 @@ def minhash_lsh_pairs(
         .join(shb, "id_b")
         .select("id_a", "id_b", (inter.cast("double") / union).alias("jaccard_est"))
         .filter(F.col("jaccard_est") >= threshold)
-    )
-
-
-def simhash_fast(df: DataFrame, id_col: str, text_col: str, bits: int = SIMHASH_BITS) -> DataFrame:
-    """Map-side SimHash via mapInPandas: the shuffle-free twin of
-    :func:`simhash`.
-
-    The explode form shuffles one row per WORD (corpus token count) into a
-    60-aggregate groupBy; this one computes each doc's fingerprint inside
-    its scan partition in a single Arrow batch pass — zero shuffle, output
-    is one row per doc. Same bit semantics (md5-derived word hashes, each
-    occurrence votes, tie -> 0), so it shares the exact DuckDB oracle; at
-    100 TB this is the variant to run, with the explode form as its
-    cross-engine reference.
-    """
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    shifts = np.arange(bits, dtype=np.uint64)
-
-    def one(text: str) -> int:
-        hs = np.fromiter(
-            (_hash60_py(w) for w in _norm_words_py(text)),
-            dtype=np.uint64,
-        )
-        votes = (((hs[:, None] >> shifts) & 1).astype(np.int64) * 2 - 1).sum(axis=0)
-        return int(((votes > 0).astype(np.uint64) << shifts).sum())
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame({id_col: pdf[id_col], "simhash": [one(t) for t in pdf[text_col]]})
-
-    return spread(df).select(id_col, text_col).mapInPandas(
-        batches, schema=f"{id_col} long, simhash long"
     )
 
 
@@ -874,7 +841,7 @@ def contamination_report(
     # branch reads it rather than re-deriving the lambda expression.
     from boxoffice_spark.functions.caching import scoped_persist
 
-    # r11: the shingle frame feeds THREE consumers (eval hashes, eval
+    # the shingle frame feeds THREE consumers (eval hashes, eval
     # totals, train hashes) — without the persist the corpus scan +
     # normalize + n-gram build is re-evaluated once per branch (the same
     # tripled-scan t_curation_funnel's persisted shingle frame fixed;
@@ -924,7 +891,7 @@ def contamination_report(
     )
     totals = ev.select("doc_id", F.size("_sh").cast("long").alias("n_shingles"))
     # contamination_frac is an exact integer ratio: ratio6's BIGINT HALF_UP
-    # replaces the build-sensitive round(double, 6) (r09 legacy conversion)
+    # replaces the build-sensitive round(double, 6)
     from boxoffice_spark.functions.numeric import ratio6
 
     return (

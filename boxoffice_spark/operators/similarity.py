@@ -24,14 +24,13 @@ from boxoffice_spark.functions.numeric import fround
 def _round_half_up(a, k: int):
     """HALF_UP (away-from-zero) rounding for the Arrow kernels — the
     numpy instance of the SAME sign(x)*floor(abs(x)*10^k + 0.5)/10^k
-    formula functions/numeric.fround pins on Spark and DuckDB (r09: the
-    engine sides moved off library round(), whose implementation is
-    build surface, onto this three-IEEE-op form — all three runtimes now
-    share one rounding definition). numpy's own np.round is half-even:
+    formula functions/numeric.fround pins on Spark and DuckDB (library
+    round() is build surface, so all three runtimes share this
+    three-IEEE-op definition instead). numpy's own np.round is half-even:
     on an exactly-representable dyadic midpoint (e.g. a cosine of exactly
     1/128 = 0.0078125) it gives 0.007812 where this gives 0.007813, and
     rounding drives candidate selection in these kernels — a midpoint
-    flip could change top-k membership vs the oracle (ADVICE r07)."""
+    flip could change top-k membership vs the oracle."""
     import numpy as np
 
     s = 10.0**k
@@ -49,6 +48,22 @@ def cosine(a: Column, b: Column) -> Column:
     na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
     nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
     return dot / (na * nb)
+
+
+class ZeroVectorError(ValueError):
+    """A zero vector reached a cosine kernel: its cosine with anything is
+    0/0, so it has no neighbors and is no one's neighbor."""
+
+
+def _require_nonzero(ids, norms) -> None:
+    """Raise :class:`ZeroVectorError` naming the first ``ids`` entry whose
+    row norm is zero (the fold form fails the same input with
+    DIVIDE_BY_ZERO)."""
+    import numpy as np
+
+    zero = np.flatnonzero(norms == 0)
+    if len(zero):
+        raise ZeroVectorError(f"zero vector has no cosine: vec_id {ids[zero[0]]}")
 
 
 def cosine_topk(
@@ -122,8 +137,9 @@ def cosine_topk_arrow(
     k: int = 10,
     round_to: int = 6,
 ) -> DataFrame:
-    """Arrow/NumPy twin of :func:`cosine_topk` (the ``simhash_fast``
-    pattern): same exact semantics, different physical strategy.
+    """Arrow/NumPy form of :func:`cosine_topk` (the ``winnow_fp_sets``
+    mapInPandas pattern): same exact semantics, different physical
+    strategy.
 
     ``cosine_topk`` scores via ``zip_with``/``aggregate`` higher-order
     folds, which Spark keeps interpreted (lambda-bearing expressions are
@@ -135,8 +151,9 @@ def cosine_topk_arrow(
     ``_lossless_topk_sel`` cut) — the global window then reduces
     candidates, not the full |corpus| x |queries| cross product. Shuffle
     bytes drop from O(corpus x queries) scored rows to
-    O(partitions x queries x k). Exactness vs the fold form is asserted
-    by sharing its DuckDB oracle (queries/similarity.py).
+    O(partitions x queries x k). Row-for-row equality with the fold form
+    is pinned in tests/test_llm_ops.py. A zero query or corpus vector
+    raises :class:`ZeroVectorError` naming its id.
     """
     from collections.abc import Iterator
 
@@ -146,7 +163,9 @@ def cosine_topk_arrow(
     qrows = queries.select(F.col(id_col), F.col(vec_col).cast("array<double>")).collect()
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    qmat = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-30)
+    qnorm = np.linalg.norm(qmat, axis=1, keepdims=True)
+    _require_nonzero(qids, qnorm)
+    qmat = qmat / qnorm
     bc = corpus.sparkSession.sparkContext.broadcast((qids, qmat))
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -156,9 +175,9 @@ def cosine_topk_arrow(
                 continue
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             cmat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            cmat = cmat / np.maximum(
-                np.linalg.norm(cmat, axis=1, keepdims=True), 1e-30
-            )
+            cnorm = np.linalg.norm(cmat, axis=1, keepdims=True)
+            _require_nonzero(ids, cnorm)
+            cmat = cmat / cnorm
             # round BEFORE the cut: the global window ranks rounded values
             sims = _round_half_up(cmat @ qn.T, round_to)  # (batch, n_queries)
             kk = min(k + 1, sims.shape[0])
@@ -333,7 +352,7 @@ def near_dup_pairs_arrow(
         return pd.DataFrame({"id_a": lo, "id_b": hi, "cos_sim": sims[ia, ib]})
 
     # Pin the declarative twin's NULL semantics independently of fixture
-    # content (ADVICE r07): an equality self-join drops NULL block keys
+    # content: an equality self-join drops NULL block keys
     # (groupBy would form a real NULL group) and null-propagates a NULL
     # vector into a filtered-out cosine (np.stack would crash the task).
     return (

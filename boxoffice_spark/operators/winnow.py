@@ -11,11 +11,12 @@ minimum hash (rightmost occurrence on ties). The distinct (position, hash)
 selections are the document's fingerprints — expected density 2/(w+1) of
 the gram count, so the index is a small fraction of corpus size.
 
-The exact form is Catalyst higher-order functions over per-document
-arrays — zero Python, zero shuffle to fingerprint (the only shuffles are
-the pair-generation groupBys in :func:`winnow_dup_pairs`); the
-:func:`winnow_fast` Arrow twin swaps md5 grams for Karp-Rabin rolling
-hashes (the paper's own hash family) at ~9x the throughput, rows-only.
+The positional form (:func:`winnow_fingerprints`) is Catalyst
+higher-order functions over per-document arrays — zero Python, zero
+shuffle to fingerprint. The pair generator (:func:`winnow_dup_pairs`)
+reads the same md5 fingerprints through the :func:`winnow_fp_sets` Arrow
+kernel, which drops ``pos`` and is bit-identical to the Catalyst form on
+fingerprint values.
 
 Defaults k=20/w=10 (guarantee: 29-char shared substrings) — measured at
 sf0.1, k=7 grams recur so heavily across a same-domain corpus (3.2k
@@ -31,8 +32,8 @@ Scale notes (100 TB): fingerprinting is embarrassingly parallel and
 scan-local; cost is O(grams x w) per doc from the window min (lambda
 expressions are interpreted and not subexpression-eliminated — see
 operators/dedup.py:216). At w=10 that is ~10 comparisons per char and
-stays scan-bound; for much larger w, the mapInPandas twin pattern
-(dedup.simhash_fast) with a NumPy sliding-window argmin is the drop-in.
+stays scan-bound; for much larger w, the mapInPandas pattern of
+:func:`winnow_fp_sets` (a NumPy sliding-window min) is the drop-in.
 Pair generation reuses the capped inverted-index layout of
 ngram_jaccard_pairs / chunk_dup_pairs: postings above ``max_postings``
 are boilerplate, not signal, and are dropped before the self-join so no
@@ -41,7 +42,7 @@ single hot fingerprint can emit k² join rows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from boxoffice_spark.functions.numeric import (
     ratio6 as _ratio6,
@@ -156,33 +157,31 @@ def winnow_fp_sets(
     bit-identical to the exact form's ``array_distinct(transform(wins,
     s -> s.fp))`` explode (regression-tested against it).
 
-    Why (guide §4.2, r12): the Catalyst form's per-window min is an
+    Why: the Catalyst form's per-window min is an
     interpreted lambda scan — O(grams x w) comparisons per doc with no
     codegen and no subexpression elimination — and each gram additionally
     pays substring+md5+conv through the expression interpreter. Here the
     md5 runs over NumPy-sliced byte grams (one hashlib call per gram, no
     hex-string parse) and the window min is one strided argmin — O(chars)
     of Python-loop overhead per doc instead of per gram x w. Scan-local:
-    zero shuffle, zero Python state; same normalization twin as
-    :func:`winnow_fast` (re.ASCII collapse, strip(' '), codepoint-aligned
-    grams for non-ASCII text)."""
+    zero shuffle, zero Python state; text is normalized by
+    :func:`~boxoffice_spark.operators.dedup._norm_text_py` and grams are
+    codepoint-aligned for non-ASCII text."""
     from collections.abc import Iterator
     from hashlib import md5
 
     import numpy as np
     import pandas as pd
 
-    def fp_sets(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import re
+    from boxoffice_spark.operators.dedup import _norm_text_py
 
+    def fp_sets(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from_bytes = int.from_bytes
 
         for pdf in it:
             out_id, out_sz, out_fp = [], [], []
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                norm = re.sub(
-                    r"\s+", " ", (text or "").lower(), flags=re.ASCII
-                ).strip(" ")
+                norm = _norm_text_py(text or "")
                 n = len(norm)
                 if n < k:
                     continue
@@ -248,9 +247,9 @@ def winnow_dup_pairs(
     computed scan-side (no distinct shuffle, no per-id window), so the
     whole pair generation is the single capped (fp) shuffle of
     dedup.capped_pair_rows plus the pair aggregate — and the fingerprint
-    scan runs ONCE (the pre-r11 self-join evaluated it per join side).
+    scan runs ONCE (a self-join would evaluate it per join side).
 
-    r12 (guide §4.2): the scan itself is the :func:`winnow_fp_sets` Arrow
+    The scan itself is the :func:`winnow_fp_sets` Arrow
     kernel — bit-identical rows to the Catalyst higher-order form
     (tests/test_llm_ops.py::test_winnow_fp_sets_matches_catalyst_form),
     measured 1.40 s -> 0.90 s min-of-7 interleaved at steal_delta 26 on
@@ -270,7 +269,7 @@ def winnow_dup_pairs(
             "id_b",
             "n_shared",
             # exact integer ratio: ratio6's BIGINT HALF_UP replaces the
-            # build-sensitive round(double, 6) (r09 legacy conversion)
+            # build-sensitive round(double, 6)
             _ratio6("n_shared", "_sz_a + _sz_b - n_shared").alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
@@ -299,92 +298,3 @@ FROM pairs
 WHERE """ + _ratio6_sql("n_shared", "sza + szb - n_shared") + """ >= {threshold}
 """
 
-
-def winnow_fast(
-    df: DataFrame, id_col: str, text_col: str, k: int = DEFAULT_K, w: int = DEFAULT_W
-) -> DataFrame:
-    """Arrow scale twin of :func:`winnow_fingerprints` (the simhash_fast
-    pattern): Karp-Rabin ROLLING k-gram hashes — the hash family the
-    winnowing paper itself is built on — computed vectorized in NumPy from
-    one prefix-hash pass, then a strided sliding-window rightmost-min.
-    O(chars) per document instead of the Catalyst form's O(grams x w)
-    interpreted-lambda cost, and no per-gram md5.
-
-    Same gram UNIT as the exact form (k CHARACTERS — the text is decoded
-    to a codepoint array via UTF-32, not UTF-8 bytes, so non-ASCII text
-    yields the same gram boundaries, ``pos`` values, and w+k-1-char
-    guarantee length as the Catalyst/DuckDB form) and same selection RULE
-    (per-window min, rightmost on ties, distinct (pos, fp)), but a
-    different hash family, so fingerprint VALUES differ from the md5 form:
-    this twin is rows-only (no cross-engine oracle); the winnowing
-    guarantee, density, and determinism are property-tested in
-    tests/test_llm_ops.py. Arithmetic is uint64 with natural overflow —
-    deterministic everywhere, partitioning-independent.
-    """
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    B = np.uint64(1000000007)
-    INV_B = np.uint64(pow(1000000007, -1, 1 << 64))  # B odd -> invertible mod 2^64
-
-    def fingerprints(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import re
-
-        for pdf in it:
-            out_id, out_pos, out_fp = [], [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                # EXACT twin of dedup.normalized_text: Java regex \s is
-                # ASCII-only, so the Python collapse must use re.ASCII (a
-                # Unicode \xa0 etc. must survive on both sides), and Spark
-                # F.trim strips only ' ' — so strip(' '), not strip().
-                norm = re.sub(
-                    r"\s+", " ", (text or "").lower(), flags=re.ASCII
-                ).strip(" ")
-                # one uint32 per CODEPOINT (utf-32-le = the codepoint
-                # sequence), so k-gram boundaries are character-aligned
-                # with the exact substring() form — not UTF-8 bytes.
-                data = np.frombuffer(
-                    norm.encode("utf-32-le", "surrogatepass"), dtype=np.uint32
-                )
-                n = len(data)
-                if n < k:
-                    continue
-                m = n - k + 1  # gram count
-                with np.errstate(over="ignore"):
-                    # ascending-power prefix: prefix[i] = sum_{j<i} d[j]*B^j,
-                    # so gram(i) = (prefix[i+k] - prefix[i]) * B^-i
-                    #            = sum_t d[i+t]*B^t  (mod 2^64)
-                    # — position- and doc-independent, equal grams hash equal.
-                    powers = np.empty(n, dtype=np.uint64)
-                    powers[0] = 1
-                    np.multiply.accumulate(np.full(n - 1, B, dtype=np.uint64), out=powers[1:])
-                    inv_powers = np.empty(m, dtype=np.uint64)
-                    inv_powers[0] = 1
-                    np.multiply.accumulate(
-                        np.full(m - 1, INV_B, dtype=np.uint64), out=inv_powers[1:]
-                    )
-                    scaled = data.astype(np.uint64) * powers
-                    prefix = np.zeros(n + 1, dtype=np.uint64)
-                    np.cumsum(scaled, out=prefix[1:], dtype=np.uint64)
-                    h = (prefix[k:] - prefix[:-k]) * inv_powers
-                wp = min(w, m)
-                win = np.lib.stride_tricks.sliding_window_view(h, wp)
-                rev_arg = win[:, ::-1].argmin(axis=1)
-                sel_off = wp - 1 - rev_arg  # rightmost min offset per window
-                pos = np.arange(len(win)) + sel_off  # 0-based gram index
-                fp = win[np.arange(len(win)), sel_off]
-                uniq = np.unique(np.stack([pos.astype(np.int64), fp.view(np.int64)], axis=1), axis=0)
-                out_id.extend([doc_id] * len(uniq))
-                out_pos.extend((uniq[:, 0] + 1).tolist())  # 1-based like the exact form
-                out_fp.extend(uniq[:, 1].tolist())
-            yield pd.DataFrame({id_col: out_id, "pos": out_pos, "fp": out_fp})
-
-    # output schema preserves the caller's id type (string/uuid doc ids
-    # work like they do in the exact form; hardcoding 'long' broke them)
-    src = spread(df).select(id_col, text_col)
-    id_type = src.schema[id_col].dataType.simpleString()
-    return src.mapInPandas(
-        fingerprints, schema=f"{id_col} {id_type}, pos int, fp long"
-    )

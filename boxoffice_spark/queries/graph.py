@@ -8,7 +8,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from boxoffice_spark.functions.numeric import (
-    dsum_sql,
     fround,
     fround_sql,
     funits_sql,
@@ -113,11 +112,10 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-local co-purchase part pairs (u < v), one row per (order,
     pair) — the shared edge generator for every part-graph query below.
 
-    r11 optimization (guide §2.4 "remove shuffles outright"): the former
-    form — ``pl = distinct(o, p)`` then ``pl a JOIN pl b ON a.o = b.o AND
-    a.p < b.p`` — paid a distinct-(o,p) exchange plus the join-on-o
-    exchange before the pair rows even existed (4 Exchange + 1 Join up to
-    the edge distinct). Here the per-order DISTINCT part basket is ONE
+    Why not a self-join: the join form — ``pl = distinct(o, p)`` then
+    ``pl a JOIN pl b ON a.o = b.o AND a.p < b.p`` — paid a
+    distinct-(o,p) exchange plus the join-on-o exchange before the pair
+    rows even existed (4 Exchange + 1 Join up to the edge distinct). Here the per-order DISTINCT part basket is ONE
     ``collect_set`` aggregate (map-side partial sets, so the shuffle
     carries each partition's deduped basket fragments once) and the
     ordered pairs explode MAP-SIDE from the sorted array — 2 Exchange,
@@ -139,7 +137,7 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # NULL orderkeys would form one merged basket here, whereas the
         # join form this replaced (and the DuckDB oracles, which keep it)
         # emit nothing for NULL keys — filter them so the builder matches
-        # join semantics on ANY input, not just NOT-NULL TPC-H (ADVICE r11)
+        # join semantics on ANY input, not just NOT-NULL TPC-H
         .filter(F.col("l_orderkey").isNotNull())
         .groupBy(F.col("l_orderkey").alias("o"))
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("_ps"))
@@ -158,6 +156,49 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct canonical (u < v) co-purchase edges of the part graph."""
     return _copurchase_pairs(spark, sf_dir).distinct()
+
+
+def _symmetrized(e: DataFrame) -> DataFrame:
+    """The undirected edge list of ``(u, v)`` edges as ``(src, dst)``, each
+    edge in both directions. localCheckpointed: every round of the
+    iterative queries below re-reads it, and the checkpoint keeps the edge
+    build out of each round's lineage."""
+    return (
+        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
+        .unionAll(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
+        .localCheckpoint()
+    )
+
+
+def _multi_source_bfs(sym: DataFrame, n_seeds: int, rounds: int) -> DataFrame:
+    """Hop distances ``(node, src, dist)`` from each of the ``n_seeds``
+    smallest node ids to every node within ``rounds`` hops of it over the
+    symmetrized edge list ``sym``. Per round: one frontier-edge join plus
+    one (node, source) min-aggregate, localCheckpointed to truncate
+    lineage; state is bounded by |seeds| x |reached nodes|."""
+    srcs = (
+        sym.select(F.col("src").alias("node"))
+        .distinct()
+        .orderBy("node")
+        .limit(n_seeds)
+    )
+    dist = srcs.select("node", F.col("node").alias("src"), F.lit(0).alias("dist"))
+    for _ in range(rounds):
+        relaxed = (
+            sym.join(dist, sym.src == dist.node)
+            .select(
+                F.col("dst").alias("node"),
+                dist.src.alias("src"),
+                (F.col("dist") + 1).alias("dist"),
+            )
+            .unionByName(dist.select("node", "src", "dist"))
+        )
+        dist = (
+            relaxed.groupBy("node", "src")
+            .agg(F.min("dist").alias("dist"))
+            .localCheckpoint()
+        )
+    return dist
 
 
 _TRIANGLE_ORACLE = f"""
@@ -266,7 +307,7 @@ def g_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     max-center-degree cap (= 64, mirrored in the oracle — hub-mediated
     neighbors are popularity noise by the RA argument, so the checked
     path IS the scale path), scores sum as exact 1e-15 integer units
-    with an fround-pinned 12dp display grid (r10 conversion), and
+    with an fround-pinned 12dp display grid, and
     top-30 plans as TakeOrderedAndProject over a total-order sort key."""
     from boxoffice_spark.operators.graph import link_prediction_scores
 
@@ -302,10 +343,10 @@ def g_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     and link-prediction operators rely on. One edge-build (order-local
     pairs), one degree aggregate, one |distinct degrees| histogram;
     totals broadcast back as a one-row aggregate. ``deg`` feeds BOTH the
-    histogram and the totals row, so it is scope-persisted (r11 — the
-    assortativity lesson: exchange reuse needs byte-identical canonical
-    subplans and AQE routinely breaks it, so without the persist each
-    consumer re-ran the edge build); O(nodes) rows, bounded."""
+    histogram and the totals row, so it is scope-persisted (exchange
+    reuse needs byte-identical canonical subplans and AQE routinely
+    breaks it, so without the persist each consumer re-ran the edge
+    build); O(nodes) rows, bounded."""
     from boxoffice_spark.functions.caching import scoped_persist
 
     edges = _copurchase_edges(spark, sf_dir)
@@ -322,9 +363,8 @@ def g_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = deg.agg(
         F.count("*").alias("n"), F.sum("d").cast("long").alias("dsum")
     )
-    # r10 legacy conversion: both shares are exact integer ratios (ratio6
-    # / ratio6w — degree * n_nodes is corpus-squared, so the mass share
-    # takes the 128-bit path).
+    # both shares are exact integer ratios (ratio6 / ratio6w — degree *
+    # n_nodes is corpus-squared, so the mass share takes the 128-bit path).
     return (
         hist.crossJoin(F.broadcast(tot))
         .select(
@@ -395,11 +435,7 @@ def g_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage exactly like operators/graph.pagerank. Fixed round count —
     synchronized halting, no convergence check to race."""
     e = _copurchase_edges(spark, sf_dir)
-    sym = (
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint()
-    )
+    sym = _symmetrized(e)
     labels = sym.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -474,42 +510,15 @@ def g_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     complement to the census (counts), LPA (membership), and PageRank
     (importance).
 
-    Same driver-loop shape as label propagation: per round one edge
-    join + one (node, source) min-aggregate, localCheckpoint truncating
-    lineage; the frontier table is bounded by |sources| x |reached
-    nodes|. The unrolled chained-CTE oracle checks every (source, node,
-    dist) cell — min-relaxation is order-independent, so no decimal
+    Same driver-loop shape as label propagation
+    (:func:`_multi_source_bfs`): the frontier table is bounded by
+    |sources| x |reached nodes|. The unrolled chained-CTE oracle checks
+    every (source, node, dist) cell — min-relaxation is order-independent, so no decimal
     machinery is needed. At 100 TB: per-round cost is one shuffle of
     the frontier joined against the edge list; cap sources and rounds
     (both are query parameters) to bound state."""
     e = _copurchase_edges(spark, sf_dir)
-    sym = (
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint()
-    )
-    srcs = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .orderBy("node")
-        .limit(3)
-    )
-    dist = srcs.select("node", F.col("node").alias("src"), F.lit(0).alias("dist"))
-    for _ in range(3):
-        relaxed = (
-            sym.join(dist, sym.src == dist.node)
-            .select(
-                F.col("dst").alias("node"),
-                dist.src.alias("src"),
-                (F.col("dist") + 1).alias("dist"),
-            )
-            .unionByName(dist.select("node", "src", "dist"))
-        )
-        dist = (
-            relaxed.groupBy("node", "src")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
-        )
+    dist = _multi_source_bfs(_symmetrized(e), n_seeds=3, rounds=3)
     return dist.select(
         F.col("src").alias("source"), "node", F.col("dist").cast("int").alias("dist")
     ).orderBy("source", "node")
@@ -579,11 +588,7 @@ def g_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("w") >= 2)
         .select("u", "v")
     )
-    sym = (
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint()
-    )
+    sym = _symmetrized(e)
     alive = sym.select(F.col("src").alias("node")).distinct()
     for _ in range(_KCORE_ROUNDS):
         deg = (
@@ -694,7 +699,7 @@ def g_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n, sx = F.col("n"), F.col("sx")
     var_n = n * F.col("sxx") - sx * sx
-    # r10 legacy conversion: both cells are IEEE chains over exact
+    # both cells are IEEE chains over exact
     # integer moments, pinned to their grids via fround.
     return s.crossJoin(F.broadcast(tot)).select(
         "n_nodes",
@@ -754,49 +759,25 @@ def g_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     PageRank: harmonic rewards being CLOSE to everything, PageRank
     rewards being LINKED from important places.
 
-    Same bounded multi-source BFS as g_bfs_distances (per round one
-    frontier-edge join + one (node, seed) min-aggregate,
-    localCheckpoint truncating lineage; state bounded by |seeds| x
-    |reached|), then one 1/d aggregate: the inverse distances are
-    exact 1e-8 integer units (units_div's BIGINT HALF_UP — r10
-    conversion) summed per node, so the <=16-term sum is an exact
-    BIGINT, and the n/16 scaling is one more exact integer HALF_UP —
-    a round(double) here split engines on the exact .66665 ties that
+    Same bounded multi-source BFS as g_bfs_distances
+    (:func:`_multi_source_bfs`), then one 1/d aggregate: the inverse
+    distances are exact 1e-8 integer units (units_div's BIGINT HALF_UP)
+    summed per node, so the <=16-term sum is an exact BIGINT, and the
+    n/16 scaling is one more exact integer HALF_UP — a round(double) here split engines on the exact .66665 ties that
     1/3-sums x round seed counts produce. Cell-exact against the
     unrolled chained-CTE oracle. Seeds and hop cap are the scale dials
     — more pivots tighten the estimate, the BFS cost stays
     |seeds|-linear."""
     e = _copurchase_edges(spark, sf_dir)
-    sym = (
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint()
+    sym = _symmetrized(e)
+    nn = sym.select(F.col("src").alias("node")).distinct().agg(
+        F.count("*").alias("n_nodes")
     )
-    nodes = sym.select(F.col("src").alias("node")).distinct()
-    nn = nodes.agg(F.count("*").alias("n_nodes"))
-    srcs = nodes.orderBy("node").limit(16)
-    dist = srcs.select(
-        F.col("node"), F.col("node").alias("src"), F.lit(0).alias("dist")
-    )
-    for _ in range(4):
-        relaxed = (
-            sym.join(dist, sym.src == dist.node)
-            .select(
-                F.col("dst").alias("node"),
-                dist.src.alias("src"),
-                (F.col("dist") + 1).alias("dist"),
-            )
-            .unionByName(dist.select("node", "src", "dist"))
-        )
-        dist = (
-            relaxed.groupBy("node", "src")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
-        )
-    # r10 legacy conversion: 1/d quantizes to EXACT 1e-8 integer units
-    # (units_div — the old round(double, 8) + decimal cast pair was the
-    # refuted build-surface class), the <=16-term sum is an exact BIGINT,
-    # and the n/16 scaling is one more exact integer HALF_UP
+    dist = _multi_source_bfs(sym, n_seeds=16, rounds=4)
+    # 1/d quantizes to EXACT 1e-8 integer units (units_div — a
+    # round(double, 8) + decimal cast pair rounds differently across
+    # engine builds), the <=16-term sum is an exact BIGINT, and the n/16
+    # scaling is one more exact integer HALF_UP
     # (units_div(h_u * n, 16e8, 4)); both display cells are single IEEE
     # divisions of exact integers.
     from boxoffice_spark.functions.numeric import units_div

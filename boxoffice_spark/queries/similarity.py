@@ -55,24 +55,6 @@ def v_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk(emb, queries, k=10)
 
 
-@register(
-    "v_cosine_topk_arrow",
-    oracle=_COSINE_TOPK_ORACLE,
-    bench=True,
-    tags=("similarity", "vector", "pandas-udf"),
-)
-def v_cosine_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same exact top-k under the Arrow physical strategy: broadcast
-    query matrix, one BLAS matmul per scan batch, batch-local top-k
-    candidates only into the global window — the 100 TB corpus-scan
-    variant (interpreted zip_with/aggregate folds are the known-slow
-    expression class). Shares v_cosine_topk's DuckDB oracle, so exactness
-    of the rewrite is driver-checked, not asserted."""
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    return cosine_topk_arrow(emb, queries, k=10)
-
-
 @register("v_ann_lsh_topk", oracle=None, bench=True, tags=("similarity", "ann"))
 def v_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate NN via random-projection LSH buckets + exact rerank
@@ -382,7 +364,7 @@ def v_knn_label_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # frac_same is an exact integer ratio (k-NN votes / k): ratio6's
         # BIGINT HALF_UP replaces the build-sensitive round(avg, 6)
-        # (r09 legacy-oracle conversion, parity rule 4)
+        # (parity rule 4)
         .select(
             "query_id",
             "label",
@@ -818,19 +800,17 @@ def v_int8_quantization_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan to (dim) ranges, a broadcast-joined codec projection, one
     label-grain aggregate.
 
-    Parity (rule 4, r08 revision — the DECIMAL(27,12)/(27,8) casts of
-    double error terms were driver-red in r08; double->decimal-grid
-    rounding is build surface): each squared error is converted to
+    Parity (rule 4 — DECIMAL(27,12)/(27,8) casts of double error terms
+    mismatched across engine builds; double->decimal-grid rounding is
+    build surface): each squared error is converted to
     exact 1e-12 integer units by PURE DOUBLE ARITHMETIC —
     floor(err^2 * 1e12 + 0.5) — two correctly-rounded IEEE ops plus an
     exact floor, so both engines take the identical branch at every
     value with no engine rounding rule involved; the BIGINT units sum
     order-free, and mse/max_abs_err are emitted as raw doubles.
     Exact while per-label n_values * 6.4e7 fits BIGINT (~1e11 values
-    per label). The r09 canary c9_int8_decimal_cells (removed in r10)
-    pinned the old decimal-cast form alongside and came back red while
-    this converted form greened — the construct is confirmed and the
-    floor-quantize recipe is the proven remedy. Cell-exact."""
+    per label). A canary of the decimal-cast form mismatched its oracle
+    where this floor-quantize form matched. Cell-exact."""
     emb = table(spark, sf_dir, "embeddings")
     ex = emb.select(
         "label",

@@ -185,8 +185,8 @@ def t_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document text statistics: char/word/BPE-ish token counts,
     punctuation ratio, composite quality score — the standard pre-training
     quality-filter feature set, all codegen'd. Both ratio cells are exact
-    integer ratios via ratio6's BIGINT HALF_UP (r09 legacy conversion off
-    the build-sensitive round(double, 6))."""
+    integer ratios via ratio6's BIGINT HALF_UP, not the build-sensitive
+    round(double, 6)."""
     d = table(spark, sf_dir, "documents")
     punct6 = ratio6(
         r"regexp_count(text, '[^A-Za-z가-힣0-9\\s]')",
@@ -202,10 +202,9 @@ def t_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The raw-double quality chain is GONE (r10, ADVICE r09 medium): the last
-# seven round(_QUALITY_EXPR_SQL, 6) oracles converted to
-# TS.quality_score_sql — the exact integer ratio the Spark side has used
-# since r09 — so there is exactly ONE quality grid engine-wide.
+# Every quality oracle uses TS.quality_score_sql, the exact integer ratio
+# the Spark side uses, so there is exactly ONE quality grid engine-wide
+# (no round(double, 6) of the raw-double quality chain).
 
 
 @register(
@@ -227,9 +226,8 @@ def t_quality_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     char volume — the 'what do we keep' dashboard of a data pipeline.
     quality_sum aggregates the per-doc quality as exact 1e-6 BIGINT units
     (textstats.quality_micro — order-free integer sum, one IEEE division
-    at the end), replacing the r03-era decimal(27,9) cast of the raw
-    double chain, which is the r08-red construct class (r09 legacy
-    conversion)."""
+    at the end), not a decimal(27,9) cast of the raw double chain, whose
+    rounding differs across engine builds."""
     from boxoffice_spark.functions.numeric import dsum
 
     d = table(spark, sf_dir, "documents")
@@ -240,18 +238,6 @@ def t_quality_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         dsum(F.length("text"), scale=0).alias("chars_total"),
     )
-
-
-@register(
-    "t_simhash_fast",
-    oracle=D.simhash_sql("documents", "doc_id", "text"),
-    tags=("dedup", "simhash", "pandas-udf"),
-)
-def t_simhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Map-side (mapInPandas) SimHash — zero-shuffle twin of t_simhash,
-    hash-matching the same DuckDB oracle bit for bit (operators/dedup.py
-    simhash_fast)."""
-    return D.simhash_fast(table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register(
@@ -708,8 +694,8 @@ def t_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         F.md5(D.normalized_text("text")).alias("fp"),
         (TS.lang_id("text") != "und").alias("lang_ok"),
-        # r10 legacy conversion (ADVICE r09): quality_score is the exact
-        # ratio6 grid since r09 — the gate compares it directly, no
+        # quality_score is the exact ratio6 grid — the gate compares it
+        # directly, no
         # build-sensitive round(double, 6) on either engine.
         (TS.quality_score("text") >= 0.5).alias("quality_ok"),
     )
@@ -753,16 +739,6 @@ def t_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(kept & F.col("lang_ok") & F.col("quality_ok") & F.col("clean"), 1)
         ).alias("n_after_decontam"),
     )
-
-
-@register("t_winnow_fast", oracle=None, bench=True, tags=("dedup", "winnowing", "pandas-udf"))
-def t_winnow_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Karp-Rabin rolling-hash winnowing (Arrow scale twin, ~9x the
-    Catalyst form at sf0.1: one O(chars) NumPy pass per doc vs O(grams*w)
-    interpreted lambdas). Different hash family than the md5 oracle form,
-    so rows-only; the winnowing guarantee, short-doc edges, and
-    partitioning-independence are property-tested in tests/test_llm_ops.py."""
-    return WN.winnow_fast(table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register(
@@ -886,7 +862,7 @@ def t_source_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtering spends compute). One scan, one per-source aggregate; the
     fingerprint distinct swaps for approx_count_distinct at 100 TB."""
     d = table(spark, sf_dir, "documents")
-    # r10 legacy conversion: q is the exact ratio6 quality grid (no
+    # q is the exact ratio6 quality grid (no
     # round(double, 6)); dup_rate is the exact integer ratio
     # (n_docs - n_distinct_fp) / n_docs via ratio6's BIGINT HALF_UP.
     base = d.select(
@@ -1431,7 +1407,7 @@ def t_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     dashboard's keyword filter generalized to scored retrieval. One
     tokenize + tf shuffle builds the inverted index; query terms, their
     idf rows, and corpus stats broadcast; term scores land on the 6dp
-    grid via fround's pinned HALF_UP (r10 conversion) and decimal-sum
+    grid via fround's pinned HALF_UP and decimal-sum
     value-preservingly, so BM25 ranking is bit-deterministic — hence the
     exact DuckDB oracle, which BM25 pipelines normally cannot have."""
     from boxoffice_spark.operators.textstats import bm25_topk
@@ -1537,7 +1513,7 @@ def t_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     only ranks. Both input rankers are the already-registered oracle-
     exact operators, and the fusion arithmetic is exact-integer
     (1e-10-unit contributions summed as BIGINTs, fround-pinned output
-    grid — r10 conversion), so the hybrid ranking itself is cell-exact
+    grid), so the hybrid ranking itself is cell-exact
     against DuckDB.
 
     Scale shape: corpus bytes are touched only inside the two upstream
@@ -1631,7 +1607,7 @@ def t_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(words).alias("n_words"),
         TS.bpe_ish_token_count("text").alias("n_tok"),
     ).select("lang", F.md5("_n").alias("fp"), "n_chars", "n_words", "n_tok")
-    # r10 legacy conversion: dup_rate is the exact integer ratio
+    # dup_rate is the exact integer ratio
     # (n_docs - n_unique) / n_docs via ratio6's BIGINT HALF_UP.
     agg = base.agg(
         F.count("*").alias("n_docs"),
@@ -2018,7 +1994,7 @@ def t_blocklist_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bl = F.array(*[F.lit(w) for w in _BLOCKLIST])
     hits = F.size(F.filter(words, lambda w: F.array_contains(bl, w)))
     d = table(spark, sf_dir, "documents")
-    # r10 legacy conversion: hit_ratio is the exact integer ratio
+    # hit_ratio is the exact integer ratio
     # n_hits / max(n_words, 1) via ratio6's BIGINT HALF_UP.
     scored = d.select(
         "doc_id",
@@ -2088,7 +2064,7 @@ def dq_pii_prevalence(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.regexp_count("t", F.lit(CL.EMAIL_RE)) > 0).alias("has_email"),
         (F.regexp_count("t", F.lit(CL.PHONE_RE)) > 0).alias("has_phone"),
     )
-    # r10 legacy conversion: pii_rate is the exact integer ratio via
+    # pii_rate is the exact integer ratio via
     # ratio6's BIGINT HALF_UP.
     agg = flags.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -2371,8 +2347,8 @@ def t_minhash_banded_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# r10 legacy conversion: digit arithmetic (the e_surrogate_keys driver-
-# proven form) instead of the '0x' string cast whose parse semantics vary
+# digit arithmetic (the form e_surrogate_keys matches its oracle through)
+# instead of the '0x' string cast whose parse semantics vary
 # across DuckDB builds.
 _CURR_HASH_SQL = D.md5_u60_sql("md5(CAST(doc_id AS VARCHAR))")
 
@@ -2414,7 +2390,7 @@ def t_curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     design: quartiles are corpus-relative)."""
     from boxoffice_spark.operators.textstats import quality_score
 
-    # r10 legacy conversion: q is the exact ratio6 quality grid; the
+    # q is the exact ratio6 quality grid; the
     # quartile thresholds land on the 6dp grid via fround's pinned
     # floor-implemented HALF_UP (type-7 interpolation on both engines)
     # instead of the build-sensitive round(double, 6).
@@ -2646,9 +2622,9 @@ def t_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     here. Scale: zero-shuffle key projection + one per-lang window
     (per-stratum top-k; salt-phase it like kmv_kmin if a stratum is a
     whole corpus)."""
-    # r10 legacy conversion: q is the exact ratio6 quality grid; the hex
-    # md5 parse converts to digit arithmetic on the oracle side (the
-    # e_surrogate_keys driver-proven form); the A-ES key lands on the 8dp
+    # q is the exact ratio6 quality grid; the hex md5 parse is digit
+    # arithmetic on the oracle side (the form e_surrogate_keys matches its
+    # oracle through); the A-ES key lands on the 8dp
     # grid via fround's pinned HALF_UP instead of round(double, 8).
     d = table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -2947,7 +2923,7 @@ def t_chi2_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     a, b, c, dd, nn = (F.col(x) for x in ("a", "b", "c", "d", "nn"))
-    # r10 legacy conversion: the chi2 chain is correctly-rounded IEEE ops
+    # the chi2 chain is correctly-rounded IEEE ops
     # over exact integer-valued doubles (bit-identical on both engines);
     # only the final grid needs pinning — fround, not round(double, 6).
     chi2 = fround(
@@ -3235,7 +3211,7 @@ def t_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch << corpus.
 
     Physical strategy: the map-side Arrow shingle kernel
-    (operators/dedup.word_ngram_hashes_fast — the simhash_fast pattern;
+    (operators/dedup.word_ngram_hashes_fast, a mapInPandas kernel;
     same normalization + 60-bit md5 recipe as the oracle, per-doc dedup
     in Python sets instead of a corpus-wide distinct shuffle). The
     honest — cache-released — sf1 probe billed the declarative
@@ -3342,7 +3318,7 @@ def t_lang_id_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic would WRAP SILENTLY (DuckDB raises), so the n_docs
     projection carries an explicit raise_error guard — a too-large
     corpus fails loudly on both engines instead of emitting a wrong
-    kappa (ADVICE r08). Beyond the bound, shard the audit.
+    kappa. Beyond the bound, shard the audit.
     Banding (Landis-Koch) buckets the ratio6 double, identical on both
     engines by construction.
 
@@ -3486,7 +3462,7 @@ def t_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_vocab"),
         )
     )
-    # r10 legacy conversion: the log points land on the 8dp grid via
+    # the log points land on the 8dp grid via
     # fround's pinned HALF_UP, the OLS moments accumulate as EXACT
     # integer 1e-8 units (funits — order-free, no decimal cast of a
     # double anywhere), and the three fitted cells are fround'ed chains
@@ -3837,7 +3813,7 @@ def t_capture_recapture_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("cap_b"), 1)).alias("n2"),
         F.count(F.when(F.col("cap_a") & F.col("cap_b"), 1)).alias("m"),
     )
-    # r10 legacy conversion: the Chapman estimator is the exact rational
+    # the Chapman estimator is the exact rational
     # ((n1+1)(n2+1) - (m+1)) / (m+1) — est and both recalls are HALF_UP
     # integer-ratio cells (units_div / ratio6w), no round(double, k).
     from boxoffice_spark.functions.numeric import ratio6w, units_div
@@ -4017,7 +3993,7 @@ def t_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     from boxoffice_spark.operators.textstats import quality_score
 
-    # r10 legacy conversion: the band is fround(exact-ratio6-quality, 2) —
+    # the band is fround(exact-ratio6-quality, 2) —
     # the pinned HALF_UP of a bit-identical double on both engines —
     # instead of round(round(double-chain, 6), 2).
     banded = scoped_persist(
@@ -4212,8 +4188,7 @@ def _md5_mod100_sql(hexcol: str) -> str:
     % 100)) % 100 over the 15 hex positions. Every term is a tiny exact
     integer (strpos + multiply), so the expression is pinned on every
     engine build — unlike the '0x'-prefixed string->BIGINT cast it
-    replaces, whose parse semantics vary across DuckDB versions (the
-    round-7 driver red on t_span_corruption)."""
+    replaces, whose parse semantics vary across DuckDB versions."""
     coefs = [pow(16, 15 - d, 100) for d in range(1, 16)]
     terms = " + ".join(
         f"(strpos('0123456789abcdef', substring({hexcol}, {d}, 1)) - 1)"
@@ -4402,7 +4377,7 @@ def t_code_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure regexp_count projections — zero-shuffle scan work, one
     |sources|-row aggregate after; ratio cells are exact integer
     ratios (ratio6) and the mean is a value-preserving decimal sum of
-    on-grid values (r10 conversion). Cell-exact."""
+    on-grid values. Cell-exact."""
     d = table(spark, sf_dir, "documents")
     n_chars = F.length("text")
     n_code_chars = F.regexp_count("text", F.lit(r"[{}();=\[\]<>]"))
@@ -4413,7 +4388,7 @@ def t_code_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
             "(?:def |class |import |return |function |var |const |#include)"
         ),
     )
-    # r10 legacy conversion: both ratio cells are exact integer ratios
+    # both ratio cells are exact integer ratios
     # (ratio6's BIGINT HALF_UP); the mean of 6dp-grid ratios is davg's
     # value-preserving decimal sum + one IEEE division, emitted raw (an
     # outer round(double, 6) would re-introduce build-surface rounding).

@@ -477,8 +477,9 @@ def test_winnow_guarantee_and_edge_docs(spark):
     """Winnowing's defining property: two documents sharing a substring of
     length >= w + k - 1 MUST share at least one fingerprint — plus the
     short-doc edges (below k chars -> no fingerprints; between k and k+w
-    grams -> one shrunken window, no crash)."""
-    from boxoffice_spark.operators.winnow import winnow_fingerprints
+    grams -> one shrunken window, no crash) and independence from the
+    input's partitioning, for both fingerprint kernels."""
+    from boxoffice_spark.operators.winnow import winnow_fingerprints, winnow_fp_sets
 
     shared = "a very distinctive shared passage of text"  # >> w + k - 1 chars
     rows = [
@@ -500,6 +501,13 @@ def test_winnow_guarantee_and_edge_docs(spark):
     # density sanity: selections are a strict subset of grams for real docs
     n_grams_1 = len(rows[0][1]) - 7 + 1
     assert 0 < len(by_doc[1]) < n_grams_1
+
+    for fn in (winnow_fingerprints, winnow_fp_sets):
+        one, seven = (
+            sorted(map(tuple, fn(df.repartition(n), "doc_id", "text", k=7, w=4).collect()))
+            for n in (1, 7)
+        )
+        assert one and one == seven, fn.__name__
 
 
 def test_winnow_pairs_rank_planted_dups(spark):
@@ -540,36 +548,6 @@ def test_incremental_dedup_admits_only_unseen(spark, sf_dir):
     assert not (set(admitted) & corpus_fps)
     for r in out:
         assert r.keeper_id % 10 == 0
-
-
-def test_winnow_fast_guarantee_density_determinism(spark):
-    """The rolling-hash twin must satisfy the same winnowing contract as
-    the exact form: shared >= w+k-1-char substrings share a fingerprint,
-    sub-k docs yield nothing, selection density stays well under the gram
-    count, and output is independent of partitioning."""
-    from boxoffice_spark.operators.winnow import winnow_fast
-
-    shared = "a very distinctive shared passage of text that runs long enough"
-    rows = [
-        (1, "left alpha " + shared + " right one"),
-        (2, "other opener " + shared + " different end"),
-        (3, "no overlap with anything interesting whatsoever in this row"),
-        (4, "tiny"),
-        (5, ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = winnow_fast(df, "doc_id", "text").collect()
-    fps = {}
-    for r in out:
-        fps.setdefault(r.doc_id, set()).add(r.fp)
-    assert fps[1] & fps[2], "shared substring must share a rolling-hash fingerprint"
-    assert 4 not in fps and 5 not in fps
-    n_grams_1 = len(rows[0][1]) - 20 + 1
-    assert 0 < len(fps[1]) < n_grams_1
-
-    a = sorted(map(tuple, winnow_fast(df.repartition(1), "doc_id", "text").collect()))
-    b = sorted(map(tuple, winnow_fast(df.repartition(7), "doc_id", "text").collect()))
-    assert a == b
 
 
 def test_heavy_hitters_exact_vs_bruteforce_adversarial_partitions(spark):
@@ -1026,3 +1004,58 @@ def test_winnow_fp_sets_matches_catalyst_form(spark, sf_dir):
     a = catalyst_post(df, "doc_id", "text", 7, 4)
     b = winnow_fp_sets(df, "doc_id", "text", 7, 4)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+
+
+def _cosine_rows(df):
+    return sorted(
+        (r.query_id, r.neighbor_id, r.cos_sim, r.rank) for r in df.collect()
+    )
+
+
+def test_cosine_topk_arrow_equals_catalyst(spark, sf_dir):
+    """The Arrow matmul top-k kernel must return the fold form's rows
+    exactly: same neighbors, same 6-dp cosines, same (cos desc, id asc)
+    ranks — on the fixture embeddings and on a corpus whose rank-k slot
+    is an exact tie split across partitions."""
+    from boxoffice_spark.operators.similarity import cosine_topk_arrow
+
+    emb = table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5)
+    arrow = _cosine_rows(cosine_topk_arrow(emb, queries, k=10))
+    assert len(arrow) == 50
+    assert arrow == _cosine_rows(cosine_topk(emb, queries, k=10))
+
+    # ids 10..15 are one direction (cosine 1.0 to query 0): six tied
+    # candidates for ranks 1..3, so the id tie-break decides the cut
+    rows = [(0, [1.0, 0.0])] + [(i, [float(i), 0.0]) for i in range(10, 16)]
+    rows += [(20, [1.0, 1.0]), (21, [0.0, 1.0]), (22, [-1.0, 0.5])]
+    tied = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    tied = tied.repartition(3)
+    q = tied.filter(F.col("vec_id") == 0)
+    arrow = _cosine_rows(cosine_topk_arrow(tied, q, k=3))
+    assert arrow == [(0, 10, 1.0, 1), (0, 11, 1.0, 2), (0, 12, 1.0, 3)]
+    assert arrow == _cosine_rows(cosine_topk(tied, q, k=3))
+
+
+def test_cosine_topk_zero_vector_raises(spark):
+    """A zero vector has no cosine: both top-k kernels fail loudly, the
+    Arrow kernel with a named error giving the vector's id — for a zero
+    corpus vector (raised in the scan batch) and for a zero query vector
+    (raised on the driver)."""
+    import pytest
+
+    from boxoffice_spark.operators.similarity import ZeroVectorError, cosine_topk_arrow
+
+    rows = [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0]), (7, [0.0, 0.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    q = df.filter(F.col("vec_id") == 1)
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        cosine_topk(df, q, k=2).collect()
+    with pytest.raises(Exception, match="ZeroVectorError.*vec_id 7"):
+        cosine_topk_arrow(df, q, k=2).collect()
+
+    zero_q = df.filter(F.col("vec_id") == 7)
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        cosine_topk(df, zero_q, k=2).collect()
+    with pytest.raises(ZeroVectorError, match="vec_id 7"):
+        cosine_topk_arrow(df, zero_q, k=2)

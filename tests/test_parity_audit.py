@@ -86,7 +86,6 @@ def test_converted_round7_reds_are_clean():
         "t_text_stats",
         "t_quality_by_lang",
         "v_cosine_topk",
-        "v_cosine_topk_arrow",
         "v_hard_negatives",
         "v_knn_label_consistency",
     }

@@ -114,9 +114,9 @@ def test_salted_distinct_equals_plain(spark, vals):
     assert got == want
 
 
-# non-ASCII chars included: gram units are CHARACTERS in both hash
-# families (winnow_fast decodes to codepoints, not UTF-8 bytes), so the
-# w+k-1 guarantee must hold by char count for multi-byte text too.
+# non-ASCII chars included: gram units are CHARACTERS in both kernels
+# (winnow_fp_sets slices codepoints, not UTF-8 bytes), so the w+k-1
+# guarantee must hold by char count for multi-byte text too.
 _alpha = "abcdefgh 한글é"
 _words = st.lists(
     st.text(alphabet=_alpha, min_size=0, max_size=40), min_size=0, max_size=4
@@ -126,11 +126,11 @@ _words = st.lists(
 @given(shared=st.text(alphabet=_alpha, min_size=29, max_size=60), pads=_words)
 @settings(**_SETTINGS)
 def test_winnow_guarantee_holds_for_any_strings(spark, shared, pads):
-    """Winnowing contract (both hash families): two docs embedding the SAME
+    """Winnowing contract (both kernels): two docs embedding the SAME
     >= w+k-1-char substring must share at least one fingerprint, for ANY
     surrounding text — including whitespace collapse by normalization and
     multi-byte (non-ASCII) characters."""
-    from boxoffice_spark.operators.winnow import winnow_fast, winnow_fingerprints
+    from boxoffice_spark.operators.winnow import winnow_fingerprints, winnow_fp_sets
 
     p = pads + ["", "", "", ""]
     rows = [(1, f"{p[0]} {shared} {p[1]}"), (2, f"{p[2]} {shared} {p[3]}")]
@@ -142,19 +142,19 @@ def test_winnow_guarantee_holds_for_any_strings(spark, shared, pads):
     norm_shared = re.sub(r"\s+", " ", shared.lower()).strip()
     if len(norm_shared) < 29:
         return
-    for fn in (winnow_fingerprints, winnow_fast):
+    kernels = (winnow_fingerprints, winnow_fp_sets)
+    out = {fn: fn(df, "doc_id", "text").collect() for fn in kernels}
+    for fn, got in out.items():
         by_doc = {}
-        max_pos = 0
-        for r in fn(df, "doc_id", "text").collect():
+        for r in got:
             by_doc.setdefault(r.doc_id, set()).add(r.fp)
-            max_pos = max(max_pos, r.pos)
         assert by_doc.get(1, set()) & by_doc.get(2, set()), fn.__name__
-        # pos is a CHAR-gram offset: must stay inside the char-gram count
-        # (a byte-based gram loop would overrun this on non-ASCII text)
-        longest = max(
-            len(re.sub(r"\s+", " ", t.lower()).strip()) for _, t in rows
-        )
-        assert max_pos <= longest - 20 + 1, fn.__name__
+    # pos is a CHAR-gram offset: must stay inside the char-gram count (a
+    # byte-based gram loop would overrun this on non-ASCII text);
+    # winnow_fp_sets keeps no pos
+    max_pos = max(r.pos for r in out[winnow_fingerprints])
+    longest = max(len(re.sub(r"\s+", " ", t.lower()).strip()) for _, t in rows)
+    assert max_pos <= longest - 20 + 1
 
 
 @given(

@@ -118,7 +118,6 @@ LEGACY_GREEN: set[str] = {
     't_readability_scores',
     't_sequence_packing',
     't_simhash',
-    't_simhash_fast',
     't_simhash_hamming_pairs',
     't_source_overlap_matrix',
     't_temperature_mixture',

@@ -39,7 +39,7 @@ Usage:
                               [--oracle] [--oracle-only] [--regen]
 Growth curve of the headline shapes, one point per N:
     python tools/sf1_probe.py --copies 4 --only flagship_daily_topk_delta,\\
-        t_exact_dedup,t_ngram_jaccard_pairs,v_cosine_topk_arrow
+        t_exact_dedup,t_ngram_jaccard_pairs,v_knn_label_consistency
 Env: SPARK_GRAFT_SF1_DIR (inflation, default /tmp/spark_graft_sf1),
      SPARK_GRAFT_SF_DIR (source, default: the sf0.1 fixtures),
      SPARK_GRAFT_SHIFT_MULT (key-shift multiplier, default 1)
