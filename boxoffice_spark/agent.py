@@ -6,62 +6,21 @@ generated SQL against SQLite (ai_agent.py:118-124), and post-processes. The
 LLM call itself is an I/O shell, not query semantics — what the *engine*
 owes the agent is:
 
-1. a schema-grounding string over the live catalog (S13), and
+1. schema introspection over the live catalog (S13: ``tables.describe_tables``,
+   registered as a query in queries/etl.py), and
 2. a SQL execution surface where generated text hits the same Catalyst
    plans as the DataFrame API (S6) — views registered once, ``spark.sql``
-   from then on,
-3. dialect guidance: the reference's prompt pins SQLite-isms
-   (ai_agent.py:91-99: LIKE-probing of JSON-encoded arrays, ``'[]'``
-   exclusion, space-insensitive title match via REPLACE); on this engine
-   arrays are native and the rules retarget to Spark SQL.
+   from then on — with a plan gate (:func:`validate_sql`) in front of it.
+
+The reference's SQLite dialect rules, retargeted to Spark SQL, are written
+out above ``_AGENT_SQL_SPARK`` in queries/sql_surface.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from boxoffice_spark.tables import describe_tables, register_views
-
-# Reference ai_agent.py:91-99 retargeted from SQLite to Spark SQL: the same
-# three dialect hazards, with native-array idioms replacing JSON-string
-# probing. Fed verbatim into the agent prompt next to the schema string.
-SPARK_DIALECT_RULES = """\
-- Use Spark SQL (ANSI) syntax. Dates: to_date(col), current_date(),
-  date_add/date_sub; never SQLite's date('now', ...) modifiers.
-- Array columns are native ARRAY types: probe with array_contains(col, x)
-  or exists(col, e -> predicate) and test emptiness with size(col) > 0;
-  never LIKE '%x%' against a JSON-encoded string.
-- For space/format-insensitive name matching compare
-  replace(col, ' ', '') to the normalized needle (reference rule:
-  REPLACE(movie_nm, ' ', '')).
-- Every aggregate or computed column must carry an explicit alias."""
-
-
-def schema_grounding(spark: SparkSession, sf_dir: str) -> str:
-    """Schema string for prompt grounding — one block per table, one
-    ``name type [nullable]`` line per column, from the live catalog
-    (``DataFrame.schema``), mirroring ai_agent._get_db_schema's
-    sqlite_master walk."""
-    lines: list[str] = []
-    current = None
-    for row in describe_tables(spark, sf_dir).collect():
-        if row.table_name != current:
-            current = row.table_name
-            lines.append(f"\nTable {current}:")
-        null = "" if row.is_nullable else " NOT NULL"
-        lines.append(f"  {row.column_name} {row.data_type}{null}")
-    return "\n".join(lines).strip()
-
-
-def agent_prompt(spark: SparkSession, sf_dir: str, question: str) -> str:
-    """The full prompt the NL→SQL model would receive (schema + dialect
-    rules + question). The model call itself stays outside the engine."""
-    return (
-        "Generate one Spark SQL query answering the question.\n\n"
-        f"Schema:\n{schema_grounding(spark, sf_dir)}\n\n"
-        f"Dialect rules:\n{SPARK_DIALECT_RULES}\n\n"
-        f"Question: {question}\nSQL:"
-    )
+from boxoffice_spark.tables import register_views
 
 
 def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:

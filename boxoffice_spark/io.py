@@ -1,31 +1,16 @@
 """Sources and sinks (SURVEY.md §2.1).
 
 The reference's storage surface: append (S8), keyed upsert (S9/S10 — see
-operators/upsert.py for the logical form), CSV debug dump (S11), and
-idempotent date-range overwrite (S12). Here the at-rest format is
-date-partitioned parquet; the S12 physical path is a *dynamic* partition
-overwrite (only partitions present in the incoming frame rewrite), enabled
-globally in session.py.
+operators/upsert.py for the logical form) and idempotent date-range
+overwrite (S12). The S11 CSV debug dump is ``df.write.csv``, not wrapped.
+Here the at-rest format is date-partitioned parquet; the S12 physical path
+is a *dynamic* partition overwrite (only partitions present in the incoming
+frame rewrite), enabled globally in session.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-
-class PublishError(OSError):
-    """A WAP promote failed (typically a lost publish race: rename onto a
-    freshly republished target). Subclasses OSError (only — NOT
-    FileExistsError) so callers that catch OSError to detect the race —
-    the contract before the round-7 unique-token rewrite briefly wrapped
-    everything in RuntimeError (ADVICE r07) — keep working; an
-    ``except FileExistsError`` handler will NOT match (ADVICE r08). The
-    survivor directories travel on ``leftovers`` (and the original error
-    on ``__cause__``)."""
-
-    def __init__(self, msg: str, leftovers: list[str]):
-        super().__init__(msg)
-        self.leftovers = leftovers
 
 
 def append(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
@@ -43,59 +28,6 @@ def overwrite_partitions(df: DataFrame, path: str, partition_by: list[str]) -> N
     only the date partitions present in ``df`` are replaced; re-running the
     same backfill is a no-op on final state."""
     df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-
-
-def write_csv(df: DataFrame, path: str) -> None:
-    """S11: CSV debug dump (reference movie_events_scraper.py:304)."""
-    df.write.mode("overwrite").option("header", True).csv(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    keys: list[str],
-    buckets: int = 8,
-    sort_by: list[str] | None = None,
-) -> None:
-    """Bucketed managed table: pre-shuffle the data ONCE at write time so
-    every later join/aggregation on ``keys`` is co-located and plans with
-    no Exchange at all (add ``sort_by=keys`` to also pre-sort and drop the
-    SortMergeJoin's per-query sort).
-
-    This is the 100 TB answer to the reference's repeated fact-dim joins on
-    movie_cd (dashboard.py:287 runs per dashboard hit): amortize the
-    shuffle across every query that ever joins on the key. Both sides must
-    use the same bucket count. Verified shuffle-free in
-    tests/test_bucketed.py.
-    """
-    w = df.write.mode("overwrite").format("parquet").bucketBy(buckets, *keys)
-    if sort_by:
-        w = w.sortBy(*sort_by)
-    w.saveAsTable(table_name)
-
-
-def write_sorted(
-    df: DataFrame, path: str, sort_cols: list[str], partitions: int | None = None
-) -> None:
-    """Range-clustered sorted write: ``repartitionByRange`` on the sort
-    key(s) (one sampling pass + one shuffle) then ``sortWithinPartitions``,
-    so every output file covers a tight, pairwise-disjoint range of the key
-    and parquet min/max stats become an index: a later scan with a
-    predicate on the key skips whole files and row groups at planning /
-    footer time instead of reading them.
-
-    This is the at-rest layout for time-keyed fact data at 100 TB — the
-    difference between a date-range query touching ~its share of files vs
-    all of them. Disjointness + skipping are asserted in
-    tests/test_etl_write.py (pyarrow footer stats + PushedFilters plan).
-    """
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    (
-        df.repartitionByRange(n, *sort_cols)
-        .sortWithinPartitions(*sort_cols)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def compact(
@@ -156,160 +88,3 @@ def compact(
     os.rename(tmp, path)  # atomic; the absent-path window is just these two
     shutil.rmtree(old)
     return n_files
-
-
-def with_day_partition(df: DataFrame, ts_col: str, part_col: str = "dt") -> DataFrame:
-    """Derive the date partition column for a fact table (the reference's
-    boxoffice table is keyed/partitioned by target_dt)."""
-    return df.withColumn(part_col, F.to_date(ts_col))
-
-
-def read_jsonl_quarantine(
-    spark: SparkSession, path: str, schema: str
-) -> tuple[DataFrame, DataFrame]:
-    """Malformed-tolerant JSON-lines source (the REST/scrape ingestion
-    reality: feeds carry occasional broken rows; reference scrapers guard
-    with try/except per page, e.g. kobisdata_extractor.py:63-66).
-
-    PERMISSIVE mode with an explicit ``_corrupt_record`` column keeps the
-    scan single-pass: well-formed rows parse into ``schema``, broken ones
-    land whole in the quarantine column. Returns ``(good, quarantined)``
-    DataFrames off ONE cached scan — good rows flow on, quarantined raw
-    lines go to a dead-letter sink for replay, nothing is silently
-    dropped (FAILFAST would kill the job; DROPMALFORMED would lie).
-
-    The user schema must include ``_corrupt_record string`` (enforced
-    here) — Spark only populates the quarantine column when it is part
-    of the declared schema.
-    """
-    from boxoffice_spark.functions.caching import scoped_persist
-
-    full = schema.rstrip().rstrip(",") + ", _corrupt_record string"
-    raw = scoped_persist(
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path),
-        # one materialization serves both splits; also required for
-        # correctness: referencing only _corrupt_record straight off the
-        # scan is disallowed (Spark needs a non-internal column parsed).
-        # scoped: repeated quarantine reads don't accumulate cached scans.
-        "read_jsonl_quarantine.raw",
-    )
-    good = raw.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-    bad = raw.filter(F.col("_corrupt_record").isNotNull()).select(
-        F.col("_corrupt_record").alias("raw_line")
-    )
-    return good, bad
-
-
-def write_audit_publish(
-    df: DataFrame,
-    path: str,
-    audits: list,
-    partition_by: list[str] | None = None,
-) -> dict:
-    """Write-Audit-Publish (WAP): stage the write to a sibling directory,
-    run every audit callable against a re-READ of the staged files (what
-    consumers will actually see — catching writer-side schema/encoding
-    surprises a DataFrame-level check misses), and only then atomically
-    promote the staging directory to the target path. A failing audit
-    leaves the CURRENT table untouched and the staging directory in
-    place for forensics — downstream readers never observe a bad or
-    partial publish, which plain ``overwrite`` cannot promise (it
-    deletes before it writes).
-
-    ``audits`` are callables ``(DataFrame) -> (bool, str)``; all run,
-    all must pass. Returns {"published": bool, "audit_results": [...],
-    "staging_path": ...}. On a lakehouse this maps to branch-commit
-    (Iceberg WAP / Delta CDF staging tables); on plain parquet
-    directories the atomic step is a filesystem rename, which is
-    per-directory atomic on HDFS/local (S3 needs the table-format
-    route — documented limitation, same contract).
-
-    Atomicity caveat (plain-directory mode only): POSIX offers no
-    atomic two-directory swap, so the promote is two renames
-    (path -> backup, staging -> path). Readers that list ``path``
-    inside that window see it briefly absent — the table-format route
-    above is the fix where that matters. What IS guaranteed: the
-    staging and backup directories carry a per-call unique suffix, so
-    concurrent publishes to the same target never clobber each other's
-    intermediates, and the outcome is always equivalent to SOME serial
-    order of the publishes (last promoter wins; an earlier winner's
-    table is superseded exactly as if the publishes had run
-    sequentially). A racer whose promote lands on an already-republished
-    target raises :class:`PublishError` (an OSError: rename onto a
-    non-empty directory), with its audited copy still in its staging dir
-    and any ``__prev_<token>`` it took still on disk — both paths travel
-    on ``PublishError.leftovers`` (and in the message) for cleanup; no
-    mixed or partial table is ever visible in any interleaving. A hard crash between the renames leaves the full
-    previous table under the ``__prev_<token>`` sibling and the full
-    new table in staging (nothing is deleted until the new table is in
-    place), and a failed promote restores the previous table before
-    re-raising when the target is still absent. Debris contract: a
-    non-published call KEEPS its staging dir for forensics and returns
-    it as ``staging_path`` — the caller owns deleting it (a retry loop
-    that never cleans up accumulates one full table copy per failed
-    attempt).
-    """
-    import os
-    import shutil
-    import uuid
-
-    token = uuid.uuid4().hex[:12]
-    staging = f"{path.rstrip('/')}__staging_{token}"
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(staging)
-    staged = df.sparkSession.read.parquet(staging)
-    results = []
-    ok = True
-    for audit in audits:
-        passed, msg = audit(staged)
-        results.append({"passed": bool(passed), "msg": msg})
-        ok = ok and bool(passed)
-    if not ok:
-        return {
-            "published": False,
-            "audit_results": results,
-            "staging_path": staging,
-        }
-    backup = None
-    if os.path.exists(path):
-        backup = f"{path.rstrip('/')}__prev_{token}"
-        try:
-            os.rename(path, backup)
-        except FileNotFoundError:
-            # a concurrent publisher moved the target between the exists()
-            # check and the rename — proceed as if there was no previous
-            # table; the promote below then races them fairly
-            backup = None
-    try:
-        os.rename(staging, path)
-    except BaseException as exc:
-        if backup is not None and not os.path.exists(path):
-            os.rename(backup, path)  # restore the previous table
-            backup = None
-        # surface the survivor directories: a racer that lost the promote
-        # (or any other rename failure) leaves its staged table and any
-        # un-restored backup on disk — the caller owns their cleanup and
-        # can only do that if the paths travel with the error
-        leftovers = [p for p in (staging, backup) if p and os.path.exists(p)]
-        if not isinstance(exc, Exception):
-            # KeyboardInterrupt/SystemExit must propagate unchanged —
-            # wrapping them would let a generic retry loop swallow the
-            # shutdown signal; restore already happened above
-            raise
-        raise PublishError(
-            f"publish to {path!r} failed; on-disk leftovers to inspect/clean: "
-            f"{leftovers}",
-            leftovers,
-        ) from exc
-    if backup is not None:
-        shutil.rmtree(backup)
-    return {
-        "published": True,
-        "audit_results": results,
-        "staging_path": None,
-    }

@@ -37,13 +37,6 @@ def normalized_text(col: Column | str) -> Column:
 NORMALIZED_SQL = "trim(regexp_replace(lower({col}), '\\s+', ' ', 'g'))"
 
 
-def word_ngrams(col: Column | str, n: int = 3) -> Column:
-    """Word n-gram shingles as an array (order-sensitive token windows —
-    unigram sets don't discriminate on small vocabularies)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return _word_ngrams_col(F.split(normalized_text(c), " "), n)
-
-
 def _word_ngrams_col(words: Column, n: int) -> Column:
     # Spark's sequence(start, stop) DESCENDS when start > stop —
     # sequence(1, 0) = [1, 0], unlike DuckDB generate_series(1, 0) = [] —

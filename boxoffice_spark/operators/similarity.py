@@ -66,6 +66,16 @@ def _require_nonzero(ids, norms) -> None:
         raise ZeroVectorError(f"zero vector has no cosine: vec_id {ids[zero[0]]}")
 
 
+def _unit_rows(ids, mat):
+    """``mat`` with each row scaled to unit L2 norm; a zero row raises
+    :class:`ZeroVectorError` naming its ``ids`` entry."""
+    import numpy as np
+
+    norms = np.linalg.norm(mat, axis=1, keepdims=True)
+    _require_nonzero(ids, norms)
+    return mat / norms
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -163,9 +173,7 @@ def cosine_topk_arrow(
     qrows = queries.select(F.col(id_col), F.col(vec_col).cast("array<double>")).collect()
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    qnorm = np.linalg.norm(qmat, axis=1, keepdims=True)
-    _require_nonzero(qids, qnorm)
-    qmat = qmat / qnorm
+    qmat = _unit_rows(qids, qmat)
     bc = corpus.sparkSession.sparkContext.broadcast((qids, qmat))
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -175,9 +183,7 @@ def cosine_topk_arrow(
                 continue
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             cmat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            cnorm = np.linalg.norm(cmat, axis=1, keepdims=True)
-            _require_nonzero(ids, cnorm)
-            cmat = cmat / cnorm
+            cmat = _unit_rows(ids, cmat)
             # round BEFORE the cut: the global window ranks rounded values
             sims = _round_half_up(cmat @ qn.T, round_to)  # (batch, n_queries)
             kk = min(k + 1, sims.shape[0])
@@ -339,9 +345,7 @@ def near_dup_pairs_arrow(
             return empty
         ids = pdf[id_col].to_numpy(dtype=np.int64)
         mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        # zero-norm guard (sibling-kernel convention): a zero vector
-        # scores 0 against everything, never NaN
-        mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
+        mat = _unit_rows(ids, mat)
         sims = _round_half_up(mat @ mat.T, round_to)
         ia, ib = np.nonzero(np.triu(sims >= threshold, k=1))
         if len(ia) == 0:
@@ -536,7 +540,7 @@ def hard_negative_topk(
     ).collect()
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    qmat = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-30)
+    qmat = _unit_rows(qids, qmat)
     qlab = np.array([r[2] for r in qrows], dtype=np.int64)
     bc = corpus.sparkSession.sparkContext.broadcast((qids, qmat, qlab))
 
@@ -548,9 +552,7 @@ def hard_negative_topk(
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             labs = pdf[label_col].to_numpy(dtype=np.int64)
             cmat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            cmat = cmat / np.maximum(
-                np.linalg.norm(cmat, axis=1, keepdims=True), 1e-30
-            )
+            cmat = _unit_rows(ids, cmat)
             # round BEFORE the cut (the global window ranks rounded values),
             # then mask same-label rows to -inf; the bounded tie-inclusive
             # cut replaces the old fixed +1 margin (which silently dropped
@@ -635,10 +637,6 @@ def ann_pq_topk(
         raise ValueError(f"dim {d_probe} not divisible by m={m}")
     dsub = d_probe // m
 
-    def _unit_rows(rows, idx):
-        mat = np.stack([np.asarray(r[idx], dtype=np.float64) for r in rows])
-        return mat / np.linalg.norm(mat, axis=1, keepdims=True)
-
     # --- train: seeded Lloyd's per subspace on a bounded, deterministic
     # sample, ordered by salted content hash of the id — uniform over the
     # corpus where a first-ids prefix would be biased toward the earliest
@@ -649,7 +647,10 @@ def ann_pq_topk(
         .limit(train_size)
         .collect()
     )
-    tmat = _unit_rows(train_rows, 1)
+    tmat = _unit_rows(
+        [r[0] for r in train_rows],
+        np.stack([np.asarray(r[1], dtype=np.float64) for r in train_rows]),
+    )
     # a corpus smaller than ksub cannot seed ksub distinct centroids —
     # clamp instead of letting rng.choice(replace=False) raise; fewer
     # centroids only coarsens the quantizer, ADC stays well-defined
@@ -672,7 +673,9 @@ def ann_pq_topk(
     # centroid of that subspace. ADC score = sum_j LUT[q, j, code_j].
     qrows = queries.select(id_col, vec_col).collect()
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = _unit_rows(qrows, 1)
+    qmat = _unit_rows(
+        qids, np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
+    )
     luts = np.empty((len(qids), m, ksub))
     for j in range(m):
         qs = qmat[:, j * dsub : (j + 1) * dsub]
@@ -686,8 +689,9 @@ def ann_pq_topk(
             if len(pdf) == 0:
                 continue
             ids = pdf[id_col].to_numpy(dtype=np.int64)
-            cmat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            cmat = cmat / np.linalg.norm(cmat, axis=1, keepdims=True)
+            cmat = _unit_rows(
+                ids, np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            )
             # encode: nearest centroid per subspace -> (batch, m) codes.
             # (Materialized inline here; a persisted index would write
             # `codes` out once and ADC-scan it per query batch.)
@@ -784,8 +788,7 @@ def _fit_unit_kmeans(
     if not rows:
         raise ValueError("kmeans fit: corpus is empty — nothing to index")
     mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
-    return _lloyds(mat, n_cells, seed=seed)
+    return _lloyds(_unit_rows([r[0] for r in rows], mat), n_cells, seed=seed)
 
 
 def _probe_cells(qrows, cmat, n_probe: int):
@@ -793,10 +796,10 @@ def _probe_cells(qrows, cmat, n_probe: int):
     distance of the unit-normalized query to the RAW centroid
     (``|c|^2 - 2 q.c`` — same rule as _assign_cells), ties broken on the
     lower cell index via lexsort. The ONE probe-selection implementation
-    shared by ann_ivf_topk and ivf_probe_read, so the at-rest IVF layout
-    returns bit-identical neighbors to the in-query operator even on
-    near-tie centroid distances (two float paths would disagree in the
-    last ulp exactly there). Returns [(query_id, qvec_list, [cells])].
+    shared by ann_ivf_topk and ann_ivfpq_topk, so both ANN kernels probe
+    the same cells even on near-tie centroid distances (two float paths
+    would disagree in the last ulp exactly there). Returns
+    [(query_id, qvec_list, [cells])].
     """
     import numpy as np
 
@@ -804,7 +807,7 @@ def _probe_cells(qrows, cmat, n_probe: int):
     out = []
     for r in qrows:
         qv = np.asarray(r[1], dtype=np.float64)
-        qn = qv / max(np.linalg.norm(qv), 1e-30)
+        qn = _unit_rows([r[0]], qv[None, :])[0]
         d2 = c2 - 2.0 * (cmat @ qn)
         order = np.lexsort((np.arange(len(c2)), d2))[:n_probe]
         out.append((int(r[0]), [float(x) for x in qv], [int(c) for c in order]))
@@ -812,17 +815,18 @@ def _probe_cells(qrows, cmat, n_probe: int):
 
 
 def _assign_cells(
-    df: DataFrame, keep_cols: str, cmat, with_cos: bool = False
+    df: DataFrame, id_col: str, keep_cols: str, cmat, with_cos: bool = False
 ) -> DataFrame:
     """Arrow-kernel cell assignment: one BLAS pass per batch against the
     closure-shipped centroid matrix; argmin Euclidean to the raw centroid
     (argmin |c|^2 - 2 x.c for unit x — NOT max-cosine, which would
     re-rank when centroid norms differ; np.argmin's first-min rule =
-    lowest-index tiebreak). Input df must have a ``_v`` array<double>
-    column; ``keep_cols`` (a schema string) names the input columns that
-    pass through to the output — only those ship back across Arrow, so
-    callers that need nothing but the assignment (cluster_balance) don't
-    pay to round-trip the vectors. ``with_cos`` adds ``_cs``, the cosine
+    lowest-index tiebreak). Input df must have ``id_col`` (the id a
+    :class:`ZeroVectorError` names) and a ``_v`` array<double> column;
+    ``keep_cols`` (a schema string) names the input columns that pass
+    through to the output — only those ship back across Arrow, so callers
+    that need nothing but the assignment (cluster_balance) don't pay to
+    round-trip the vectors. ``with_cos`` adds ``_cs``, the cosine
     of each row to its chosen centroid. Zero shuffle, corpus scanned
     once. The single shared kernel behind ann_ivf_topk's index cells and
     cluster_balance's audit — one assignment rule, two consumers."""
@@ -834,6 +838,8 @@ def _assign_cells(
     from boxoffice_spark.tables import spread
 
     c2 = (cmat**2).sum(axis=1)
+    # centroids, not data vectors: a cell mean can cancel to zero and has
+    # no vec_id to name, so it keeps the floor and scores 0
     cunit = cmat / np.maximum(
         np.linalg.norm(cmat, axis=1, keepdims=True), 1e-30
     )
@@ -847,7 +853,7 @@ def _assign_cells(
             if not len(pdf):
                 continue
             x = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-            x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-30)
+            x = _unit_rows(pdf[id_col].to_numpy(), x)
             d2 = c2[None, :] - 2.0 * (x @ cmat.T)
             cell = d2.argmin(axis=1)
             data = {n: pdf[n] for n in names}
@@ -891,13 +897,13 @@ def ann_ivf_topk(
             F.col(id_col).alias("neighbor_id"),
             F.col(vec_col).cast("array<double>").alias("_v"),
         ),
+        "neighbor_id",
         "neighbor_id long, _v array<double>",
         cmat,
     ).withColumnRenamed("_v", "_cv")
 
     # probe-cell selection is driver-side on the (bounded) query batch —
-    # ONE implementation (_probe_cells) shared with ivf_probe_read so the
-    # at-rest layout's probes are bit-identical to this operator's
+    # ONE implementation (_probe_cells) shared with ann_ivfpq_topk
     qrows = queries.select(
         F.col(id_col), F.col(vec_col).cast("array<double>")
     ).collect()
@@ -997,7 +1003,7 @@ def ann_ivfpq_topk(
         .collect()
     )
     tmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in train_rows])
-    tmat = tmat / np.maximum(np.linalg.norm(tmat, axis=1, keepdims=True), 1e-30)
+    tmat = _unit_rows([r[0] for r in train_rows], tmat)
     tcell = (c2[None, :] - 2.0 * (tmat @ cmat.T)).argmin(axis=1)
     tres = tmat - cmat[tcell]
     # fewer train rows than ksub only coarsens the codebook (same clamp
@@ -1019,8 +1025,7 @@ def ann_ivfpq_topk(
     ).collect()
     probe_qid, probe_cell, probe_luts = [], [], []
     for qid, qv, cell_list in _probe_cells(qrows, cmat, n_probe):
-        qu = np.asarray(qv, dtype=np.float64)
-        qu = qu / max(np.linalg.norm(qu), 1e-30)
+        qu = _unit_rows([qid], np.asarray(qv, dtype=np.float64)[None, :])[0]
         for c in cell_list:
             tgt = qu - cmat[c]
             lut = np.empty((m, ksub))
@@ -1047,8 +1052,9 @@ def ann_ivfpq_topk(
             if len(pdf) == 0:
                 continue
             ids = pdf[id_col].to_numpy(dtype=np.int64)
-            x = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-30)
+            x = _unit_rows(
+                ids, np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            )
             cell = (cb_c2[None, :] - 2.0 * (x @ cb_cmat.T)).argmin(axis=1)
             res = x - cb_cmat[cell]
             codes = np.empty((len(ids), m), dtype=np.int64)
@@ -1139,7 +1145,8 @@ def cluster_balance(
     # the SAME assignment kernel ann_ivf_topk indexes with (one rule, two
     # consumers); keep_cols empty — only (cell, cos) ships back over Arrow
     per_vec = _assign_cells(
-        corpus.select(F.col(vec_col).cast("array<double>").alias("_v")),
+        corpus.select(id_col, F.col(vec_col).cast("array<double>").alias("_v")),
+        id_col,
         "",
         cmat,
         with_cos=True,
@@ -1212,8 +1219,9 @@ def mmr_rerank(
                               ).reset_index(drop=True)
         ids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
         rel = pdf["cos_sim"].to_numpy(dtype=np.float64)
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-        mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
+        mat = _unit_rows(
+            ids, np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
+        )
         pair = _round_half_up(mat @ mat.T, round_to)
         n = len(ids)
         kk = min(k, n)
@@ -1244,115 +1252,6 @@ def mmr_rerank(
 
     return joined.groupBy("query_id").applyInPandas(
         select_group, schema="query_id long, neighbor_id long, mmr_score double, pick int"
-    )
-
-
-def write_ivf_layout(
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    vec_type: str = "array<float>",
-    n_cells: int = 16,
-    train_size: int = 1024,
-    seed: int = 42,
-):
-    """Materialize the IVF index AS A TABLE LAYOUT: the corpus written
-    hive-partitioned by coarse-quantizer cell (`path/cell=N/...`), with
-    the centroid matrix persisted as a `_ivf_centroids.json` sidecar
-    (underscore-prefixed -> invisible to Spark's file index). This is the
-    at-rest form of ann_ivf_topk's in-query index: the cell assignment is
-    paid ONCE at write time, and every later probe scans only its
-    `n_probe` directories via partition pruning — at 100 TB the
-    difference between a query touching ~n_probe/n_cells of the files and
-    re-assigning the whole corpus per query batch.
-
-    Same trainer and assignment kernel as the in-query operator
-    (_fit_unit_kmeans + _assign_cells), so a probe over this layout
-    returns bit-identical results to ann_ivf_topk at equal parameters
-    (asserted in tests/test_bucketed.py). Sidecar write is
-    local-filesystem (dev/test scope, same honesty note as io.compact);
-    production centroid metadata belongs in a catalog/table-format
-    property.
-
-    Returns the centroid matrix.
-    """
-    import json
-    import os
-
-    cmat = _fit_unit_kmeans(corpus, id_col, vec_col, n_cells, train_size, seed)
-    assigned = _assign_cells(
-        corpus.select(
-            id_col, vec_col, F.col(vec_col).cast("array<double>").alias("_v")
-        ),
-        f"{id_col} long, {vec_col} {vec_type}",
-        cmat,
-    )
-    # consolidate before the partitioned write: one shuffle on cell ->
-    # each cell directory holds few large files instead of (scan
-    # partitions x cells) shards — footer-fetch and scheduler cost at
-    # probe time scale with file count, and this write is one-off
-    assigned.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(path)
-    with open(os.path.join(path, "_ivf_centroids.json"), "w") as f:
-        json.dump([[float(x) for x in c] for c in cmat], f)
-    return cmat
-
-
-def ivf_probe_read(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_probe: int = 4,
-):
-    """Top-k probe over a :func:`write_ivf_layout` table: load the
-    centroid sidecar, pick each query's ``n_probe`` nearest cells
-    driver-side (queries are a bounded probe batch; same Euclidean-to-
-    raw-centroid rule and cell-asc tiebreak as ann_ivf_topk), then read
-    ONLY those `cell=` partitions — the `.isin` filter on the partition
-    column prunes every other directory at planning time (file-count
-    assertion in tests/test_bucketed.py) — and rerank exactly inside
-    them. Scan cost per probe batch is the probed cells' bytes, not the
-    corpus's.
-    """
-    import json
-    import os
-
-    import numpy as np
-
-    with open(os.path.join(path, "_ivf_centroids.json")) as f:
-        cmat = np.asarray(json.load(f), dtype=np.float64)
-
-    qrows = queries.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>")
-    ).collect()
-    selected = _probe_cells(qrows, cmat, n_probe)
-    pairs = [(qid, c) for qid, _, cell_list in selected for c in cell_list]
-    qvecs = [(qid, qv) for qid, qv, _ in selected]
-    probe_pairs = spark.createDataFrame(pairs, "query_id long, cell int")
-    qdf = spark.createDataFrame(qvecs, "query_id long, _qv array<double>")
-
-    needed = sorted({c for _, c in pairs})
-    scan = (
-        spark.read.parquet(path)
-        .filter(F.col("cell").isin(needed))
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("_cv"),
-            "cell",
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scan.join(F.broadcast(probe_pairs), "cell")
-        .join(F.broadcast(qdf), "query_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_sim", fround(cosine(F.col("_qv"), F.col("_cv")), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
     )
 
 

@@ -146,8 +146,8 @@ def quality_score(col: str) -> Column:
         min(len, 500) * (greatest(len, 1) - n_punct)
         -----------------------------------------
                 500 * greatest(len, 1)
-    emitted via ratio6's BIGINT HALF_UP (r09 legacy conversion — the
-    former round(double, 6) is engine-build surface; exact while
+    emitted via ratio6's BIGINT HALF_UP (round(double, 6) rounds
+    differently across engine builds); exact while
     500 * len fits ratio6's bound, i.e. len < 9e9 chars). ``col`` is a
     column NAME (the ratio is built as a SQL expression)."""
     num, den = _quality_ratio(col, sql=False)
@@ -158,12 +158,6 @@ def quality_score_sql(col: str) -> str:
     """DuckDB twin of :func:`quality_score`."""
     num, den = _quality_ratio(col, sql=True)
     return _ratio6_sql(num, den)
-
-
-def fingerprint(col: Column | str) -> Column:
-    """Content fingerprint: md5 of normalized text (engine-portable; the
-    rolling-hash variant at scale would be xxhash64)."""
-    return F.md5(normalized_text(col))
 
 
 def repetition_stats(df, id_col: str, text_col: str):
@@ -183,13 +177,14 @@ def repetition_stats(df, id_col: str, text_col: str):
     dup_bigram_frac is null (left join), never a crash or divide-by-zero —
     matching DuckDB's empty generate_series(1, 0).
 
-    r11 note: two single-tokenize-pass rewrites (struct-tagged rows and a
-    flat word/bigram union keyed on space-in-token) were built and
-    interleaved-A/B'd at sf0.1 — BOTH measured slower than this two-chain
-    form (1.23 s / 1.12 s vs 1.04 s min-of-6, same session): the per-token
-    tagging work exceeds the saved normalize+split, and the (doc, token)
-    shuffles carry the same bytes either way. Kept the two-chain form
-    (guide §1.1: the "ideal" single-pass plan lost the empirical loop).
+    Measured alternatives: two single-tokenize-pass rewrites
+    (struct-tagged rows and a flat word/bigram union keyed on
+    space-in-token) were built and interleaved-A/B'd at sf0.1 — BOTH
+    measured slower than this two-chain form (1.23 s / 1.12 s vs 1.04 s
+    min-of-6, same session): the per-token tagging work exceeds the saved
+    normalize+split, and the (doc, token) shuffles carry the same bytes
+    either way. Kept the two-chain form: the "ideal" single-pass plan
+    lost the measurement.
     """
     words = df.select(
         F.col(id_col), F.explode(words_of(text_col)).alias("word")
@@ -226,7 +221,7 @@ def repetition_stats(df, id_col: str, text_col: str):
             "n_distinct_words",
             # exact integer ratios: ratio6's BIGINT HALF_UP replaces the
             # build-sensitive round(double, 6); NULL bigram rows propagate
-            # to NULL on both engines (r09 legacy conversion)
+            # to NULL on both engines
             _ratio6("max_c", "n_words").alias("top_word_frac"),
             _ratio6("dup_bg", "total_bg").alias("dup_bigram_frac"),
         )
@@ -289,7 +284,7 @@ def tfidf_top_terms(docs, id_col: str, text_col: str, k: int = 3):
     ).filter(F.col("term") != "")
     # tf feeds BOTH the df derivation and the scoring join; persist so the
     # tokenize + (doc, term) shuffle runs once (exchange reuse does not
-    # collapse the two references — see README round-3 findings).
+    # collapse the two references — see README's measured scale findings).
     # scoped_persist: one live cache across repeated calls, no storage leak.
     from boxoffice_spark.functions.caching import scoped_persist
 
@@ -388,10 +383,10 @@ def bm25_topk(
         sorted({(qid, t) for qid, terms in queries for t in terms}),
         "query_id int, term string",
     )
-    # document frequencies for QUERY TERMS ONLY (r11 optimization): the
+    # document frequencies for QUERY TERMS ONLY: the
     # broadcast semi-join filters tf map-side BEFORE the per-term count,
     # so the df aggregate shuffles the matching postings instead of the
-    # whole vocabulary (guide §2.3 "aggregate only what you need" — at
+    # whole vocabulary ("aggregate only what you need" — at
     # corpus scale the full-vocab (term, df) aggregate is itself
     # vocabulary-sized). Same df values for every term that can reach the
     # scoring join.
@@ -413,7 +408,7 @@ def bm25_topk(
         .select(
             "query_id",
             "doc_id",
-            # r10 legacy conversion: fround's pinned floor-implemented
+            # fround's pinned floor-implemented
             # HALF_UP puts the ln-chain score on the 6dp grid identically
             # on every engine build (round(double, 6) is build surface);
             # the downstream decimal sum is then value-preserving.
@@ -485,7 +480,7 @@ def rrf_fuse(rankings, k: int = 10, c: int = 60, round_to: int = 6):
     combiner — it needs only ranks, never score calibration, so a BM25
     list and a cosine list fuse without normalizing incomparable scores.
 
-    Determinism contract (r10 legacy conversion): each contribution is
+    Determinism contract: each contribution is
     the EXACT integer HALF_UP of 1/(c + rank) in 1e-10 units
     (functions/numeric.units_div — BIGINT arithmetic, no engine rounding
     rule anywhere), the per-doc accumulation is an exact integer sum

@@ -63,8 +63,8 @@ the window merge gets the same via ``unionByName(allowMissingColumns)``.
 (re-applying a batch rewrites rows to the same values); append-only
 retries need the dedup precondition above. Streaming form: this module's
 semantics inside ``foreachBatch`` + ``txnAppId``/``txnVersion`` for
-exactly-once (streaming/stateful.stream_upsert_sink carries the
-batch_id for the same purpose).
+exactly-once; the engine's streaming latest-row-per-key is the stateful
+operator behind ``latest_stock_state`` (streaming/stateful.py).
 """
 
 from __future__ import annotations
@@ -107,8 +107,8 @@ def snapshot_diff(
     not change events.
 
     Scale shape: ONE full-outer shuffle join on the key (both sides
-    hash-partitioned once); with both snapshots bucketed by the key
-    (io.write_bucketed) the exchange disappears entirely. The change
+    hash-partitioned once); with both snapshots written ``bucketBy`` the
+    key the exchange disappears entirely. The change
     predicate is evaluated in the join's projection — no second pass, no
     row comparison UDF.
     """

@@ -701,8 +701,8 @@ def e_scd2_asof_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     side of e_scd2_history ("what was the value on date X"), i.e. time
     travel for engines without a transactional table format. At scale
     the interval predicate is scan-side: with the dimension written
-    range-partitioned on valid_from (io.write_sorted), footer min/max
-    prune every file whose intervals cannot straddle T."""
+    ``repartitionByRange`` + ``sortWithinPartitions`` on valid_from,
+    footer min/max prune every file whose intervals cannot straddle T."""
     from pyspark.sql import Window
 
     ev = table(spark, sf_dir, "events").filter(F.col("event_type") == "signup")
@@ -1032,8 +1032,8 @@ def _md5_u60_sql(hexcol: str) -> str:
     60-bit BIGINT, mirroring Spark's ``conv(substring(md5(..),1,15),16,10)``
     with explicit digit arithmetic (strpos + BIGINT place-value constants,
     max term 15*16^14 < 2^63) instead of the '0x'-prefixed string->BIGINT
-    cast, whose parse semantics vary across DuckDB builds (the
-    t_span_corruption round-7 driver red; VERDICT r07 task 2 class b)."""
+    cast, whose parse semantics vary across DuckDB builds (first seen as
+    a t_span_corruption mismatch)."""
     terms = " + ".join(
         f"(strpos('0123456789abcdef', substring({hexcol}, {d}, 1)) - 1)"
         f" * {16 ** (15 - d)}"

@@ -101,7 +101,7 @@ def m_training_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding) tuple join that precedes contrastive/captioning training —
     binary asset rows joined to their precomputed embeddings, filtered to
     the target language. The join is keyed (asset -> embedding id); at
-    corpus scale both sides bucket on the id (io.write_bucketed) and the
+    corpus scale both sides are written ``bucketBy`` the id and the
     assembly is exchange-free. Emitting the embedding NORM (not the raw
     array) keeps the oracle comparison scalar; the payload stays opaque
     bytes end-to-end. (The fixture keys embeddings by doc_id % 200 — the

@@ -129,7 +129,7 @@ def psi_drift_terms(d: DataFrame) -> DataFrame:
     w = Window.partitionBy()
     p = F.col("n_corpus").cast("double") / F.sum("n_corpus").over(w)
     q = F.col("n_batch").cast("double") / F.sum("n_batch").over(w)
-    # r10 legacy conversion: the PSI term pins its 6dp grid via fround
+    # the PSI term pins its 6dp grid via fround
     # (round(double, 6) is engine-build surface).
     term = F.when(
         (F.col("n_corpus") > 0) & (F.col("n_batch") > 0),
@@ -304,8 +304,8 @@ def dq_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders), via LEFT ANTI probes — NOT EXISTS semantics, null-safe where
     NOT IN is not. Each probe is one shuffle pair on the key; at scale
     the dim side of the first probe is broadcastable and the second rides
-    the fact tables' co-partitioning if they're bucketed by orderkey
-    (io.write_bucketed)."""
+    the fact tables' co-partitioning if they're written ``bucketBy``
+    orderkey."""
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     li = table(spark, sf_dir, "lineitem")
@@ -380,7 +380,7 @@ def completeness_counters() -> list:
 def completeness_by_day(ev: DataFrame) -> DataFrame:
     """Frame-level form of dq_completeness_by_day (the streaming twin's
     equality tests aggregate arbitrary event frames through it)."""
-    # r10 legacy conversion: the completeness ratio is exact-integer
+    # the completeness ratio is exact-integer
     # ratio6, not the build-sensitive round(double, 6).
     return ev.groupBy(F.to_date("ts").alias("day")).agg(
         *completeness_counters(),
@@ -440,7 +440,7 @@ def dq_numeric_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     e2 = g.select(
         "event_type", "is_batch", F.posexplode("qs").alias("i", "q")
     )
-    # r10 legacy conversion: every grid cell pins via fround; the gap is
+    # every grid cell pins via fround; the gap is
     # computed from the RAW quantiles exactly as the oracle does (the old
     # Spark form diffed the ROUNDED cells — a latent half-grid mismatch).
     out = e2.groupBy("event_type", "i").agg(
@@ -513,7 +513,7 @@ def dq_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     prof = wide.selectExpr(
         "split", f"stack({len(cols)}, {cells}) AS (column_name, n, n_nonnull, n_distinct)"
     )
-    # r10 legacy conversion: null rates are exact integer ratios (ratio6:
+    # null rates are exact integer ratios (ratio6:
     # (n - n_nonnull)/n); the delta is the raw difference of the two grid
     # doubles (bit-identical inputs -> bit-identical difference).
     r = prof.filter("split = 'ref'").select(
@@ -646,7 +646,7 @@ def dq_freshness_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "n_events",
             "last_ts",
-            # r10 legacy conversion: fround pins the 6dp grid of the
+            # fround pins the 6dp grid of the
             # exact-microsecond lag ratio (round is build surface).
             fround(lag_us.cast("double") / 3600000000.0, 6).alias("hours_behind"),
             (lag_us > 24 * 3600000000).alias("sla_breach"),
@@ -895,7 +895,7 @@ def dq_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ks_crit is emitted as the RAW double: 1.358*sqrt((n1+n2)/(n1*n2)) is a
     # chain of correctly-rounded IEEE ops over exact integers, so the full-
     # mantissa double is bit-identical on every conformant build — unlike the
-    # dec6 decimal cast it replaces, which went driver-red in r07 AND r08
+    # dec6 decimal cast it replaces, which mismatched across DuckDB builds
     # (double->decimal-grid rounding is itself build surface).
     return stat.select(
         "status",
@@ -1099,8 +1099,8 @@ def dq_order_lineitem_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     with both sides' money totals so the absolute exposure is visible
     next to the count. Per-line amounts are EXACT 6dp rationals (2dp
     price x 2dp discount x 2dp tax), so they quantize LOSSLESSLY to
-    integer micros (funits — r10 conversion off the build-sensitive
-    decimal cast of the double product); group sums are exact BIGINT
+    integer micros (funits, not the build-sensitive decimal cast of
+    the double product); group sums are exact BIGINT
     micros, detail_total rounds to cents via units_div's exact integer
     HALF_UP (tie-safe on exact half-cent totals, which ARE reachable),
     and one IEEE division emits the double. Bucket thresholds compare
@@ -1109,8 +1109,8 @@ def dq_order_lineitem_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     gone). One shuffle of lineitem to the order grain + one
     key join against the header scan + a |status x bucket| aggregate —
     two scans total at any scale, no second pass per rule. Cell-exact."""
-    # r10 legacy conversion (the broadened DECCAST detector's flag): the
-    # per-line amount is an exact 6dp rational, so it converts to EXACT
+    # the per-line amount (flagged by parity_audit's DECCAST detector)
+    # is an exact 6dp rational, so it converts to EXACT
     # integer micros via funits (floor-implemented HALF_UP — identical
     # IEEE ops on every build) instead of a decimal cast of the double
     # product; sums, thresholds, and the cent rounding (units_div) are
@@ -1207,7 +1207,7 @@ def dq_duplicate_payments(spark: SparkSession, sf_dir: str) -> DataFrame:
     (custkey, bucket)-keyed rows; no window, no band join, no global
     sort. Cell-exact; non-vacuous at every fixture scale (1 pair at
     sf0.001, 48 at sf0.01, 404 at sf0.1)."""
-    # r10 legacy conversion: the 10k bucket key pins its rounding via
+    # the 10k bucket key pins its rounding via
     # fround (negative-scale round(double, -4) is build surface and a 2dp
     # price CAN sit exactly on a 5000 boundary).
     o = table(spark, sf_dir, "orders").select(

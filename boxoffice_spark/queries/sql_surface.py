@@ -37,11 +37,20 @@ def q_sql_dashboard_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_sql(spark, sf_dir, _DASHBOARD_SQL)
 
 
-# The representative "generated by the agent" query: exercises the three
-# retargeted dialect rules (agent.SPARK_DIALECT_RULES) — space-insensitive
-# matching via replace(), explicit to_date-style casting, aliased
-# aggregates. (The reference's prompt mandates the SQLite twins of these at
-# ai_agent.py:91-99.)
+# The representative "generated by the agent" query. The reference's prompt
+# pins SQLite dialect rules (ai_agent.py:91-99); retargeted to Spark SQL,
+# with native-array idioms replacing JSON-string probing, they read:
+# - Use Spark SQL (ANSI) syntax. Dates: to_date(col), current_date(),
+#   date_add/date_sub; never SQLite's date('now', ...) modifiers.
+# - Array columns are native ARRAY types: probe with array_contains(col, x)
+#   or exists(col, e -> predicate) and test emptiness with size(col) > 0;
+#   never LIKE '%x%' against a JSON-encoded string.
+# - For space/format-insensitive name matching compare
+#   replace(col, ' ', '') to the normalized needle (reference rule:
+#   REPLACE(movie_nm, ' ', '')).
+# - Every aggregate or computed column must carry an explicit alias.
+# This query exercises three of them: space-insensitive matching via
+# replace(), explicit date casting and aliased aggregates.
 _AGENT_SQL_SPARK = """
 SELECT c.c_mktsegment AS segment,
        count(DISTINCT c.c_custkey) AS n_customers,

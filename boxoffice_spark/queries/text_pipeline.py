@@ -2381,9 +2381,9 @@ def t_curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     first, phase 4 = cleanest last — the annealing order), plus a
     deterministic md5 shuffle key for within-phase ordering. The training
     order is then a WRITE-SORTED layout on (phase, shuffle_key)
-    (io.write_sorted), NOT a global rank window — a global row_number is
-    exactly the single-reducer anti-pattern the plan gate forbids at
-    100 TB. Thresholds come from one bounded one-row aggregate (exact
+    (``repartitionByRange`` + ``sortWithinPartitions``), NOT a global rank
+    window — a global row_number is exactly the single-reducer
+    anti-pattern the plan gate forbids at 100 TB. Thresholds come from one bounded one-row aggregate (exact
     interpolated percentile — the sketch path substitutes past ~10^7
     rows) broadcast back over the corpus; assignment is a zero-shuffle
     projection, stable under corpus growth only via re-threshold (by
@@ -3312,7 +3312,7 @@ def t_lang_id_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     output cell is an EXACT integer ratio — p_o = m/n, p_e = S/n^2 with
     S = sum(rn*cn), and kappa = (p_o-p_e)/(1-p_e) = (m*n-S)/(n^2-S) —
     so all three go through ratio6's BIGINT HALF_UP (parity rule 4; the
-    former round(double, 6) went driver-red in round 7, and integer
+    former round(double, 6) mismatched across DuckDB builds, and integer
     ratios CAN sit on 6dp grid ties). Exact while 2e6*S fits BIGINT,
     i.e. n_docs <= 2.1e6 per run; past that Spark's non-ANSI BIGINT
     arithmetic would WRAP SILENTLY (DuckDB raises), so the n_docs
@@ -3724,7 +3724,7 @@ def t_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Both rates are exact integer ratios -> ratio6's BIGINT HALF_UP
     # (parity rule 4): integer ratios CAN sit on 6dp grid ties, which is
-    # exactly why the former round(double, 6) went driver-red in round 7.
+    # exactly why the former round(double, 6) mismatched across builds.
     return counted.select(
         "source",
         "n_tokens",

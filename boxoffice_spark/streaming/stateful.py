@@ -118,58 +118,6 @@ def stock_poll_stream(
     )
 
 
-def stream_upsert_sink(
-    spark: SparkSession,
-    path: str,
-    n_events: int = 4,
-    n_theaters: int = 3,
-    max_polls: int = 6,
-) -> DataFrame:
-    """S9 (keyed upsert sink) in streaming form: each micro-batch of the
-    poll stream MERGEs into a keyed parquet state table via foreachBatch —
-    the reference's ``ON CONFLICT(event_id, theater_name) DO UPDATE``
-    executed incrementally (supabase_connector.py:58-85's composite-key
-    upsert driven by the 10-minute cron).
-
-    foreachBatch(merge_upsert) is the parquet-only stand-in for a
-    transactional ``MERGE INTO`` (Delta/Iceberg) at scale: read current
-    state, last-writer-wins on the key, overwrite. Returns the final state
-    table (one row per key, latest poll wins).
-    """
-    from boxoffice_spark.operators.upsert import merge_upsert
-
-    keys = ["event_id", "theater_name"]
-
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        import os
-
-        from pyspark.sql import functions as F
-
-        from boxoffice_spark.operators.temporal import latest_per_key
-
-        s = batch.sparkSession
-        # ANY batch may span several polls of the same key (slow trigger,
-        # source lag) — including batch 0: always reduce to the batch's own
-        # latest per key first, or the state table is seeded with duplicate
-        # keys that merge_upsert's contract does not allow.
-        latest = latest_per_key(batch, keys, [F.desc("scraped_at")])
-        # explicit existence check, not try/except: a transient READ failure
-        # must not be mistaken for 'first batch' and silently overwrite all
-        # accumulated state with just this batch
-        if not os.path.exists(path):
-            latest.write.mode("overwrite").parquet(path)
-            return
-        current = s.read.parquet(path)
-        merged = merge_upsert(current, latest, keys)
-        # materialize before overwriting the path being read
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
-
-    stream = stock_poll_stream(spark, n_events, n_theaters, max_polls)
-    q = stream.writeStream.foreachBatch(merge_batch).trigger(processingTime="0 seconds").start()
-    _await_polls(q, max_polls)
-    return spark.read.parquet(path)
-
-
 def latest_stock_state(
     spark: SparkSession, n_events: int = 4, n_theaters: int = 3, max_polls: int = 6
 ) -> DataFrame:

@@ -1,6 +1,6 @@
-"""Physical sink semantics (S8 append, S11 CSV, S12 dynamic partition
-overwrite) — exercised against a tmp dir since the query contract only
-covers logical plans."""
+"""Physical sink semantics (S8 append, S12 dynamic partition overwrite)
+— exercised against a tmp dir since the query contract only covers
+logical plans."""
 
 from __future__ import annotations
 
@@ -22,9 +22,10 @@ def test_append_then_count(spark, sf_dir, tmp_path):
 
 def test_dynamic_partition_overwrite_is_idempotent(spark, sf_dir, tmp_path):
     out = str(tmp_path / "fact")
-    li = bio.with_day_partition(
-        table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_shipdate"),
-        "l_shipdate",
+    li = (
+        table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_extendedprice", "l_shipdate")
+        .withColumn("dt", F.to_date("l_shipdate"))
     )
     jan = li.filter(F.col("l_shipdate").between("1996-01-01", "1996-01-31"))
     bio.append(li, out, partition_by=["dt"])
@@ -49,15 +50,6 @@ def test_dynamic_partition_overwrite_is_idempotent(spark, sf_dir, tmp_path):
     assert feb_cnt == li.filter(F.col("l_shipdate").between("1996-02-01", "1996-02-29")).count()
 
 
-def test_csv_roundtrip(spark, sf_dir, tmp_path):
-    out = str(tmp_path / "csv")
-    n = table(spark, sf_dir, "nation")
-    bio.write_csv(n, out)
-    back = spark.read.option("header", True).csv(out)
-    assert back.count() == n.count()
-    assert set(back.columns) == set(n.columns)
-
-
 def test_merge_upsert_properties(spark, sf_dir):
     """Upsert invariants: updated keys take new values, unmatched old rows
     survive, fresh keys insert, key-uniqueness holds."""
@@ -78,9 +70,10 @@ def test_partition_pruning_on_read(spark, sf_dir, tmp_path):
     partition layout, and the property that turns a 100 TB scan into a
     one-day scan for the dashboard's date-range queries."""
     out = str(tmp_path / "pruned_fact")
-    li = bio.with_day_partition(
-        table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_shipdate"),
-        "l_shipdate",
+    li = (
+        table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_extendedprice", "l_shipdate")
+        .withColumn("dt", F.to_date("l_shipdate"))
     )
     bio.append(li, out, partition_by=["dt"])
     read = spark.read.parquet(out).filter(F.col("dt") == "1996-01-15")
@@ -132,104 +125,6 @@ def test_compaction_partitioned_few_files_per_dir(spark, sf_dir, tmp_path):
     assert got == before
 
 
-def test_sorted_write_disjoint_ranges_and_file_skipping(spark, sf_dir, tmp_path):
-    """write_sorted must produce files whose sort-key min/max footer stats
-    are pairwise disjoint (ordered ranges — what makes parquet stats an
-    index), and a key-predicate scan must push the filter down to the scan."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    out = str(tmp_path / "sorted_lineitem")
-    li = table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_extendedprice", "l_shipdate"
-    )
-    bio.write_sorted(li, out, ["l_shipdate"], partitions=8)
-
-    ranges = []
-    for f in glob.glob(out + "/*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        col_idx = [md.schema.column(i).name for i in range(md.num_columns)].index("l_shipdate")
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(col_idx).statistics
-            mins.append(st.min)
-            maxs.append(st.max)
-        if mins:
-            ranges.append((min(mins), max(maxs)))
-    assert len(ranges) > 1, "expected multiple sorted output files"
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        # disjoint up to boundary-value ties: next file starts at or after
-        # the previous file's max (range partitioner keys are exact splits)
-        assert lo2 >= hi1, f"overlapping file ranges: ({lo1},{hi1}) vs ({lo2},{hi2})"
-
-    read = spark.read.parquet(out).filter(F.col("l_shipdate") == "1996-01-15")
-    spark.conf.set("spark.sql.maxMetadataStringLength", "4000")
-    plan = read._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters:" in plan and "l_shipdate" in plan.split("PushedFilters")[1].split("]")[0]
-    assert read.count() == li.filter(F.col("l_shipdate") == "1996-01-15").count()
-
-
-def test_zorder_write_skips_files_on_both_dimensions(spark, sf_dir, tmp_path):
-    """Z-ordered layout must let footer min/max stats prune files for
-    predicates on EITHER clustered column — the property a single-column
-    sort cannot give — and preserve the data exactly."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from boxoffice_spark.operators.zorder import write_zordered
-
-    out = str(tmp_path / "zordered")
-    li = table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_quantity", "l_shipdate"
-    )
-    write_zordered(li, out, ["l_shipdate", "l_partkey"], partitions=16)
-
-    files = glob.glob(out + "/*.parquet")
-    assert len(files) > 4
-
-    def file_ranges(col):
-        out_ranges = []
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            idx = [md.schema.column(i).name for i in range(md.num_columns)].index(col)
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                mins.append(st.min)
-                maxs.append(st.max)
-            out_ranges.append((min(mins), max(maxs)))
-        return out_ranges
-
-    # a mid-domain point predicate on each dimension must be prunable to a
-    # strict subset of files by min/max alone
-    import datetime
-
-    lo_hi = li.agg(F.min("l_shipdate"), F.max("l_shipdate")).collect()[0]
-    ship_probe = lo_hi[0] + (lo_hi[1] - lo_hi[0]) / 2  # mid-domain timestamp
-    ship_hits = [1 for lo, hi in file_ranges("l_shipdate") if lo <= ship_probe <= hi]
-    assert 0 < len(ship_hits) < len(files), (
-        f"no shipdate skipping: {len(ship_hits)}/{len(files)} files overlap"
-    )
-    parts = sorted(r.l_partkey for r in li.select("l_partkey").distinct().collect())
-    part_probe = parts[len(parts) // 2]
-    part_hits = [1 for lo, hi in file_ranges("l_partkey") if lo <= part_probe <= hi]
-    assert 0 < len(part_hits) < len(files), (
-        f"no partkey skipping: {len(part_hits)}/{len(files)} files overlap"
-    )
-
-    # data integrity: same multiset of rows
-    before = li.groupBy().agg(
-        F.count("*"), F.sum("l_orderkey"), F.sum("l_partkey"), F.sum("l_quantity")
-    ).collect()
-    after = spark.read.parquet(out).groupBy().agg(
-        F.count("*"), F.sum("l_orderkey"), F.sum("l_partkey"), F.sum("l_quantity")
-    ).collect()
-    assert before == after
-
-
 def test_observed_quality_metrics_piggyback_the_scan(spark, sf_dir):
     """Observation metrics ride the business query's own scan — the
     zero-extra-pass form of the dq_* rule suite (at 100 TB a separate
@@ -254,140 +149,3 @@ def test_observed_quality_metrics_piggyback_the_scan(spark, sf_dir):
         F.count(F.when(F.col("l_extendedprice").isNull(), 1)),
     ).collect()[0]
     assert (m["n_rows"], m["nonpos_qty"], m["null_price"]) == tuple(exact)
-
-
-def test_jsonl_quarantine_splits_good_and_bad(spark, tmp_path):
-    """PERMISSIVE JSONL ingestion: well-formed rows parse, malformed rows
-    land whole in the dead-letter frame, nothing is dropped."""
-    from boxoffice_spark.io import read_jsonl_quarantine
-
-    p = tmp_path / "feed.jsonl"
-    lines = [
-        '{"id": 1, "name": "ok"}',
-        '{"id": 2, "name": "also ok"}',
-        '{"id": "NOT_A_NUMBER", "name": "type clash"}',
-        "{broken json",
-        '{"id": 5, "name": "fine"}',
-    ]
-    p.write_text("\n".join(lines) + "\n")
-    good, bad = read_jsonl_quarantine(spark, str(p), "id long, name string")
-    got = {(r.id, r.name) for r in good.collect()}
-    assert got == {(1, "ok"), (2, "also ok"), (5, "fine")}
-    raw = {r.raw_line for r in bad.collect()}
-    assert raw == {'{"id": "NOT_A_NUMBER", "name": "type clash"}', "{broken json"}
-
-
-class TestWriteAuditPublish:
-    def _audits(self):
-        return [
-            lambda df: (df.count() > 0, "non-empty"),
-            lambda df: (
-                df.filter(df.o_totalprice <= 0).count() == 0,
-                "positive prices",
-            ),
-        ]
-
-    def test_publish_on_green_audits(self, spark, sf_dir, tmp_path):
-        from boxoffice_spark.io import write_audit_publish
-        from boxoffice_spark.tables import table
-
-        o = table(spark, sf_dir, "orders").limit(100)
-        target = str(tmp_path / "wap_table")
-        res = write_audit_publish(o, target, self._audits())
-        assert res["published"] is True
-        assert all(r["passed"] for r in res["audit_results"])
-        assert spark.read.parquet(target).count() == 100
-        import os
-
-        assert not os.path.exists(target + "__staging")
-
-    def test_failing_audit_blocks_and_preserves_current(
-        self, spark, sf_dir, tmp_path
-    ):
-        from boxoffice_spark.io import write_audit_publish
-        from boxoffice_spark.tables import table
-
-        o = table(spark, sf_dir, "orders")
-        target = str(tmp_path / "wap_table")
-        # publish v1 (50 rows) green
-        res1 = write_audit_publish(o.limit(50), target, self._audits())
-        assert res1["published"] is True
-        # attempt v2 with a failing audit: current table must survive
-        bad = [lambda df: (False, "forced failure")]
-        res2 = write_audit_publish(o.limit(80), target, bad)
-        assert res2["published"] is False
-        assert res2["audit_results"][0]["passed"] is False
-        assert spark.read.parquet(target).count() == 50  # v1 intact
-        import os
-
-        assert os.path.exists(res2["staging_path"])  # forensics kept
-
-    def test_audits_run_against_reread_files(self, spark, sf_dir, tmp_path):
-        """The audit sees the STAGED files as a consumer would — assert it
-        receives a DataFrame whose scan reads the staging directory, not
-        the in-memory frame."""
-        from boxoffice_spark.io import write_audit_publish
-        from boxoffice_spark.tables import table
-
-        seen = {}
-
-        def capture(df):
-            seen["files"] = df.inputFiles()
-            return True, "capture"
-
-        o = table(spark, sf_dir, "orders").limit(10)
-        target = str(tmp_path / "wap_table")
-        res = write_audit_publish(o, target, [capture])
-        assert res["published"] is True
-        assert seen["files"] and all("__staging" in f for f in seen["files"])
-
-    def test_green_republish_leaves_no_siblings(self, spark, sf_dir, tmp_path):
-        """Staging/backup dirs carry a per-call unique suffix (concurrent
-        publishers can't clobber each other's intermediates) and green
-        publishes clean them all up."""
-        import os
-
-        from boxoffice_spark.io import write_audit_publish
-        from boxoffice_spark.tables import table
-
-        o = table(spark, sf_dir, "orders")
-        target = str(tmp_path / "wap_table")
-        assert write_audit_publish(o.limit(50), target, self._audits())["published"]
-        assert write_audit_publish(o.limit(80), target, self._audits())["published"]
-        assert spark.read.parquet(target).count() == 80
-        siblings = [p for p in os.listdir(tmp_path) if p != "wap_table"]
-        assert siblings == [], siblings
-
-    def test_failed_promote_restores_previous_table(
-        self, spark, sf_dir, tmp_path, monkeypatch
-    ):
-        """If the staging->path rename itself dies, the previous table is
-        put back before the error propagates — readers recover the old
-        snapshot, not a missing directory."""
-        import os
-
-        from boxoffice_spark import io as bio
-        from boxoffice_spark.tables import table
-
-        o = table(spark, sf_dir, "orders")
-        target = str(tmp_path / "wap_table")
-        assert bio.write_audit_publish(o.limit(50), target, self._audits())["published"]
-
-        real_rename = os.rename
-
-        def failing_rename(src, dst):
-            if dst == target and "__staging_" in src:
-                raise OSError("simulated promote failure")
-            return real_rename(src, dst)
-
-        monkeypatch.setattr(os, "rename", failing_rename)
-        # PublishError subclasses OSError, preserving the pre-round-7
-        # except-OSError race-detection contract (ADVICE r07)
-        with pytest.raises(OSError, match="leftovers") as ei:
-            bio.write_audit_publish(o.limit(80), target, self._audits())
-        monkeypatch.undo()
-        assert isinstance(ei.value, bio.PublishError)
-        assert isinstance(ei.value.__cause__, OSError)  # original error chained
-        assert "__staging_" in str(ei.value)  # staged copy surfaced for cleanup
-        assert any("__staging_" in p for p in ei.value.leftovers)
-        assert spark.read.parquet(target).count() == 50  # v1 restored

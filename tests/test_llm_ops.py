@@ -4,10 +4,20 @@ Pandas-UDF paths for determinism."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from boxoffice_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
-from boxoffice_spark.operators.similarity import ann_lsh_topk, cosine_topk
+from boxoffice_spark.operators.similarity import (
+    ZeroVectorError,
+    ann_ivf_topk,
+    ann_ivfpq_topk,
+    ann_lsh_topk,
+    cluster_balance,
+    cosine_topk,
+    hard_negative_topk,
+    near_dup_pairs_arrow,
+)
 from boxoffice_spark.queries.multimodal import m_asset_features
 from boxoffice_spark.tables import table
 
@@ -274,19 +284,13 @@ def test_short_docs_do_not_crash_ngram_ops(spark):
         contamination_report,
         minhash_lsh_pairs,
         ngram_jaccard_pairs,
-        word_ngrams,
     )
 
+    # "" splits to [""] -> 1 word < 3 -> empty, like "a" and "a b"
     docs = spark.createDataFrame(
         [(1, "a"), (2, "a b"), (3, ""), (4, "one two three four"), (5, "one two three four")],
         "doc_id long, text string",
     )
-    grams = {r.doc_id: r.g for r in docs.select("doc_id", word_ngrams("text", 3).alias("g")).collect()}
-    assert grams[1] == [] and grams[2] == []
-    # "" splits to [""] -> 1 word < 3 -> empty
-    assert grams[3] == []
-    assert grams[4] == ["one two three", "two three four"]
-
     pairs = ngram_jaccard_pairs(docs, "doc_id", "text", block_cols=[], n=3, threshold=0.5).collect()
     assert {(r.id_a, r.id_b) for r in pairs} == {(4, 5)}
 
@@ -436,7 +440,7 @@ def test_hot_bucket_cap_bounds_lsh_pairs(spark):
 
 
 def test_successor_cap_bounds_pairs_and_keeps_groups_connected(spark):
-    """max_successors (r09 scale contract): a duplicate group BELOW the
+    """max_successors (scale contract): a duplicate group BELOW the
     bucket cap must emit O(cap * k) pairs, not C(k, 2) — and the emitted
     chain must still connect the whole group for downstream components."""
     n_same = 60  # below max_postings, above max_successors
@@ -958,7 +962,7 @@ def test_word_ngram_hashes_fast_equals_declarative(spark, sf_dir):
 
 
 def test_winnow_fp_sets_matches_catalyst_form(spark, sf_dir):
-    """r12: the md5 mapInPandas fingerprint-set kernel (winnow_fp_sets)
+    """The md5 mapInPandas fingerprint-set kernel (winnow_fp_sets)
     must emit the EXACT row multiset of the Catalyst lambda form it
     replaces inside winnow_dup_pairs — same md5-prefix hash family, same
     per-window min, same per-doc distinct + size — on real corpus docs AND
@@ -1059,3 +1063,33 @@ def test_cosine_topk_zero_vector_raises(spark):
         cosine_topk(df, zero_q, k=2).collect()
     with pytest.raises(ZeroVectorError, match="vec_id 7"):
         cosine_topk_arrow(df, zero_q, k=2)
+
+
+# Every Arrow similarity kernel with a registered caller, run on the
+# zero-vector corpus of the test above (labels added) with query 1.
+_ZERO_VECTOR_RUNS = {
+    # without the check: (1, 7, 0.0, 3), the zero vector as a negative
+    "hard_negative_topk": lambda df, q: hard_negative_topk(df, q, k=3),
+    "near_dup_pairs_arrow": lambda df, q: near_dup_pairs_arrow(
+        df.withColumn("blk", F.lit(0)), "blk", vec_col="embedding"
+    ),
+    "ann_ivf_topk": lambda df, q: ann_ivf_topk(df, q, k=3, n_cells=2, n_probe=2),
+    "ann_ivfpq_topk": lambda df, q: ann_ivfpq_topk(
+        df, q, k=3, n_cells=2, n_probe=2, m=2, ksub=2
+    ),
+    "cluster_balance": lambda df, q: cluster_balance(df, n_cells=2),
+}
+
+
+@pytest.mark.parametrize("kernel", sorted(_ZERO_VECTOR_RUNS))
+def test_arrow_kernel_zero_vector_raises(spark, kernel):
+    """A zero vector fails with a ZeroVectorError naming its id — raised on
+    a collected fit sample or query, or in the scan batch — instead of
+    being ranked as a neighbor at cosine 0.0."""
+    rows = [(1, [1.0, 0.0], 0), (2, [0.0, 1.0], 1), (3, [1.0, 1.0], 1), (7, [0.0, 0.0], 1)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label long")
+    q = df.filter(F.col("vec_id") == 1)
+    with pytest.raises(Exception, match="vec_id 7") as ei:
+        _ZERO_VECTOR_RUNS[kernel](df, q).collect()
+    err = ei.value
+    assert isinstance(err, ZeroVectorError) or "ZeroVectorError" in str(err)

@@ -7,7 +7,7 @@ import pandas as pd
 from pyspark.sql import Window as W, functions as F
 
 from boxoffice_spark.sources.rest_source import _poll_stock, register_sources
-from boxoffice_spark.streaming.stateful import latest_stock_state, stream_upsert_sink
+from boxoffice_spark.streaming.stateful import latest_stock_state
 
 
 def test_page_scan_partition_per_page(spark):
@@ -43,20 +43,6 @@ def test_stateful_latest_equals_batch_window(spark):
     want = {key(r): (r.quantity, r.scraped_at) for r in batch.collect()}
     assert len(got) == n_events * n_theaters
     assert got == want
-
-
-def test_stream_upsert_sink_holds_latest_state(spark, tmp_path):
-    n_events, n_theaters, max_polls = 4, 3, 6
-    final = stream_upsert_sink(
-        spark, str(tmp_path / "state"), n_events, n_theaters, max_polls
-    )
-    # final table: one row per key, each carrying the LAST poll's snapshot
-    last = {
-        (e, th): (q, ts)
-        for (e, th, q, ts) in _poll_stock(max_polls - 1, n_events, n_theaters)
-    }
-    got = {(r.event_id, r.theater_name): (r.quantity, r.scraped_at) for r in final.collect()}
-    assert got == last
 
 
 def test_agent_sql_guardrail(spark, sf_dir):
