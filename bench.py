@@ -4,7 +4,7 @@ Times every bench-flagged headline query from the registry at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
 
-    {"queries": {...}, "build": {...}, "cold": {...}, "ann_recall": {...},
+    {"queries": {...}, "build": {...}, "cold": {...},
      "metric": "...", "unit": "sec", "build_total": B, "value": N, "sf": ...}
 
 (summary scalars LAST — the driver captures only the tail of stdout, so the
@@ -22,13 +22,13 @@ Two timed regions per run, both reported (bench honesty — nothing a query
 does is unbilled):
 
 - ``build`` — ``spec.fn()`` construction. For most queries this is pure
-  lazy plan assembly (~ms); for the ANN family it includes the eager
-  driver-side index build (IVF KMeans fit, PQ codebook training + its
-  bounded train-sample collect, LSH fit, probe-matrix collects). These are
-  amortized one-time index builds in a real deployment (build once, probe
-  per query), which is exactly why they are reported SEPARATELY rather than
-  folded into the per-query exec number: ``queries`` stays the steady-state
-  probe cost, ``build`` is the honest price of standing the index up.
+  lazy plan assembly (~ms); for the similarity family it includes the
+  eager driver-side work (LSH fit, k-means fit on a bounded train-sample
+  collect, probe-matrix collects). These are amortized one-time index
+  builds in a real deployment (build once, probe per query), which is
+  exactly why they are reported SEPARATELY rather than folded into the
+  per-query exec number: ``queries`` stays the steady-state probe cost,
+  ``build`` is the honest price of standing the index up.
 - ``exec`` (``queries``) — full distributed execution into the noop sink.
 
 The headline ``value`` remains the exec total (comparable across rounds);
@@ -128,22 +128,11 @@ def main() -> None:
     total = round(sum(timings.values()), 3)
     build_total = round(sum(builds.values()), 3)
 
-    # ANN recall scorecard (deterministic — every tier is seeded): surfaced
-    # in the artifact so a tuning regression shows up here, not just in
-    # pytest. Not billed to the headline total (it is a QA report, not a
-    # headline query).
-    ann_recall: dict[str, float] = {}
-    try:
-        rows = specs["v_ann_recall_report"].fn(spark, sf_dir).collect()
-        ann_recall = {r["tier"]: r["recall_at_10"] for r in rows}
-    except Exception as exc:  # never let the scorecard sink the artifact
-        ann_recall = {"err": str(exc)[:200]}
-
     # Artifact strategy (the driver keeps only the LAST 2,000 chars of
     # stdout; one fat line loses the whole warm map to truncation and
     # cannot be parsed as JSON):
     #   1. BENCH_FULL.json sidecar at the repo root — the COMPLETE record
-    #      (warm + cold + build + recall per query), committed with the repo.
+    #      (warm + cold + build per query), committed with the repo.
     #   2. One full verbose line (for anyone capturing full stdout).
     #   3. The FINAL line is compact — warm per-query map + summary
     #      scalars only (~1.7 KB < 2 KB), so after driver truncation the
@@ -194,7 +183,6 @@ def main() -> None:
         "queries": timings,
         "build": builds,
         "cold": colds,
-        "ann_recall": ann_recall,
         "deltas": deltas,
         "metric": "headline_queries_total_wall",
         "unit": "sec",
@@ -228,7 +216,6 @@ def main() -> None:
     line = json.dumps(compact, separators=(",", ":"))
     if len(line) > 1900:  # keep the final line inside the 2 KB capture
         compact["queries"] = {n: round(t, 2) for n, t in timings.items()}
-        compact.pop("ann_recall", None)
         line = json.dumps(compact, separators=(",", ":"))
     print(line)
     spark.stop()

@@ -7,8 +7,9 @@ north-star).
   the query set is small enough to broadcast (the common retrieval-eval
   shape). The scan side streams; no shuffle until the (tiny) top-k window.
 - ``ann_lsh_topk``: BucketedRandomProjectionLSH (random-hyperplane buckets)
-  — the sub-linear path when queries x corpus stops fitting. Approximate ->
-  rows-only check.
+  — the one approximate top-k path. Approximate -> rows-only check; no
+  measured scale puts it ahead of the exact ``cosine_topk_arrow`` scan
+  (see its docstring).
 
 Embeddings are float32 at rest; both operators promote to double BEFORE any
 arithmetic so results are reproducible and comparable across engines.
@@ -380,14 +381,36 @@ def ann_lsh_topk(
 
     Euclidean-bucket LSH; for unit-normalized embeddings Euclidean ranking
     equals cosine ranking (||a-b||² = 2 - 2·cos on the unit sphere), so we
-    normalize before hashing. Sub-linear probing at corpus scale; rows-only
-    correctness (the exact operator above is its small-scale oracle).
+    normalize before hashing; a zero vector on either side raises
+    ZeroVectorError naming its id. Rows-only correctness (the exact
+    operator above is its small-scale oracle).
+
+    Measured crossover against exact ``cosine_topk_arrow``: none up to
+    N = 100,000 vectors. Build + exec on 4 vCPUs, 64-dim embeddings
+    (fixture inflated with tools/sf1_probe.py): LSH 1.25 s vs exact
+    0.67 s at N = 2,000 with 5 probes, 9.1 s vs 0.54 s at 500 probes,
+    7.7 s vs 0.56 s at N = 100,000 with 5 probes; recall@10 0.98-1.0.
+    The reason: a unit vector's projection on a random unit direction
+    spreads about 1/sqrt(d) (0.125 at 64 dims), well inside a bucket of
+    length 0.5, so a hash is about the projection's sign and most pairs
+    share a bucket in one of the four tables: 93% of (probe, vector) pairs
+    were candidates at N = 2,000 and at N = 20,000. The candidate join is
+    then near Q x N wide rows, paid through ``approxSimilarityJoin``'s
+    distinct.
     """
     from pyspark.ml.feature import BucketedRandomProjectionLSH, Normalizer
     from pyspark.ml.functions import array_to_vector
 
     def prep(df: DataFrame, out_id: str) -> DataFrame:
-        vec = array_to_vector(F.col(vec_col).cast("array<double>"))
+        arr = F.col(vec_col).cast("array<double>")
+        # Normalizer passes a zero vector through unchanged, where it would
+        # rank at l2_dist 1.0 from every unit vector; fail it by name instead
+        sq = F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x * x)
+        zero = F.concat(
+            F.lit("ZeroVectorError: zero vector has no cosine: vec_id "),
+            F.col(id_col).cast("string"),
+        )
+        vec = array_to_vector(F.when(sq > 0, arr).otherwise(F.raise_error(zero)))
         raw = df.select(F.col(id_col).alias(out_id), vec.alias("_raw"))
         return Normalizer(inputCol="_raw", outputCol="features", p=2.0).transform(raw).drop("_raw")
 
@@ -586,165 +609,15 @@ def hard_negative_topk(
     )
 
 
-def ann_pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    m: int = 8,
-    ksub: int = 16,
-    n_candidates: int = 150,
-    train_size: int = 512,
-    kmeans_iters: int = 10,
-    seed: int = 42,
-    round_to: int = 6,
-) -> DataFrame:
-    """Approximate top-k neighbors via Product Quantization (Jégou et al.,
-    "Product Quantization for Nearest Neighbor Search", IEEE TPAMI 2011) —
-    the memory-bound complement to IVF/LSH.
-
-    The vector is split into ``m`` subspaces; each subspace gets its own
-    ``ksub``-centroid codebook (seeded Lloyd's on a bounded driver-side
-    training sample); a corpus vector is stored as ``m`` one-byte codes —
-    32x compression for 64-dim float32, which is what lets a 100 TB
-    embedding corpus's index fit in cluster RAM. Queries score candidates
-    with ADC (asymmetric distance computation): per query one (m x ksub)
-    lookup table of partial squared distances, so scoring a vector is m
-    table lookups instead of a d-dim dot product. The top ``n_candidates``
-    per query by ADC score then pay the exact cosine rerank against the
-    original vectors, so precision at the head is exact and only recall is
-    approximate (the IVF/LSH contract).
-
-    Scale shape: codebooks + query LUTs broadcast (m*ksub*dsub doubles —
-    KBs); the encode and ADC scan are single Arrow passes over the corpus
-    with only batch-local top-candidates emitted; vectors are L2-normalized
-    before quantization so squared-L2 ADC ranking equals cosine ranking.
-    Rows-only: recall vs the exact operator asserted in tests.
-    """
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    probe_row = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
-    if probe_row is None:
-        # must precede the d-probe subscript and the train collect — an
-        # empty corpus would otherwise die with an opaque NoneType error
-        raise ValueError("ann_pq_topk: corpus is empty — nothing to index")
-    d_probe = probe_row["d"]
-    if d_probe % m != 0:
-        raise ValueError(f"dim {d_probe} not divisible by m={m}")
-    dsub = d_probe // m
-
-    # --- train: seeded Lloyd's per subspace on a bounded, deterministic
-    # sample, ordered by salted content hash of the id — uniform over the
-    # corpus where a first-ids prefix would be biased toward the earliest
-    # ingest slice (see _fit_unit_kmeans); still TakeOrderedAndProject.
-    train_rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.md5(F.concat(F.lit("pq"), F.col(id_col).cast("string"))), id_col)
-        .limit(train_size)
-        .collect()
-    )
-    tmat = _unit_rows(
-        [r[0] for r in train_rows],
-        np.stack([np.asarray(r[1], dtype=np.float64) for r in train_rows]),
-    )
-    # a corpus smaller than ksub cannot seed ksub distinct centroids —
-    # clamp instead of letting rng.choice(replace=False) raise; fewer
-    # centroids only coarsens the quantizer, ADC stays well-defined
-    ksub = min(ksub, len(train_rows))
-    rng = np.random.default_rng(seed)
-    codebooks = np.empty((m, ksub, dsub))
-    for j in range(m):
-        sub = tmat[:, j * dsub : (j + 1) * dsub]
-        cents = sub[rng.choice(len(sub), size=ksub, replace=False)]
-        for _ in range(kmeans_iters):
-            d2 = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for c in range(ksub):
-                mask = assign == c
-                if mask.any():
-                    cents[c] = sub[mask].mean(axis=0)
-        codebooks[j] = cents
-
-    # --- query LUTs: partial squared L2 from each query subvector to every
-    # centroid of that subspace. ADC score = sum_j LUT[q, j, code_j].
-    qrows = queries.select(id_col, vec_col).collect()
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = _unit_rows(
-        qids, np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    )
-    luts = np.empty((len(qids), m, ksub))
-    for j in range(m):
-        qs = qmat[:, j * dsub : (j + 1) * dsub]
-        luts[:, j, :] = ((qs[:, None, :] - codebooks[j][None, :, :]) ** 2).sum(axis=2)
-    bc = corpus.sparkSession.sparkContext.broadcast((codebooks, qids, luts))
-
-    def adc_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cb, qids_, luts_ = bc.value
-        nq = len(qids_)
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            cmat = _unit_rows(
-                ids, np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            )
-            # encode: nearest centroid per subspace -> (batch, m) codes.
-            # (Materialized inline here; a persisted index would write
-            # `codes` out once and ADC-scan it per query batch.)
-            scores = np.zeros((len(ids), nq))
-            for j in range(m):
-                sub = cmat[:, j * dsub : (j + 1) * dsub]
-                d2 = ((sub[:, None, :] - cb[j][None, :, :]) ** 2).sum(axis=2)
-                codes_j = d2.argmin(axis=1)
-                scores += luts_[:, j, codes_j].T  # (batch, nq)
-            kk = min(n_candidates, len(ids))
-            top = np.argpartition(scores, kk - 1, axis=0)[:kk]  # ascending dist
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qids_, kk),
-                    "neighbor_id": ids[top].T.ravel(),
-                    "adc_d2": np.take_along_axis(scores, top, axis=0).T.ravel(),
-                }
-            )
-
-    cand = corpus.select(id_col, vec_col).mapInPandas(
-        adc_batches, schema="query_id long, neighbor_id long, adc_d2 double"
-    )
-    w_cand = W.partitionBy("query_id").orderBy(F.asc("adc_d2"), F.asc("neighbor_id"))
-    shortlist = (
-        cand.filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("_cr", F.row_number().over(w_cand))
-        .filter(F.col("_cr") <= n_candidates)
-        .select("query_id", "neighbor_id")
-    )
-    # exact rerank: true cosine on the shortlist only
-    vecs = corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>"))
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("_qv")
-    )
-    cv = vecs.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        shortlist.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn("cos_sim", fround(cosine(F.col("_qv"), F.col("_cv")), round_to))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
-
-
 def _lloyds(mat, k: int, iters: int = 10, seed: int = 42):
     """Seeded Lloyd's k-means over a driver-side sample matrix — the
-    shared coarse-quantizer trainer for IVF and cluster_balance (PQ uses
-    the same loop per subspace). A bounded sample is all a quantizer
-    needs (coverage, not completeness), so the fit costs milliseconds
-    where a distributed ML fit pays seconds of scheduling overhead; at
-    corpus scale the sample comes from the hash-sample operator."""
+    trainer behind cluster_balance. ``k`` clamps to the sample size, so a
+    corpus smaller than ``k`` still fits (fewer cells, never a
+    ``rng.choice(replace=False)`` error). A bounded sample is all a
+    quantizer needs (coverage, not completeness), so the fit costs
+    milliseconds where a distributed ML fit pays seconds of scheduling
+    overhead; at corpus scale the sample comes from the hash-sample
+    operator."""
     import numpy as np
 
     rng = np.random.default_rng(seed)
@@ -791,45 +664,16 @@ def _fit_unit_kmeans(
     return _lloyds(_unit_rows([r[0] for r in rows], mat), n_cells, seed=seed)
 
 
-def _probe_cells(qrows, cmat, n_probe: int):
-    """Per-query nearest ``n_probe`` cells, driver-side: Euclidean
-    distance of the unit-normalized query to the RAW centroid
-    (``|c|^2 - 2 q.c`` — same rule as _assign_cells), ties broken on the
-    lower cell index via lexsort. The ONE probe-selection implementation
-    shared by ann_ivf_topk and ann_ivfpq_topk, so both ANN kernels probe
-    the same cells even on near-tie centroid distances (two float paths
-    would disagree in the last ulp exactly there). Returns
-    [(query_id, qvec_list, [cells])].
-    """
-    import numpy as np
-
-    c2 = (cmat**2).sum(axis=1)
-    out = []
-    for r in qrows:
-        qv = np.asarray(r[1], dtype=np.float64)
-        qn = _unit_rows([r[0]], qv[None, :])[0]
-        d2 = c2 - 2.0 * (cmat @ qn)
-        order = np.lexsort((np.arange(len(c2)), d2))[:n_probe]
-        out.append((int(r[0]), [float(x) for x in qv], [int(c) for c in order]))
-    return out
-
-
-def _assign_cells(
-    df: DataFrame, id_col: str, keep_cols: str, cmat, with_cos: bool = False
-) -> DataFrame:
+def _assign_cells(df: DataFrame, id_col: str, cmat) -> DataFrame:
     """Arrow-kernel cell assignment: one BLAS pass per batch against the
     closure-shipped centroid matrix; argmin Euclidean to the raw centroid
     (argmin |c|^2 - 2 x.c for unit x — NOT max-cosine, which would
     re-rank when centroid norms differ; np.argmin's first-min rule =
     lowest-index tiebreak). Input df must have ``id_col`` (the id a
-    :class:`ZeroVectorError` names) and a ``_v`` array<double> column;
-    ``keep_cols`` (a schema string) names the input columns that pass
-    through to the output — only those ship back across Arrow, so callers
-    that need nothing but the assignment (cluster_balance) don't pay to
-    round-trip the vectors. ``with_cos`` adds ``_cs``, the cosine
-    of each row to its chosen centroid. Zero shuffle, corpus scanned
-    once. The single shared kernel behind ann_ivf_topk's index cells and
-    cluster_balance's audit — one assignment rule, two consumers."""
+    :class:`ZeroVectorError` names) and a ``_v`` array<double> column.
+    Emits only ``(cell, _cs)`` per row, ``_cs`` being the row's cosine to
+    its chosen centroid, so the vectors never ship back across Arrow.
+    Zero shuffle, corpus scanned once."""
     from collections.abc import Iterator
 
     import numpy as np
@@ -843,10 +687,6 @@ def _assign_cells(
     cunit = cmat / np.maximum(
         np.linalg.norm(cmat, axis=1, keepdims=True), 1e-30
     )
-    names = [c.strip().split()[0] for c in keep_cols.split(",") if c.strip()]
-    schema = (f"{keep_cols}, " if names else "") + "cell int" + (
-        ", _cs double" if with_cos else ""
-    )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -856,259 +696,15 @@ def _assign_cells(
             x = _unit_rows(pdf[id_col].to_numpy(), x)
             d2 = c2[None, :] - 2.0 * (x @ cmat.T)
             cell = d2.argmin(axis=1)
-            data = {n: pdf[n] for n in names}
-            data["cell"] = cell.astype(np.int32)
-            if with_cos:
-                sims = x @ cunit.T
-                data["_cs"] = _round_half_up(sims[np.arange(len(cell)), cell], 6)
-            yield pd.DataFrame(data)
-
-    return spread(df).mapInPandas(batches, schema=schema)
-
-
-def ann_ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-) -> DataFrame:
-    """Approximate top-k neighbors via an IVF (inverted-file) index:
-    KMeans coarse quantizer -> corpus partitioned into centroid cells ->
-    each query probes its ``n_probe`` nearest cells and reranks exactly
-    (cosine) inside them.
-
-    The scan-cost contract at scale: each query touches ~n_probe/n_cells of
-    the corpus instead of all of it, and the cell assignment is a one-off
-    index build (seeded Lloyd's on a bounded deterministic sample —
-    _fit_unit_kmeans — milliseconds on the driver where a distributed ML
-    fit costs seconds of scheduling), amortized across every query
-    batch — the complementary trade to ann_lsh_topk (no training, but
-    hash-bucket recall). Corpus cell assignment is one Arrow BLAS pass
-    (_assign_cells), no ML-predictor UDF in the scan. Rows-only; recall
-    vs the exact operator is asserted in tests/test_llm_ops.py.
-    """
-
-    cmat = _fit_unit_kmeans(corpus, id_col, vec_col, n_cells)
-    cells = _assign_cells(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        ),
-        "neighbor_id",
-        "neighbor_id long, _v array<double>",
-        cmat,
-    ).withColumnRenamed("_v", "_cv")
-
-    # probe-cell selection is driver-side on the (bounded) query batch —
-    # ONE implementation (_probe_cells) shared with ann_ivfpq_topk
-    qrows = queries.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>")
-    ).collect()
-    probe_rows = [
-        (qid, qv, c)
-        for qid, qv, cell_list in _probe_cells(qrows, cmat, n_probe)
-        for c in cell_list
-    ]
-    probes = corpus.sparkSession.createDataFrame(
-        probe_rows, "query_id long, _qv array<double>, cell int"
-    )
-
-    scored = F.broadcast(probes).join(cells, "cell").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("cos_sim", fround(cosine(F.col("_qv"), F.col("_cv")), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
-
-
-def ann_ivfpq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 8,
-    m: int = 8,
-    ksub: int = 16,
-    n_candidates: int = 150,
-    train_size: int = 512,
-    kmeans_iters: int = 10,
-    seed: int = 42,
-    round_to: int = 6,
-) -> DataFrame:
-    """Approximate top-k neighbors via IVFADC — IVF coarse quantizer +
-    product-quantized RESIDUALS (Jégou et al., "Product Quantization for
-    Nearest Neighbor Search", IEEE TPAMI 2011, §IV) — the composition of
-    ann_ivf_topk and ann_pq_topk, and the standard billion-scale layout
-    (FAISS ``IVFx,PQy``): the coarse quantizer bounds the SCAN (each query
-    touches ~n_probe/n_cells of the index) while PQ bounds the MEMORY
-    (each vector stored as ``m`` one-byte codes, so the probed slice is
-    ADC table lookups, never float vectors).
-
-    Residuals, not raw vectors, are what PQ encodes here: r = x_unit -
-    centroid(cell). Residual energy is a fraction of vector energy, so
-    the same ksub-codebook budget quantizes far finer than whole-vector
-    PQ — the reason IVFADC beats flat PQ at equal code size.
-
-    Physical strategy: both quantizers fit driver-side on one bounded
-    salted-hash sample (coarse fit shared with ann_ivf_topk via
-    _fit_unit_kmeans; per-subspace residual Lloyd's reuses _lloyds).
-    Per-query probe-cell selection reuses _probe_cells (bit-identical
-    probes to the IVF tier). One Arrow pass over the corpus assigns the
-    cell, encodes the residual, and ADC-scores rows of probed cells with
-    (query, cell)-keyed LUTs shipped in a broadcast — only batch-local
-    top candidates come back. A per-query window takes the global
-    ``n_candidates`` shortlist, then the exact cosine rerank pays full
-    vectors ONLY for the shortlist (precision at the head exact, recall
-    approximate — the ANN contract). At rest the (cell, codes) table is
-    the index: partitioned by cell (io.write_ivf_partitioned layout),
-    probes become partition-pruned scans of m-byte codes.
-
-    Rows-only: recall vs the exact operator asserted in
-    tests/test_llm_ops.py and surfaced in v_ann_recall_report.
-    """
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    probe_row = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
-    if probe_row is None:
-        raise ValueError("ann_ivfpq_topk: corpus is empty — nothing to index")
-    d = probe_row["d"]
-    if d % m != 0:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    dsub = d // m
-
-    # --- coarse quantizer: the SAME fit as the IVF tier
-    cmat = _fit_unit_kmeans(corpus, id_col, vec_col, n_cells, train_size, seed)
-    c2 = (cmat**2).sum(axis=1)
-
-    # --- residual codebooks: assign the bounded train sample to cells,
-    # then per-subspace Lloyd's on the residuals (x_unit - centroid)
-    train_rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.md5(F.concat(F.lit("pq"), F.col(id_col).cast("string"))), id_col)
-        .limit(train_size)
-        .collect()
-    )
-    tmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in train_rows])
-    tmat = _unit_rows([r[0] for r in train_rows], tmat)
-    tcell = (c2[None, :] - 2.0 * (tmat @ cmat.T)).argmin(axis=1)
-    tres = tmat - cmat[tcell]
-    # fewer train rows than ksub only coarsens the codebook (same clamp
-    # class as ann_pq_topk — never let rng.choice(replace=False) raise)
-    ksub = min(ksub, len(train_rows))
-    codebooks = np.stack(
-        [
-            _lloyds(tres[:, j * dsub : (j + 1) * dsub], ksub, kmeans_iters, seed + j)
-            for j in range(m)
-        ]
-    )
-
-    # --- per-(query, probed cell) ADC LUTs, driver-side on the bounded
-    # query batch: target = q_unit - centroid(cell); LUT[j][code] =
-    # |target_sub_j - codebook[j][code]|^2, so scoring a stored vector is
-    # m lookups. Probes are bit-identical to the IVF tier (_probe_cells).
-    qrows = queries.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>")
-    ).collect()
-    probe_qid, probe_cell, probe_luts = [], [], []
-    for qid, qv, cell_list in _probe_cells(qrows, cmat, n_probe):
-        qu = _unit_rows([qid], np.asarray(qv, dtype=np.float64)[None, :])[0]
-        for c in cell_list:
-            tgt = qu - cmat[c]
-            lut = np.empty((m, ksub))
-            for j in range(m):
-                ts = tgt[j * dsub : (j + 1) * dsub]
-                lut[j] = ((ts[None, :] - codebooks[j]) ** 2).sum(axis=1)
-            probe_qid.append(qid)
-            probe_cell.append(c)
-            probe_luts.append(lut)
-    bc = corpus.sparkSession.sparkContext.broadcast(
-        (
-            cmat,
-            codebooks,
-            np.asarray(probe_qid, dtype=np.int64),
-            np.asarray(probe_cell, dtype=np.int32),
-            np.stack(probe_luts) if probe_luts else np.empty((0, m, ksub)),
-        )
-    )
-
-    def ivfadc_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cb_cmat, cb_books, p_qid, p_cell, p_luts = bc.value
-        cb_c2 = (cb_cmat**2).sum(axis=1)
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            x = _unit_rows(
-                ids, np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            )
-            cell = (cb_c2[None, :] - 2.0 * (x @ cb_cmat.T)).argmin(axis=1)
-            res = x - cb_cmat[cell]
-            codes = np.empty((len(ids), m), dtype=np.int64)
-            for j in range(m):
-                sub = res[:, j * dsub : (j + 1) * dsub]
-                d2 = ((sub[:, None, :] - cb_books[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = d2.argmin(axis=1)
-            out_q, out_n, out_d = [], [], []
-            for p in range(len(p_qid)):
-                mask = cell == p_cell[p]
-                if not mask.any():
-                    continue
-                lut = p_luts[p]
-                sc = lut[np.arange(m)[:, None], codes[mask].T].sum(axis=0)
-                kk = min(n_candidates, len(sc))
-                top = np.argpartition(sc, kk - 1)[:kk]
-                out_q.append(np.full(kk, p_qid[p]))
-                out_n.append(ids[mask][top])
-                out_d.append(sc[top])
-            if not out_q:
-                continue
+            sims = x @ cunit.T
             yield pd.DataFrame(
                 {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "adc_d2": np.concatenate(out_d),
+                    "cell": cell.astype(np.int32),
+                    "_cs": _round_half_up(sims[np.arange(len(cell)), cell], 6),
                 }
             )
 
-    cand = corpus.select(id_col, vec_col).mapInPandas(
-        ivfadc_batches, schema="query_id long, neighbor_id long, adc_d2 double"
-    )
-    w_cand = W.partitionBy("query_id").orderBy(F.asc("adc_d2"), F.asc("neighbor_id"))
-    shortlist = (
-        cand.filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("_cr", F.row_number().over(w_cand))
-        .filter(F.col("_cr") <= n_candidates)
-        .select("query_id", "neighbor_id")
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("_qv")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("_cv")
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        shortlist.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn("cos_sim", fround(cosine(F.col("_qv"), F.col("_cv")), round_to))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return spread(df).mapInPandas(batches, schema="cell int, _cs double")
 
 
 def cluster_balance(
@@ -1118,22 +714,17 @@ def cluster_balance(
     n_cells: int = 16,
 ) -> DataFrame:
     """Topic-balance audit over an embedding corpus: seeded KMeans on the
-    unit sphere (the same coarse quantizer ann_ivf_topk indexes with),
-    then per-cluster size, corpus share, and mean cosine-to-centroid
-    (cluster tightness). This is the clustering step of cluster-balanced
-    curation (SemDeDup / DataComp-style): oversized loose clusters flag
-    redundant mass to downsample, tiny tight ones flag rare modes to
-    protect before any mixture decision.
+    unit sphere, then per-cluster size, corpus share, and mean
+    cosine-to-centroid (cluster tightness). This is the clustering step of
+    cluster-balanced curation (SemDeDup / DataComp-style): oversized loose
+    clusters flag redundant mass to downsample, tiny tight ones flag rare
+    modes to protect before any mixture decision.
 
     Shape at 100 TB: the fit is seeded Lloyd's on a bounded deterministic
-    sample (_fit_unit_kmeans — the same coarse quantizer ann_ivf_topk
-    indexes with, milliseconds on the driver); the ASSIGNMENT is one
-    Arrow mapInPandas pass — the n_cells x dim centroid matrix ships in
-    the closure, each batch does a single BLAS matmul, assigning by
-    Euclidean distance to the RAW centroid (argmin |c|^2 - 2 x.c for
-    unit x — not max-cosine, which would re-rank when centroid norms
-    differ; np.argmin's first-min rule gives a deterministic lowest-index
-    tiebreak), emitting only (cell, cos) per row. Zero shuffle on the
+    sample (_fit_unit_kmeans, milliseconds on the driver); the ASSIGNMENT
+    is one Arrow mapInPandas pass (_assign_cells) — the n_cells x dim
+    centroid matrix ships in the closure, each batch does a single BLAS
+    matmul and emits only (cell, cos) per row. Zero shuffle on the
     corpus, then an n_cells-group aggregate that partial-combines to
     nothing. Rows-only (no KMeans in the oracle); determinism (fixed
     seed) and share/tightness invariants are asserted in
@@ -1142,14 +733,10 @@ def cluster_balance(
     from boxoffice_spark.functions.numeric import davg
 
     cmat = _fit_unit_kmeans(corpus, id_col, vec_col, n_cells)
-    # the SAME assignment kernel ann_ivf_topk indexes with (one rule, two
-    # consumers); keep_cols empty — only (cell, cos) ships back over Arrow
     per_vec = _assign_cells(
         corpus.select(id_col, F.col(vec_col).cast("array<double>").alias("_v")),
         id_col,
-        "",
         cmat,
-        with_cos=True,
     )
     stats = per_vec.groupBy("cell").agg(
         F.count("*").alias("n_vectors"),
@@ -1268,9 +855,9 @@ def fit_pca_whitener(
     the corpus, deterministic under retries, TakeOrderedAndProject).
     Returns (mean, W, eigenvalues) where ``W = V / sqrt(λ + eps)`` maps a
     centered vector to the whitened space — the embedding preprocessing
-    step real ANN/dedup deployments run before product quantization or
-    cosine bucketing (whitening equalizes per-direction variance, which
-    is what makes PQ subspace codebooks and LSH hyperplanes behave).
+    step real ANN/dedup deployments run before clustering or cosine
+    bucketing (whitening equalizes per-direction variance, which is what
+    makes k-means cells and LSH hyperplanes behave).
 
     Deterministic given the corpus: no RNG anywhere (the sample is
     hash-ordered, eigh is deterministic for fixed input), eigenvector

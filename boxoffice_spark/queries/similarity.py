@@ -266,37 +266,6 @@ def v_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("v_ann_ivf_topk", oracle=None, bench=True, tags=("similarity", "ann", "ivf"))
-def v_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: KMeans coarse quantizer + probe-nearest-cells + exact
-    cosine rerank (operators/similarity.ann_ivf_topk) — the train-once
-    index complement to the LSH variant. The synthetic fixture embeddings
-    are near-random (weak cluster structure), so the probe fraction is set
-    high (8/16 cells); clustered real embeddings sustain recall at much
-    smaller fractions. Rows-only: approximate by construction; recall vs
-    v_cosine_topk asserted in tests/test_llm_ops.py."""
-    from boxoffice_spark.operators.similarity import ann_ivf_topk
-
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    return ann_ivf_topk(emb, queries, k=10, n_probe=8)
-
-
-@register("v_ann_pq_topk", oracle=None, bench=True, tags=("similarity", "ann", "pq"))
-def v_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN (operators/similarity.ann_pq_topk): per-
-    subspace codebooks -> 1-byte codes (32x index compression) -> ADC
-    lookup-table scan -> exact cosine rerank of the shortlist. The
-    memory-bound third leg of the ANN triad (LSH: no training; IVF:
-    scan-bound; PQ: RAM-bound index). Rows-only: approximate by
-    construction; recall vs v_cosine_topk asserted in tests/test_llm_ops."""
-    from boxoffice_spark.operators.similarity import ann_pq_topk
-
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    return ann_pq_topk(emb, queries, k=10)
-
-
 @register(
     "v_knn_label_consistency",
     oracle=f"""
@@ -336,18 +305,15 @@ def v_knn_label_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Physical shape: the probe matrix broadcasts, the corpus streams
     through one BLAS matmul pass (cosine_topk_arrow), and only
-    probes x k candidate rows reach the label joins. Scale contract,
-    ENFORCED (round 8): the probe panel is rate-sampled (vec_id % 10)
-    AND absolutely capped (vec_id < 200k -> at most 20k probes, a fixed
-    panel drawn from the earliest ids), because a purely rate-sampled
-    panel grows with the corpus and turns the probes x corpus matmul
-    quadratic — exactly what the sf1->sf10 decade probe measured
-    (alpha 2.18, 4.4 s -> 662 s) before the cap; with it the broadcast
-    is fixed-size and the same decade measures alpha 0.23
-    (662 s -> 2.9 s at sf10). The cap is non-binding at the
-    driver's verification scales (sf0.01/sf0.1 outputs unchanged);
-    corpora needing broader coverage feed label-consistency from the
-    ANN candidate tiers (v_ann_*) instead of the exact matmul."""
+    probes x k candidate rows reach the label joins. Scale contract: the
+    probe panel is rate-sampled (vec_id % 10) AND absolutely capped (vec_id
+    < 200k -> at most 20k probes, a fixed panel drawn from the earliest
+    ids), because a purely rate-sampled panel grows with the corpus and
+    turns the probes x corpus matmul quadratic — exactly what the sf1->sf10
+    decade probe measured (alpha 2.18, 4.4 s -> 662 s) before the cap; with
+    it the broadcast is fixed-size and the same decade measures alpha 0.23
+    (662 s -> 2.9 s at sf10). The cap is non-binding at the driver's
+    verification scales (sf0.01/sf0.1 outputs unchanged)."""
     emb = table(spark, sf_dir, "embeddings")
     probes = emb.filter((F.col("vec_id") % 10 == 0) & (F.col("vec_id") < 200_000))
     nn = cosine_topk_arrow(emb, probes, k=10)
@@ -516,77 +482,6 @@ def v_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mmr_rerank(emb, probes, n_candidates=30, k=10, lam=0.7)
 
 
-@register("v_ann_ivfpq_topk", oracle=None, bench=True, tags=("similarity", "ann", "ivf", "pq"))
-def v_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVFADC ANN (operators/similarity.ann_ivfpq_topk): coarse-quantizer
-    cells bound the scan, product-quantized RESIDUALS bound the memory —
-    the FAISS ``IVFx,PQy`` billion-scale layout, composing the IVF and PQ
-    tiers into the index shape a 100 TB embedding corpus actually ships
-    (cell-partitioned m-byte codes, ADC probe, exact rerank of the
-    shortlist only). Rows-only: approximate by construction; recall vs
-    v_cosine_topk asserted in tests/test_llm_ops.py and reported in
-    v_ann_recall_report."""
-    from boxoffice_spark.operators.similarity import ann_ivfpq_topk
-
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    return ann_ivfpq_topk(emb, queries, k=10, n_probe=8)
-
-
-@register("v_ann_recall_report", oracle=None, tags=("similarity", "ann", "datacard"))
-def v_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN QA scorecard: recall@10 of each approximate tier (LSH, IVF,
-    PQ, IVFADC)
-    against the exact cosine top-10 over the same probe set — the
-    dashboard row an ANN deployment watches when re-tuning
-    bucket/cell/codebook parameters, surfaced as a registered query so
-    every driver round records the measured recall, not just the pass
-    bit of the threshold tests. Every tier is seeded, so the report is
-    deterministic; rows-only (SQL cannot express the ANN tiers — the
-    exact side has its own oracle via v_cosine_topk). Cost: the probe set
-    is 5 queries; each tier's scan shape is audited in its own query."""
-    from boxoffice_spark.operators.similarity import (
-        ann_lsh_topk,
-        ann_pq_topk,
-        ann_ivf_topk,
-        ann_ivfpq_topk,
-    )
-
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    # checkpoint: the exact side is the full-corpus BLAS scan and feeds
-    # one hits-join per tier — without the cut it would re-run per tier
-    exact = (
-        cosine_topk_arrow(emb, queries, k=10)
-        .select(F.col("query_id").alias("_qid"), F.col("neighbor_id").alias("_truth"))
-        .localCheckpoint()
-    )
-    total = exact.count()
-    tiers = {
-        "lsh": ann_lsh_topk(emb, queries, k=10),
-        "ivf": ann_ivf_topk(emb, queries, k=10, n_probe=8),
-        "pq": ann_pq_topk(emb, queries, k=10),
-        "ivfpq": ann_ivfpq_topk(emb, queries, k=10, n_probe=8),
-    }
-    report = None
-    for name, approx in tiers.items():
-        hits = (
-            approx.select("query_id", "neighbor_id")
-            .join(
-                exact,
-                (F.col("query_id") == F.col("_qid"))
-                & (F.col("neighbor_id") == F.col("_truth")),
-            )
-            .count()
-        )
-        row = spark.createDataFrame(
-            [(name, int(hits), int(total), round(hits / total, 6))],
-            "tier string, n_hits long, n_truth long, recall_at_10 double",
-        )
-        report = row if report is None else report.unionByName(row)
-    return report
-
-
 @register(
     "v_pca_whitening",
     oracle=None,
@@ -602,7 +497,7 @@ def v_pca_whitening(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the CORPUS-side post-whitening mean and variance computed
     distributedly with decimal sums — the audit that the whitener
     actually equalized the space it was fit for (variance ≈ 1 per kept
-    component). Whitening is what makes PQ subspace codebooks and LSH
+    component). Whitening is what makes k-means cells and LSH
     hyperplanes behave; this is the preprocessing step + its acceptance
     test in one frame.
 
@@ -787,17 +682,16 @@ def v_centroid_similarity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "quantization", "compression"),
 )
 def v_int8_quantization_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar int8 quantization error report — the storage decision
-    every embedding table faces before the ANN index is built (uint8
-    cells cut the table 4x vs float32; PQ goes further but this is the
-    reversible first step): per-dimension min/max ranges quantize each
-    value to a 0..255 code (floor, clipped — floor of identical doubles
-    is identical on both engines, no round() anywhere in the codec),
-    dequantize back, and report per-label MSE and worst-case absolute
-    error — the numbers that say whether recall will survive the 4x
-    (rule of thumb: max_abs_err under half the typical inter-vector
-    gap). Degenerate dims (hi == lo) pass through exactly. One explode
-    scan to (dim) ranges, a broadcast-joined codec projection, one
+    """Scalar int8 quantization error report — the storage decision every
+    embedding table faces before the ANN index is built (uint8 cells cut the
+    table 4x vs float32; this is the reversible first step): per-dimension
+    min/max ranges quantize each value to a 0..255 code (floor, clipped —
+    floor of identical doubles is identical on both engines, no round()
+    anywhere in the codec), dequantize back, and report per-label MSE and
+    worst-case absolute error — the numbers that say whether recall will
+    survive the 4x (rule of thumb: max_abs_err under half the typical
+    inter-vector gap). Degenerate dims (hi == lo) pass through exactly. One
+    explode scan to (dim) ranges, a broadcast-joined codec projection, one
     label-grain aggregate.
 
     Parity (rule 4 — DECIMAL(27,12)/(27,8) casts of double error terms
@@ -893,20 +787,18 @@ def v_int8_quantization_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "matryoshka", "truncation"),
 )
 def v_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka truncation recall: top-10 cosine retrieval with
-    embeddings truncated to their FIRST 32/16/8 dimensions, scored as
-    recall@10 against the full-64-dim truth — the evaluation that
-    decides whether prefix-truncated vectors (the MRL serving trick:
-    one stored embedding, many precision/cost points) can replace the
-    full vector for candidate generation. Complements
-    v_int8_quantization_report (which cuts precision per cell; this
-    cuts cells) and v_ann_recall_report (which fixes the vector and
-    approximates the SEARCH). Brute-force over a bounded 20-query audit
-    set x 4 dims (the v_cosine_topk truth-tier posture — production
-    scores recall on exactly this kind of bounded probe set, never the
-    full corpus); cosines rounded 6dp with neighbor-id tie-break,
-    per-query recalls are exact tenths decimal-summed, and the macro
-    average is a raw final quotient. Cell-exact.
+    """Matryoshka truncation recall: top-10 cosine retrieval with embeddings
+    truncated to their FIRST 32/16/8 dimensions, scored as recall@10 against
+    the full-64-dim truth — the evaluation that decides whether
+    prefix-truncated vectors (the MRL serving trick: one stored embedding,
+    many precision/cost points) can replace the full vector for candidate
+    generation. Complements v_int8_quantization_report (which cuts precision
+    per cell; this cuts cells). Brute-force over a bounded 20-query audit
+    set x 4 dims (the v_cosine_topk truth-tier posture — production scores
+    recall on exactly this kind of bounded probe set, never the full
+    corpus); cosines rounded 6dp with neighbor-id tie-break, per-query
+    recalls are exact tenths decimal-summed, and the macro average is a raw
+    final quotient. Cell-exact.
 
     Physical strategy: the prefix-cumsum Arrow kernel
     (operators/similarity.prefix_dim_topk_arrow) — one scan pass scoring

@@ -2422,8 +2422,7 @@ def t_curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "approx", "qa"),
 )
 def t_dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup-tier recall scorecard — the text-side twin of
-    v_ann_recall_report: precision/recall/F1 of each APPROXIMATE
+    """Dedup-tier recall scorecard: precision/recall/F1 of each APPROXIMATE
     near-dup tier against exact word-3-gram Jaccard ground truth, at three
     truth thresholds (τ=0.3, 0.5, 0.8). This is the number a deployment
     watches when re-tuning bands/hashes — e.g. 4 bands of 3 gives

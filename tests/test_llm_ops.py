@@ -10,8 +10,6 @@ from pyspark.sql import functions as F
 from boxoffice_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
 from boxoffice_spark.operators.similarity import (
     ZeroVectorError,
-    ann_ivf_topk,
-    ann_ivfpq_topk,
     ann_lsh_topk,
     cluster_balance,
     cosine_topk,
@@ -40,7 +38,7 @@ def test_minhash_recall_vs_exact(spark, sf_dir):
     assert len(missed) <= max(1, len(exact) // 10), f"LSH recall too low: missed {missed}"
 
 
-def test_ann_recall_vs_exact(spark, sf_dir):
+def test_ann_lsh_topk_recall_vs_exact(spark, sf_dir):
     """LSH ANN top-10 must recover most of the exact cosine top-10."""
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
@@ -91,101 +89,6 @@ def test_asset_features_deterministic(spark, sf_dir):
     a = sorted(map(tuple, m_asset_features(spark, sf_dir).collect()))
     b = sorted(map(tuple, m_asset_features(spark, sf_dir).collect()))
     assert a == b and len(a) > 0
-
-
-def test_ivf_recall_vs_exact(spark, sf_dir):
-    """IVF ANN top-10 must recover most of the exact cosine top-10."""
-    from boxoffice_spark.operators.similarity import ann_ivf_topk
-
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    exact = cosine_topk(emb, queries, k=10).collect()
-    approx = ann_ivf_topk(emb, queries, k=10, n_probe=8).collect()
-    exact_sets, approx_sets = {}, {}
-    for r in exact:
-        exact_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
-    for r in approx:
-        approx_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
-    recalls = [
-        len(exact_sets[q] & approx_sets.get(q, set())) / len(exact_sets[q]) for q in exact_sets
-    ]
-    assert sum(recalls) / len(recalls) >= 0.6, f"mean IVF recall too low: {recalls}"
-
-
-def test_pq_recall_vs_exact_and_determinism(spark, sf_dir):
-    """PQ ANN top-10 must recover most of the exact cosine top-10 (the
-    shortlist rerank is exact, so every recovered neighbor also carries
-    the exact cos_sim), and the seeded codebook training must make the
-    whole operator run-to-run deterministic."""
-    from boxoffice_spark.operators.similarity import ann_pq_topk
-
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    exact = {(r.query_id, r.neighbor_id): r.cos_sim for r in cosine_topk(emb, queries, k=10).collect()}
-    approx = {(r.query_id, r.neighbor_id): r.cos_sim for r in ann_pq_topk(emb, queries, k=10).collect()}
-    qids = {q for q, _ in exact}
-    recalls = []
-    for q in qids:
-        e = {n for qq, n in exact if qq == q}
-        a = {n for qq, n in approx if qq == q}
-        recalls.append(len(e & a) / len(e))
-    assert sum(recalls) / len(recalls) >= 0.6, f"mean PQ recall too low: {recalls}"
-    for key in exact.keys() & approx.keys():
-        assert exact[key] == approx[key], f"rerank not exact at {key}"
-    again = {(r.query_id, r.neighbor_id): r.cos_sim for r in ann_pq_topk(emb, queries, k=10).collect()}
-    assert approx == again, "PQ run not deterministic"
-
-
-def test_ivfpq_recall_vs_exact_and_determinism(spark, sf_dir):
-    """IVFADC (coarse cells + residual PQ) top-10 must recover most of the
-    exact cosine top-10; its probed cells are bit-identical to the IVF
-    tier's (_probe_cells is shared), so its recall can only lose to IVF
-    through residual quantization on the shortlist cut — the fixture
-    keeps it above the same 0.6 floor. Seeded fits make it
-    run-to-run deterministic, and every recovered neighbor carries the
-    exact cos_sim (the rerank is exact)."""
-    from boxoffice_spark.operators.similarity import ann_ivfpq_topk
-
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    exact = {(r.query_id, r.neighbor_id): r.cos_sim for r in cosine_topk(emb, queries, k=10).collect()}
-    approx = {(r.query_id, r.neighbor_id): r.cos_sim for r in ann_ivfpq_topk(emb, queries, k=10, n_probe=8).collect()}
-    qids = {q for q, _ in exact}
-    recalls = []
-    for q in qids:
-        e = {n for qq, n in exact if qq == q}
-        a = {n for qq, n in approx if qq == q}
-        recalls.append(len(e & a) / len(e))
-    assert sum(recalls) / len(recalls) >= 0.6, f"mean IVFADC recall too low: {recalls}"
-    for key in exact.keys() & approx.keys():
-        assert exact[key] == approx[key], f"rerank not exact at {key}"
-    again = {(r.query_id, r.neighbor_id): r.cos_sim for r in ann_ivfpq_topk(emb, queries, k=10, n_probe=8).collect()}
-    assert approx == again, "IVFADC run not deterministic"
-
-
-def test_pq_small_corpus_clamps_ksub(spark, sf_dir):
-    """A corpus with fewer rows than ksub must still index (ksub clamps to
-    the corpus size instead of rng.choice(replace=False) raising); with the
-    shortlist covering the whole corpus the exact rerank makes the result
-    exact."""
-    from boxoffice_spark.operators.similarity import ann_pq_topk
-
-    emb = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 8)
-    queries = emb.filter(F.col("vec_id") < 2)
-    got = {
-        (r.query_id, r.neighbor_id): r.cos_sim
-        for r in ann_pq_topk(emb, queries, k=3, ksub=16).collect()
-    }
-    want = {
-        (r.query_id, r.neighbor_id): r.cos_sim
-        for r in cosine_topk(emb, queries, k=3).collect()
-    }
-    assert got == want and len(got) > 0
-
-    import pytest
-
-    with pytest.raises(ValueError, match="corpus is empty"):
-        ann_pq_topk(emb.filter(F.col("vec_id") < 0), queries, k=3)
 
 
 def test_bm25_repeated_query_term_not_double_counted(spark):
@@ -713,6 +616,20 @@ def test_cluster_balance_invariants_and_determinism(spark, sf_dir):
     assert [tuple(r) for r in out] == [tuple(r) for r in again]
 
 
+def test_cluster_balance_small_and_empty_corpus(spark, sf_dir):
+    """Fewer rows than cells still clusters (_lloyds clamps k to the
+    sample size, never a rng.choice(replace=False) error) and the shares
+    still sum to 1; an empty corpus fails loudly in the fit."""
+    emb = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 8)
+    out = cluster_balance(emb, n_cells=16).collect()
+    assert 0 < len(out) <= 8
+    assert sum(r["n_vectors"] for r in out) == 8
+    assert abs(sum(r["share"] for r in out) - 1.0) < 1e-6
+
+    with pytest.raises(ValueError, match="corpus is empty"):
+        cluster_balance(emb.filter(F.col("vec_id") < 0))
+
+
 def test_completeness_counters_all_null_day(spark):
     """A day whose value column is entirely NULL — the broken-upstream-
     batch case the monitor exists to flag — must report n_nonpos_value=0
@@ -1065,18 +982,17 @@ def test_cosine_topk_zero_vector_raises(spark):
         cosine_topk_arrow(df, zero_q, k=2)
 
 
-# Every Arrow similarity kernel with a registered caller, run on the
-# zero-vector corpus of the test above (labels added) with query 1.
+# Every similarity kernel with a registered caller that normalises its
+# vectors, run on the zero-vector corpus of the test above (labels added)
+# with query 1.
 _ZERO_VECTOR_RUNS = {
     # without the check: (1, 7, 0.0, 3), the zero vector as a negative
     "hard_negative_topk": lambda df, q: hard_negative_topk(df, q, k=3),
     "near_dup_pairs_arrow": lambda df, q: near_dup_pairs_arrow(
         df.withColumn("blk", F.lit(0)), "blk", vec_col="embedding"
     ),
-    "ann_ivf_topk": lambda df, q: ann_ivf_topk(df, q, k=3, n_cells=2, n_probe=2),
-    "ann_ivfpq_topk": lambda df, q: ann_ivfpq_topk(
-        df, q, k=3, n_cells=2, n_probe=2, m=2, ksub=2
-    ),
+    # without the check: vec 7 at rank 2 (l2_dist 1.0), ahead of vec 2
+    "ann_lsh_topk": lambda df, q: ann_lsh_topk(df, q, k=3),
     "cluster_balance": lambda df, q: cluster_balance(df, n_cells=2),
 }
 
@@ -1084,8 +1000,8 @@ _ZERO_VECTOR_RUNS = {
 @pytest.mark.parametrize("kernel", sorted(_ZERO_VECTOR_RUNS))
 def test_arrow_kernel_zero_vector_raises(spark, kernel):
     """A zero vector fails with a ZeroVectorError naming its id — raised on
-    a collected fit sample or query, or in the scan batch — instead of
-    being ranked as a neighbor at cosine 0.0."""
+    a collected fit sample or query, or in the scan — instead of being
+    ranked as a neighbor."""
     rows = [(1, [1.0, 0.0], 0), (2, [0.0, 1.0], 1), (3, [1.0, 1.0], 1), (7, [0.0, 0.0], 1)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label long")
     q = df.filter(F.col("vec_id") == 1)
@@ -1093,3 +1009,14 @@ def test_arrow_kernel_zero_vector_raises(spark, kernel):
         _ZERO_VECTOR_RUNS[kernel](df, q).collect()
     err = ei.value
     assert isinstance(err, ZeroVectorError) or "ZeroVectorError" in str(err)
+
+
+def test_ann_lsh_zero_query_raises(spark):
+    """A zero query vector has no neighbours: LSH fails it by name even
+    when the corpus holds no zero vector (without the check it returned
+    neighbour 1)."""
+    rows = [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0]), (7, [0.0, 0.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    corpus = df.filter(F.col("vec_id") != 7)
+    with pytest.raises(Exception, match="ZeroVectorError.*vec_id 7"):
+        ann_lsh_topk(corpus, df.filter(F.col("vec_id") == 7), k=3).collect()

@@ -71,7 +71,7 @@ VOWELS = "aeiou"
 STAMP = "_inflation.json"
 
 # the heavy tier; the oracle sweep runs for whichever of these carry an
-# oracle in the registry (the LSH/CDC pair generators and the ANN family
+# oracle in the registry (the LSH/CDC pair generators and the LSH ANN tier
 # are rows-only by construction)
 HEAVY = [
     "t_winnow_dup_pairs",
@@ -80,8 +80,6 @@ HEAVY = [
     "t_bm25_search",
     "t_curation_funnel",
     "v_ann_lsh_topk",
-    "v_ann_ivf_topk",
-    "v_ann_pq_topk",
     "v_embedding_near_dup_lsh",
     "flagship_daily_topk_delta",
     # token-heavy two-pass scoring and the cluster-then-choose
