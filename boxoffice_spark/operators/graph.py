@@ -14,15 +14,47 @@ bit per round.
 The one kernel is large-star/small-star edge contraction (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC'14): O(log^2 n)
 rounds whatever the component diameter, total work O(|E|) per round.
-`localCheckpoint` every round truncates the lineage so plan size stays
-O(1) per iteration instead of O(iterations).
+Every driver loop here and in queries/graph.py runs through
+:func:`iterate`, which checkpoints each round so plan size stays O(1) per
+iteration instead of O(iterations).
 """
 
 from __future__ import annotations
 
+import sys
+from typing import Callable
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 from boxoffice_spark.functions.numeric import ratio6w
+
+
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    rounds: int,
+    done: Callable[[DataFrame], bool] | None = None,
+) -> DataFrame:
+    """The driver of every iterative graph loop: ``state = step(state)`` up
+    to ``rounds`` times, each round's result localCheckpointed. Without
+    ``done`` the rounds are fixed and the last state is returned; with it,
+    the first state that passes ``done`` is returned, and a budget that
+    runs out raises a RuntimeError naming the caller and ``rounds``.
+
+    eager=False truncates the lineage but does not defer the work: under
+    AQE, building the checkpoint's RDD runs every shuffle stage of the
+    round, so the round executes here, at construction, and its last stage
+    runs, and keeps its rows, in the first job that reads them (the next
+    round, ``done`` or the caller's action). An eager checkpoint would run
+    that last stage as an extra job of its own every round.
+    """
+    for _ in range(rounds):
+        state = step(state).localCheckpoint(eager=False)
+        if done is not None and done(state):
+            return state
+    if done is None:
+        return state
+    raise RuntimeError(f"{sys._getframe(1).f_code.co_name} did not converge in {rounds} rounds")
 
 
 def connected_components(
@@ -54,34 +86,37 @@ def connected_components(
     # (all neighbours larger) or a leaf with one smaller neighbour, which
     # is exactly the star forest, so convergence is exact
     c = F.least("u", "v")
-    for _ in range(max_iters):
-        star = (
-            e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+
+    def star_round(s: DataFrame) -> DataFrame:
+        # the first round stars the base edges; every later round first
+        # contracts the previous round's star
+        if s is not e:
+            # large-star: hang every strictly larger neighbour v on m (v > u >= m)
+            large = s.filter(F.col("v") > F.col("u")).select(
+                F.col("v").alias("u"), F.col("m").alias("v")
+            )
+            # small-star (all v < u): hang u and its neighbours on the minimum
+            # neighbour, dropping the self-loop that hangs the minimum on itself
+            s = (
+                large.withColumn("m", F.min("v").over(by_u))
+                .select(F.explode(F.array("u", "v")).alias("u"), F.col("m").alias("v"))
+                .filter(F.col("u") != F.col("v"))
+            )
+        return (
+            s.union(s.select(F.col("v").alias("u"), F.col("u").alias("v")))
             .select("u", "v", F.min(c).over(by_u).alias("m"), F.max(c).over(by_u).alias("mx"))
             .distinct()  # the only dedup; shares the window's shuffle on u
-            .localCheckpoint(eager=False)
         )
-        if star.filter(F.col("m") != F.col("mx")).isEmpty():
-            # a self-loop node's own id loses to any star label (which is
-            # a component minimum) and labels it when it has no edge
-            return (
-                star.select(F.col("u").alias("node"), F.col("m").alias("cluster_id"))
-                .union(base.filter(F.col("u") == F.col("v")).select("u", "v"))
-                .groupBy("node")
-                .agg(F.min("cluster_id").alias("cluster_id"))
-            )
-        # large-star: hang every strictly larger neighbour v on m (v > u >= m)
-        large = star.filter(F.col("v") > F.col("u")).select(
-            F.col("v").alias("u"), F.col("m").alias("v")
-        )
-        # small-star (all v < u): hang u and its neighbours on the minimum
-        # neighbour, dropping the self-loop that hangs the minimum on itself
-        e = (
-            large.withColumn("m", F.min("v").over(by_u))
-            .select(F.explode(F.array("u", "v")).alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-        )
-    raise RuntimeError(f"connected_components did not converge in {max_iters} iterations")
+
+    star = iterate(e, star_round, max_iters, lambda s: s.filter(F.col("m") != F.col("mx")).isEmpty())
+    # a self-loop node's own id loses to any star label (which is a
+    # component minimum) and labels it when it has no edge
+    return (
+        star.select(F.col("u").alias("node"), F.col("m").alias("cluster_id"))
+        .union(base.filter(F.col("u") == F.col("v")).select("u", "v"))
+        .groupBy("node")
+        .agg(F.min("cluster_id").alias("cluster_id"))
+    )
 
 
 def pagerank(
@@ -96,11 +131,11 @@ def pagerank(
     authority; the harmonic-centrality idea behind Common Crawl's domain
     ranking, as a Spark loop).
 
-    A Python loop of DataFrames like connected_components. The distinct
-    edges are built once, each carrying its source's out-degree; per round,
-    contributions rank/out_degree flow along them (one join with the ranks)
-    and one aggregate per destination sums them, partial-agg friendly,
-    lineage truncated per round. FIXED iterations (no
+    Rounds run through :func:`iterate`, like connected_components. The
+    distinct edges are built once, each carrying its source's out-degree;
+    per round, contributions rank/out_degree flow along them (one join with
+    the ranks) and one aggregate per destination sums them, partial-agg
+    friendly. FIXED iterations (no
     convergence check) so the result is a deterministic function of the
     graph: each contribution is quantized to 1e-18 integer units
     (functions/numeric.funits) and the units are summed exactly as
@@ -132,11 +167,11 @@ def pagerank(
         # empty edge list → empty ranking (not ZeroDivisionError on 1/n)
         return nodes.select("node", F.lit(0.0).alias("rank"))
     base = (1.0 - damping) / n
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     # one zero row per node: a node with no in-edge sums to 0 and gets
     # base + d*0.0 == base, with no join back to the node list
     zeros = nodes.select("node", F.lit(0).cast("decimal(38,0)").alias("_cu"))
-    for _ in range(n_iters):
+
+    def pagerank_round(ranks: DataFrame) -> DataFrame:
         # each contribution quantizes to 1e-18 integer units via funits
         # (pinned floor-implemented rounding; a decimal(27,18) cast of the
         # rank/deg double would be build surface) and sums exactly in
@@ -149,25 +184,14 @@ def pagerank(
             F.col("_dst").alias("node"),
             funits(F.col("rank") / F.col("_deg"), 18).cast("decimal(38,0)").alias("_cu"),
         )
-        # eager=False truncates the lineage but does not defer the work:
-        # under AQE, building the checkpoint's RDD runs every shuffle stage
-        # of the round, so nearly all of PageRank executes here, at
-        # construction: each round adds 4 jobs to the build and none to the
-        # caller's collect, and g_pagerank_authority on the benchmark's
-        # seed-2 inputs runs 14 jobs in its build against 1 in the collect.
-        # The chain is sequential, so each round still materializes once.
-        ranks = (
-            contrib.union(zeros)
-            .groupBy("node")
-            .agg(
-                (
-                    F.lit(base)
-                    + F.lit(damping) * (F.sum("_cu").cast("double") / 1e18)
-                ).alias("rank")
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
+        rank = F.lit(base) + F.lit(damping) * (F.sum("_cu").cast("double") / 1e18)
+        return contrib.union(zeros).groupBy("node").agg(rank.alias("rank"))
+
+    # nearly all of PageRank executes inside iterate, at construction: each
+    # round adds 4 jobs to the build and none to the caller's collect, and
+    # g_pagerank_authority on the benchmark's seed-2 inputs runs 14 jobs in
+    # its build against 1 in the collect
+    return iterate(nodes.select("node", F.lit(1.0 / n).alias("rank")), pagerank_round, n_iters)
 
 
 def incremental_components(
@@ -270,36 +294,35 @@ def triangle_stats(
     id-ordered edge listing; orientation only changes where triangles
     are counted, never which triangles exist.
 
-    Orientation key (r11 optimization): the (degree, id) order is packed
-    into ONE BIGINT — ``least(d, 2^22) * 2^40 + id`` — instead of a
-    ``struct(d, id)``: a primitive long compare codegens to a single
-    instruction where the struct path goes through the interpreted
-    row-comparator. Correctness needs only a strict total order
-    consistent across both orientation uses — capping the degree
-    component at 2^22 keeps the pack inside 63 bits and only reorders
-    nodes ABOVE the cap among themselves (ties fall to id, still
-    injective), which changes where triangles are COUNTED, never which
-    triangles exist. Ids must fit 40 bits; that is asserted per node with
-    a loud ``raise_error`` (the a_cramers_v guard pattern) rather than
-    silently wrapping — on an id space past 2^40, widen the pack split or
-    revert to the struct key.
+    Orientation key: the (degree, id) order is packed into ONE BIGINT —
+    ``least(d, 2^22) * 2^40 + id`` — instead of a ``struct(d, id)``: a
+    primitive long compare codegens to a single instruction where the
+    struct path goes through the interpreted row-comparator. Correctness
+    needs only a strict total order consistent across both orientation
+    uses — capping the degree component at 2^22 keeps the pack inside 63
+    bits and only reorders nodes ABOVE the cap among themselves (ties fall
+    to id, still injective), which changes where triangles are COUNTED,
+    never which triangles exist. Ids must fit 40 bits; that is asserted
+    per node with a loud ``raise_error`` (the a_cramers_v guard pattern)
+    rather than silently wrapping — on an id space past 2^40, widen the
+    pack split or revert to the struct key.
 
-    Counting tail (r11 optimization): instead of MATERIALIZING every
-    wedge as a join row (o1 ⋈ o2 on the low end, ~sum C(outdeg,2) rows —
-    41 M at sf0.1 — then a semi-join against the closing edges), the
-    out-adjacency is grouped into one array per node and each oriented
-    edge (s, t) counts ``size(array_intersect(N+(s), N+(t)))`` — the
-    classic edge-iterator formulation. Equivalent: in the orientation
-    DAG every triangle has a unique source x and sink z (x->y, x->z,
-    y->z), and w ∈ N+(s) ∩ N+(t) iff (s, t, w) is exactly that triangle
-    listed at its source edge (s=x, t=y, w=z) — counted once, nowhere
-    else. Volume drops from O(sum outdeg²) JOIN ROWS to O(|E|) rows
+    Counting tail: instead of MATERIALIZING every wedge as a join row
+    (o1 ⋈ o2 on the low end, ~sum C(outdeg,2) rows — 41 M at sf0.1 — then
+    a semi-join against the closing edges), the out-adjacency is grouped
+    into one array per node and each oriented edge (s, t) counts
+    ``size(array_intersect(N+(s), N+(t)))`` — the classic edge-iterator
+    formulation. Equivalent: in the orientation DAG every triangle has a
+    unique source x and sink z (x->y, x->z, y->z), and w ∈ N+(s) ∩ N+(t)
+    iff (s, t, w) is exactly that triangle listed at its source edge
+    (s=x, t=y, w=z) — counted once, nowhere else. Volume drops from
+    O(sum outdeg²) JOIN ROWS to O(|E|) rows
     carrying O(outdeg)-sized arrays (the intersect itself still touches
     sum outdeg² elements, but as tight per-row set probes, not join
     machinery — interleaved A/B at sf0.1, same session, identical
     1,884,488 triangles: wedge-join 3.65 s vs intersect 1.83 s min; the
-    struct-keyed r10 form read 4.34 s). At 100 TB the same shift is what
-    keeps the census alive: a hub's C(outdeg,2) wedge rows become one
+    struct-keyed orientation read 4.34 s). At 100 TB the same shift is
+    what keeps the census alive: a hub's C(outdeg,2) wedge rows become one
     outdeg-long array row, and the two adjacency joins stay equi-joins
     on node ids (AQE-splittable).
     """
@@ -307,9 +330,9 @@ def triangle_stats(
 
     # ``e`` feeds deg and the orientation join; without the persist
     # the caller's edge-builder (join + distinct at g_triangle_census) is
-    # re-evaluated once per consumer (the round-3 self-join lesson: exchange
-    # reuse needs byte-identical canonical subplans and AQE routinely breaks
-    # it). Bounded: one live handle per scope (scoped_persist).
+    # re-evaluated once per consumer (exchange reuse needs byte-identical
+    # canonical subplans, and AQE routinely breaks it). Bounded: one live
+    # handle per scope (scoped_persist).
     e = scoped_persist(
         edges.select(F.col(src).alias("_u"), F.col(dst).alias("_v")),
         f"{_scope}.e",
@@ -350,8 +373,8 @@ def triangle_stats(
     dv = deg.select(F.col("_n").alias("_v"), _key.alias("_kv"))
     # ``oriented`` feeds TWO consumers (the adjacency-array build and the
     # per-edge intersect probe); persisting it cuts the census to one
-    # evaluation of the degree joins (the round-4 lesson: exchange reuse
-    # needs byte-identical canonical subplans and AQE routinely breaks it).
+    # evaluation of the degree joins (exchange reuse needs byte-identical
+    # canonical subplans, and AQE routinely breaks it).
     oriented = scoped_persist(
         e.join(du, "_u")
         .join(dv, "_v")
@@ -385,9 +408,9 @@ def triangle_stats(
             "n_edges",
             "n_wedges",
             "n_triangles",
-            # r10 legacy conversion: exact integer ratio via ratio6w's
-            # 128-bit HALF_UP (3*triangles can exceed ratio6's BIGINT
-            # headroom at corpus scale; round(double, 6) is build surface).
+            # exact integer ratio via ratio6w's 128-bit HALF_UP
+            # (3*triangles can exceed ratio6's BIGINT headroom at corpus
+            # scale; round(double, 6) is build surface).
             ratio6w("3 * n_triangles", "n_wedges").alias(
                 "global_clustering"
             ),
@@ -481,11 +504,11 @@ def link_prediction_scores(
     heaps, no global sort; the (cn, ra, u, v) sort key is a total order,
     so the k-set is deterministic.
 
-    Wedge generation (r11 optimization): the capped centers' adjacency
-    rows are grouped into one SORTED ARRAY per center (bounded by
-    ``max_center_degree``, so collect_list is safe at any corpus scale)
-    and the ordered pairs are exploded map-side from the array, instead
-    of the former a1-join-a2 self-join on the center key. Same pair set
+    Wedge generation: the capped centers' adjacency rows are grouped
+    into one SORTED ARRAY per center (bounded by ``max_center_degree``,
+    so collect_list is safe at any corpus scale) and the ordered pairs
+    are exploded map-side from the array, instead of the former
+    a1-join-a2 self-join on the center key. Same pair set
     (sorted distinct neighbors, _pa < _pb by construction), one exchange
     of the capped adjacency instead of a two-sided self-join shuffle +
     broadcast — measured at sf0.1 the post-edge-build path dropped
@@ -503,14 +526,14 @@ def link_prediction_scores(
     )
     deg = adj.groupBy("_c").agg(F.count("*").alias("_d"))
     centers = deg.filter(F.col("_d") <= max_center_degree)
-    # r10 legacy conversion: 1/d quantizes to EXACT 1e-15 integer units
-    # (units_div's BIGINT HALF_UP) so the RA sum is an exact integer —
-    # no decimal cast of an off-grid double anywhere; the display cell
-    # pins its 12dp grid via fround. The per-pair term COUNT is the
-    # number of shared sub-cap centers (max_center_degree does NOT bound
-    # it), so the sum runs through DECIMAL(38,0) — exact far past the
+    # 1/d quantizes to EXACT 1e-15 integer units (units_div's BIGINT
+    # HALF_UP) so the RA sum is an exact integer — no decimal cast of an
+    # off-grid double anywhere; the display cell pins its 12dp grid via
+    # fround. The per-pair term COUNT is the number of shared sub-cap
+    # centers (max_center_degree does NOT bound it), so the sum runs
+    # through DECIMAL(38,0) — exact far past the
     # ~9.2e3-term BIGINT wrap point of 1e15-unit terms, mirroring the
-    # oracle's HUGEINT accumulation (ADVICE r10 fix).
+    # oracle's HUGEINT accumulation.
     arr = (
         adj.join(centers, "_c")
         .groupBy("_c")

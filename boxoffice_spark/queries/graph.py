@@ -17,6 +17,7 @@ from boxoffice_spark.functions.numeric import (
     ratio6w_sql,
     units_div_sql,
 )
+from boxoffice_spark.operators.graph import iterate
 from boxoffice_spark.registry import register
 from boxoffice_spark.tables import table
 
@@ -173,18 +174,18 @@ def _symmetrized(e: DataFrame) -> DataFrame:
 def _multi_source_bfs(sym: DataFrame, n_seeds: int, rounds: int) -> DataFrame:
     """Hop distances ``(node, src, dist)`` from each of the ``n_seeds``
     smallest node ids to every node within ``rounds`` hops of it over the
-    symmetrized edge list ``sym``. Per round: one frontier-edge join plus
-    one (node, source) min-aggregate, localCheckpointed to truncate
-    lineage; state is bounded by |seeds| x |reached nodes|."""
+    symmetrized edge list ``sym``. Per round (operators/graph.iterate):
+    one frontier-edge join plus one (node, source) min-aggregate; state is
+    bounded by |seeds| x |reached nodes|."""
     srcs = (
         sym.select(F.col("src").alias("node"))
         .distinct()
         .orderBy("node")
         .limit(n_seeds)
     )
-    dist = srcs.select("node", F.col("node").alias("src"), F.lit(0).alias("dist"))
-    for _ in range(rounds):
-        relaxed = (
+
+    def relax(dist: DataFrame) -> DataFrame:
+        return (
             sym.join(dist, sym.src == dist.node)
             .select(
                 F.col("dst").alias("node"),
@@ -192,13 +193,12 @@ def _multi_source_bfs(sym: DataFrame, n_seeds: int, rounds: int) -> DataFrame:
                 (F.col("dist") + 1).alias("dist"),
             )
             .unionByName(dist.select("node", "src", "dist"))
-        )
-        dist = (
-            relaxed.groupBy("node", "src")
+            .groupBy("node", "src")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
         )
-    return dist
+
+    dist = srcs.select("node", F.col("node").alias("src"), F.lit(0).alias("dist"))
+    return iterate(dist, relax, rounds)
 
 
 _TRIANGLE_ORACLE = f"""
@@ -431,31 +431,27 @@ def g_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each round is one edge join + one (node, label) partial-agg
     shuffle + a per-node window over the node's distinct neighbor labels
-    (bounded by degree, never global); per-round persist truncates
-    lineage exactly like operators/graph.pagerank. Fixed round count —
-    synchronized halting, no convergence check to race."""
+    (bounded by degree, never global). operators/graph.iterate
+    checkpoints each round, so the sizes self-join below and the next
+    round both read the round's result once instead of re-deriving the
+    whole chain. Fixed round count — synchronized halting, no convergence
+    check to race."""
     e = _copurchase_edges(spark, sf_dir)
     sym = _symmetrized(e)
-    labels = sym.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    )
     w = W.partitionBy("node").orderBy(F.desc("c"), "label")
-    for _ in range(3):
-        counts = (
+
+    def adopt(labels: DataFrame) -> DataFrame:
+        return (
             sym.join(labels, sym.src == labels.node)
             .groupBy(F.col("dst").alias("node"), "label")
             .agg(F.count("*").alias("c"))
-        )
-        # localCheckpoint per round (the pagerank pattern): truncates
-        # lineage AND materializes, so the sizes self-join below and the
-        # next round both read the round's result once instead of
-        # re-deriving the whole chain
-        labels = (
-            counts.withColumn("rn", F.row_number().over(w))
+            .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("node", "label")
-            .localCheckpoint()
         )
+
+    nodes = sym.select(F.col("src").alias("node")).distinct()
+    labels = iterate(nodes.select("node", F.col("node").alias("label")), adopt, 3)
     sizes = labels.groupBy("label").agg(F.count("*").alias("community_size"))
     return (
         labels.join(sizes, "label")
@@ -510,11 +506,11 @@ def g_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     complement to the census (counts), LPA (membership), and PageRank
     (importance).
 
-    Same driver-loop shape as label propagation
-    (:func:`_multi_source_bfs`): the frontier table is bounded by
-    |sources| x |reached nodes|. The unrolled chained-CTE oracle checks
-    every (source, node, dist) cell — min-relaxation is order-independent, so no decimal
-    machinery is needed. At 100 TB: per-round cost is one shuffle of
+    :func:`_multi_source_bfs` relaxes one hop per operators/graph.iterate
+    round; the frontier table is bounded by |sources| x |reached nodes|.
+    The unrolled chained-CTE oracle checks every (source, node, dist)
+    cell — min-relaxation is order-independent, so no decimal machinery
+    is needed. At 100 TB: per-round cost is one shuffle of
     the frontier joined against the edge list; cap sources and rounds
     (both are query parameters) to bound state."""
     e = _copurchase_edges(spark, sf_dir)
@@ -578,9 +574,9 @@ def g_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     either way). Per round: one semi-join of the edge list against the
     surviving set on EACH endpoint + one degree aggregate —
     edge-linear, the same shuffle budget as one LPA round;
-    localCheckpoint truncates lineage per round (the pagerank pattern).
-    At 100 TB the alive set only shrinks, so round cost is
-    monotonically decreasing; k and the round budget are the knobs."""
+    operators/graph.iterate checkpoints each round. The final readout is
+    the same degree aggregate over the surviving set. At 100 TB the alive
+    set only shrinks, so round cost is monotonically decreasing; k and the round budget are the knobs."""
     e = (
         _copurchase_pairs(spark, sf_dir)
         .groupBy("u", "v")
@@ -589,27 +585,22 @@ def g_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("u", "v")
     )
     sym = _symmetrized(e)
-    alive = sym.select(F.col("src").alias("node")).distinct()
-    for _ in range(_KCORE_ROUNDS):
-        deg = (
+
+    def core_deg(alive: DataFrame) -> DataFrame:
+        # (node, core_deg): each surviving node's surviving neighbours
+        return (
             sym.join(alive.withColumnRenamed("node", "src"), "src", "semi")
             .join(alive.withColumnRenamed("node", "dst"), "dst", "semi")
-            .groupBy("src")
-            .agg(F.count("*").alias("c"))
+            .groupBy(F.col("src").alias("node"))
+            .agg(F.count("*").alias("core_deg"))
         )
-        alive = (
-            deg.filter(F.col("c") >= _KCORE_K)
-            .select(F.col("src").alias("node"))
-            .localCheckpoint()
-        )
-    return (
-        sym.join(alive.withColumnRenamed("node", "src"), "src", "semi")
-        .join(alive.withColumnRenamed("node", "dst"), "dst", "semi")
-        .groupBy("src")
-        .agg(F.count("*").alias("core_deg"))
-        .select(F.col("src").alias("node"), "core_deg")
-        .orderBy("node")
+
+    alive = iterate(
+        sym.select(F.col("src").alias("node")).distinct(),
+        lambda a: core_deg(a).filter(F.col("core_deg") >= _KCORE_K).select("node"),
+        _KCORE_ROUNDS,
     )
+    return core_deg(alive).orderBy("node")
 
 
 @register(

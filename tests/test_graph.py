@@ -57,8 +57,9 @@ def test_self_loop_is_singleton(spark):
 
 
 def test_max_iters_guard_raises(spark):
-    # a path of 200 nodes needs more than two star rounds
-    with pytest.raises(RuntimeError, match="did not converge"):
+    # a path of 200 nodes needs more than two star rounds; the error names
+    # the caller and its budget
+    with pytest.raises(RuntimeError, match="^connected_components did not converge in 2 rounds$"):
         _cc(spark, _CHAIN_200, max_iters=2)
 
 
@@ -128,6 +129,48 @@ def test_pagerank_empty_edges(spark):
 
     empty = spark.createDataFrame([], "src long, dst long")
     assert pagerank(empty).collect() == []
+
+
+def _bfs_reference(edges, n_seeds, rounds):
+    """{(node, seed): hops} by a Python BFS from each of the ``n_seeds``
+    smallest node ids, at most ``rounds`` hops deep."""
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out = {}
+    for seed in sorted(adj)[:n_seeds]:
+        dist, frontier = {seed: 0}, [seed]
+        for hop in range(1, rounds + 1):
+            reached = []
+            for u in frontier:
+                for v in adj[u]:
+                    if v not in dist:
+                        dist[v] = hop
+                        reached.append(v)
+            frontier = reached
+        out.update({(node, seed): d for node, d in dist.items()})
+    return out
+
+
+@pytest.mark.parametrize(
+    "edges, n_seeds, rounds",
+    [
+        ([(i, i + 1) for i in range(5)], 2, 10),  # a path, every hop reached
+        ([(1, 2), (2, 3), (10, 11), (11, 12)], 4, 5),  # two components
+        ([(i, i + 1) for i in range(6)], 1, 2),  # the round cap cuts the path short
+        ([(1, 2), (2, 3), (1, 3)], 10, 3),  # more seeds than nodes
+        ([], 3, 3),  # no edges
+    ],
+    ids=["path", "two_components", "round_cap", "seeds_past_nodes", "empty"],
+)
+def test_multi_source_bfs_matches_python_bfs(spark, edges, n_seeds, rounds):
+    from boxoffice_spark.queries.graph import _multi_source_bfs, _symmetrized
+
+    sym = _symmetrized(spark.createDataFrame(edges, "u long, v long"))
+    got = [(r.node, r.src, r.dist) for r in _multi_source_bfs(sym, n_seeds, rounds).collect()]
+    assert len(got) == len({(n, s) for n, s, _ in got})  # one row per (node, seed)
+    assert {(n, s): d for n, s, d in got} == _bfs_reference(edges, n_seeds, rounds)
 
 
 class TestIncrementalComponents:

@@ -190,6 +190,15 @@ def test_inflater_regenerates_when_copies_change(sf_dir, tmp_path):
     assert stamp["copies"] == 3
 
 
+def test_inflater_refuses_more_copies_than_vector_dimensions(sf_dir, tmp_path):
+    # the fixture's vectors have 64 dimensions: copy 64 would rotate each
+    # one back onto copy 0
+    dst = tmp_path / "x65"
+    with pytest.raises(sf1_probe.RotationAliasError, match="65 copies .* 64 dimensions"):
+        sf1_probe.generate(sf_dir, str(dst), 65)
+    assert not dst.exists()
+
+
 def test_harnesses_import_without_starting_spark():
     modules = ["bench"] + [f"tools.{p.stem}" for p in sorted((REPO / "tools").glob("*.py"))]
     code = (

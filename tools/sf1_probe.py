@@ -199,13 +199,27 @@ ORACLE_SKIP_AT_SF1 = {
 }
 
 
+class RotationAliasError(ValueError):
+    """More copies than the narrowest embedding has dimensions: copy i
+    rotates each vector by i places, so copy ``len(embedding)`` would
+    repeat copy 0 and add exact-duplicate vectors under new ids."""
+
+
 def generate(src: str, dst: str, copies: int, shift: int = 1, regen: bool = False) -> None:
     """Build the ``copies``-fold inflation of ``src`` in ``dst`` with DuckDB
     (single parquet file per table — both Spark and the DuckDB oracle read
     them unchanged). An existing inflation is reused only when its stamp
-    names the same source, copies and shift."""
+    names the same source, copies and shift. Raises RotationAliasError,
+    before anything is written, when ``copies`` exceeds the source's
+    smallest embedding width."""
     import duckdb
 
+    (width,) = duckdb.sql(f"SELECT min(len(embedding)) FROM read_parquet('{src}/embeddings.parquet')").fetchone()
+    if width is not None and copies > width:
+        raise RotationAliasError(
+            f"{copies} copies of {src}: its narrowest embedding has {width} dimensions, "
+            f"so rotations past {width - 1} would repeat earlier copies"
+        )
     stamp = {"source": os.path.abspath(src), "copies": copies, "shift": shift}
     stamp_path = os.path.join(dst, STAMP)
     if not regen and os.path.exists(stamp_path):
